@@ -5,9 +5,13 @@ The reference's ~400-line per-row Python regex pipeline
 (regex_analyzer.py:376-786) is re-expressed as a declarative column
 library: ``regexp_extract_all`` per pattern family, array combinators
 for set union / conflict resolution, ``when``-chains for the ordered
-decision trees. Everything stays JVM-side inside whole-stage codegen —
-the pandas-UDF fallback the survey anticipated (UD2) proved
-unnecessary.
+decision trees. This column form is the reference that the golden
+tests and the ud2 DuckDB oracle compare against. Production scoring
+runs the same pipeline through the row kernel in
+``functions/specs_arrow.py`` (the pandas-UDF path the survey
+anticipated for UD2): this form's expression tree is ~1M nodes after
+CollapseProject, and every plan that carries it pays that in Catalyst
+on the driver.
 
 Parity contract: black-box golden outputs of the reference module on a
 59-case corpus (tests/golden/reference_semantics.json), including its

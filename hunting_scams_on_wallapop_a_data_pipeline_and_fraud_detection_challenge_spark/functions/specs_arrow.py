@@ -1,31 +1,36 @@
-"""Arrow-batched scale path for the UD2 spec pipeline.
+"""UD2 spec extraction as one scalar Arrow UDF — the production path.
 
 ``functions/specs.py`` expresses the reference's ~400-line regex
-pipeline (regex_analyzer.py:376-786) as JVM column expressions — ~40
-sequential regex families per row inside whole-stage codegen. That form
-is the correctness oracle (DuckDB-replayable, golden-pinned); this
-module is its throughput twin for wide corpora: one ``mapInPandas``
-pass per batch running the SAME decision tree with module-level
-compiled ``re`` patterns — which is the reference's own engine, so
+pipeline (regex_analyzer.py:376-786) as JVM column expressions. That
+form is the reference (DuckDB-replayable, golden-pinned), but it is a
+~1M-node expression tree after CollapseProject, and every plan that
+carries it pays for it in Catalyst analysis and optimization on the
+driver. This module runs the SAME decision tree per row with
+module-level compiled ``re`` patterns — the reference's own engine, so
 Java-vs-sre quirk surface is zero by construction on the RE2-safe
-pattern set used here.
+pattern set used here — behind one ``pandas_udf`` over
+``(title, description)``: the plan carries a single ``ArrowEvalPython``
+node, and every other column stays in the JVM.
 
-Equivalence to the SQL form is pinned by
-``tests/test_scale_paths.py::test_ud2_arrow_path_matches_sql_path``
-(exact frame compare), the same gate pattern as the nn01/nn02 Arrow
-variants.
+``with_specs_arrow`` is the entry point the risk engine, the stats
+builder and ud2's ``impl="arrow"`` share. Equivalence to ``with_specs``
+is pinned by tests/test_domain_golden.py (golden, seeded fuzz, and
+score_listings through both forms, bit-exact) and
+tests/test_scale_paths.py (ud2, exact frame compare).
 
-Scale shape: a pure row-local projection — no shuffle, no state; the
-batch iterator streams, so memory is bounded by the Arrow batch size
-at any corpus scale.
+Scale shape: a pure row-local projection — no shuffle, no state; Arrow
+batches stream, so memory is bounded by the batch size at any corpus
+scale.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .specs import (
     RAM_LIMIT_DEFAULT,
@@ -256,19 +261,28 @@ def extract_specs_row(title: str | None, desc: str | None):
     return cpu, ram, gpu, category, _condition(ft)
 
 
-def specs_map_batches(title_col: str, desc_col: str, keep_cols: list[str]):
-    """``mapInPandas`` body: for each Arrow batch emit ``keep_cols`` plus
-    the five spec columns. Row-local, stateless, streaming."""
+#: The five spec columns, in the order ``with_specs`` appends them.
+_SPEC_COLUMNS = ("gpu", "category", "ram", "cpu", "condition_regex")
+_ROW_ORDER = ("cpu", "ram", "gpu", "category", "condition_regex")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            specs = [
-                extract_specs_row(t, d)
-                for t, d in zip(pdf[title_col], pdf[desc_col])
-            ]
-            out = pdf[keep_cols].copy()
-            for i, c in enumerate(("cpu", "ram", "gpu", "category", "condition_regex")):
-                out[c] = [s[i] for s in specs]
-            yield out
 
-    return run
+# pandas is imported at module level on purpose: with postponed
+# annotations the UDF's type hints are resolved from this module's
+# globals.
+@F.pandas_udf(T.StructType([T.StructField(c, T.StringType()) for c in _ROW_ORDER]))
+def _specs_udf(title: pd.Series, desc: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(
+        [extract_specs_row(t, d) for t, d in zip(title, desc)],
+        columns=list(_ROW_ORDER),
+    )
+
+
+def with_specs_arrow(
+    df: DataFrame, title_col: str = "title", desc_col: str = "description"
+) -> DataFrame:
+    """``with_specs`` through the row kernel: same five columns, same
+    names, types and order, one ``ArrowEvalPython`` in the plan. Only
+    the two text columns cross into Python."""
+    tmp = "__specs"
+    out = df.withColumn(tmp, _specs_udf(F.col(title_col), F.col(desc_col)))
+    return out.withColumns({c: F.col(f"{tmp}.{c}") for c in _SPEC_COLUMNS}).drop(tmp)

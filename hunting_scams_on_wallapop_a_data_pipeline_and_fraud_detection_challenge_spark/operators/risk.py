@@ -7,9 +7,12 @@ Spark shape: the reference's per-item dict lookups and gated HTTP
 fetches become broadcast joins against flat dim tables; the hand-coded
 enrichment gate (its manual semi-join pushdown) stays a gate COLUMN so
 the whole pipeline remains a single plan with no union barrier; every
-heuristic is a codegen'd when/otherwise column. Facts never shuffle —
-the only exchanges are the broadcasts of the (tiny) stats/user/review
-dims.
+scoring heuristic is a codegen'd when/otherwise column. UD2 spec
+extraction is the one step outside the JVM: a single scalar Arrow UDF
+over (title, description) (``functions/specs_arrow.py``), because its
+column form is a ~1M-node expression tree that dominates driver-side
+planning. Facts never shuffle — the only exchanges are the broadcasts
+of the (tiny) stats/user/review dims.
 
 Expected inputs (flat dim-table forms of the reference's JSON):
 
@@ -30,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.conditions import map_api_condition
 from ..functions.prices import clean_price, corrected_price
-from ..functions.specs import with_specs
+from ..functions.specs_arrow import with_specs_arrow
 from .skew import salted_join
 
 #: Composite-Z weights (poller.py:69-74; README.md:389-397).
@@ -74,9 +77,9 @@ def score_listings(
 
     ``specs_ready=True`` skips the UD2 extraction when the input
     already carries cpu/ram/gpu/category/condition_regex (e.g. shared
-    with a build_market_stats pass) — the extraction expression tree is
-    by far the largest part of the plan, so sharing it roughly halves
-    driver analysis time for composed pipelines.
+    with a build_market_stats pass, or produced by the column-form
+    reference ``with_specs``); otherwise the extraction runs through
+    the row kernel ``with_specs_arrow``, one ``ArrowEvalPython`` node.
 
     ``user_join`` picks the strategy for the user/review dim joins on
     user_id: ``"broadcast"`` (default — the dims are small relative to
@@ -101,7 +104,7 @@ def score_listings(
 
     # -- UD2 spec extraction + F6 condition precedence -----------------------
     if not specs_ready:
-        df = with_specs(df, title_col="title", desc_col="description")
+        df = with_specs_arrow(df, title_col="title", desc_col="description")
     # poller.py:626-638: refurbished FORCES LIKE_NEW over the API value;
     # API value beats the regex class; regex is the fallback.
     api_cond = map_api_condition(F.col("api_condition"))

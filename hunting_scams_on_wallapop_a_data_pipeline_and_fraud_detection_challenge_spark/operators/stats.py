@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.conditions import detect_condition
 from ..functions.prices import clean_price
-from ..functions.specs import with_specs
+from ..functions.specs_arrow import with_specs_arrow
 from .segment import market_segment
 
 
@@ -37,21 +37,12 @@ def build_market_stats(
       UNCERTAIN (JUNK rows are dropped entirely, regex_analyzer.py:936)
 
     ``specs_ready=True``: input already carries the with_specs columns
-    (shared extraction pass — see score_listings).
+    (shared extraction pass — see score_listings); otherwise the row
+    kernel ``with_specs_arrow`` extracts them.
     """
     df = listings.withColumn("price", clean_price(F.col("price")))
     if not specs_ready:
-        df = with_specs(df, title_col="title", desc_col="description")
-        # Cut the plan under the extraction: the with_specs tree is huge
-        # (~1M nodes after CollapseProject) and BOTH the segment logic
-        # below and each of the three aggregate consumers re-reference
-        # its outputs — without a materialization boundary every
-        # reference duplicates the tree and analysis OOMs an 8g driver.
-        # Lazy local checkpoint: computed once at the first action,
-        # downstream plans see a leaf scan. At cluster scale this is the
-        # natural place to materialize anyway — one extraction pass
-        # feeding every aggregate.
-        df = df.localCheckpoint(eager=False)
+        df = with_specs_arrow(df, title_col="title", desc_col="description")
     api = F.col("api_condition") if "api_condition" in listings.columns else F.lit(None).cast("string")
     refurb = (
         F.col("is_refurbished") if "is_refurbished" in listings.columns else F.lit(None).cast("boolean")
@@ -64,13 +55,9 @@ def build_market_stats(
     )
     # reference routing quirk (regex_analyzer.py:939-941): after the JUNK
     # drop, any item with NO cpu AND NO ram goes to the UNCERTAIN bucket —
-    # even if its segment was PRIME, BROKEN or ACCESSORY. Written with the
-    # minimum references to computed columns (segment ×2, cpu/ram ×1):
-    # every reference duplicates its producer expression when Catalyst
-    # collapses projections, and segment/cpu/ram sit on top of the huge
-    # with_specs extraction tree (an extra segment copy here OOM'd an 8g
-    # driver during analysis). A segment already UNCERTAIN falls through
-    # to otherwise(segment) unchanged, so the explicit test is redundant.
+    # even if its segment was PRIME, BROKEN or ACCESSORY. A segment already
+    # UNCERTAIN falls through to otherwise(segment) unchanged, so the
+    # explicit test is redundant.
     df = df.withColumn(
         "segment",
         F.when(
@@ -132,8 +119,9 @@ def market_stats_tree(
     """Assemble the reference's nested market_stats.json document
     (CATEGORY → CONDITION → {mean, median, stdev, count, components:
     {cpu, ram, gpu}}, plus flat {mean, count} secondary-segment nodes —
-    /root/reference/market_stats.json, built at
-    regex_analyzer.py:968-1016) from the flat dim tables.
+    the reference's market_stats.json, built at
+    regex_analyzer.py:968-1016; node shape pinned by
+    tests/golden/market_stats_shape.json) from the flat dim tables.
 
     Every condition node carries ALL THREE component-type keys (the
     reference initializes its specs dict eagerly), empty dicts where no

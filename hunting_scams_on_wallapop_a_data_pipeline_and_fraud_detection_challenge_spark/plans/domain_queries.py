@@ -24,6 +24,7 @@ from ..functions.conditions import detect_condition
 from ..functions.factors import normalize_risk_factors
 from ..functions.textprep import SPAM_INDICATORS, truncate_spam
 from ..functions.specs import with_specs
+from ..functions.specs_arrow import with_specs_arrow
 from .queries import _fan_scan, _r, _t, query
 
 # ---------------------------------------------------------------------------
@@ -1085,11 +1086,11 @@ def ud2_spec_extraction(
     _ud2_sql_ram_vals). Remaining Java-only quirks stay golden-tested in
     tests/test_domain_golden.py.
 
-    ``impl="arrow"`` switches the extraction stage to the Arrow-batched
-    scale path (``functions/specs_arrow.py``): one ``mapInPandas`` pass
-    with compiled ``re`` patterns instead of ~40 sequential JVM regex
-    projections. Equivalence to this SQL form is pinned in
-    tests/test_scale_paths.py; timings ride bench.py VARIANTS.
+    ``impl="arrow"`` switches the extraction stage to the row kernel the
+    risk engine runs (``functions/specs_arrow.with_specs_arrow``): one
+    scalar Arrow UDF with compiled ``re`` patterns instead of ~40
+    sequential JVM regex projections. Equivalence to this SQL form is
+    pinned in tests/test_scale_paths.py; timings ride bench.py VARIANTS.
 
     r13 note: a fanned-out scan (guide §2.5) was measured and REVERTED
     here — interleaved A/B at sf0.1 gave 3.54 s as-is vs 3.81 s fanned:
@@ -1112,15 +1113,8 @@ def ud2_spec_extraction(
         title.alias("title"),
         F.concat(snip, F.lit("\n"), spam, F.col("text")).alias("description"),
     )
-    if impl == "arrow":
-        from ..functions.specs_arrow import specs_map_batches
-
-        return listings.mapInPandas(
-            specs_map_batches("title", "description", ["doc_id"]),
-            "doc_id bigint, cpu string, ram string, gpu string, "
-            "category string, condition_regex string",
-        )
-    out = with_specs(listings, title_col="title", desc_col="description")
+    specs = with_specs_arrow if impl == "arrow" else with_specs
+    out = specs(listings, title_col="title", desc_col="description")
     return out.select("doc_id", "cpu", "ram", "gpu", "category", "condition_regex")
 
 

@@ -1,11 +1,13 @@
-"""End-to-end golden for the §3.2 stats pipeline against the reference's
-own shipped artifact: /root/reference/market_stats.json (built by
-regex_analyzer.py:849-1022).
+"""End-to-end golden for the §3.2 stats pipeline against the node shape
+of the reference's market_stats.json (built by
+regex_analyzer.py:849-1022), vendored as
+tests/golden/market_stats_shape.json.
 
-The artifact's VALUES come from the reference's private scraped corpus,
-so they are not reproducible; what IS replayable — and asserted here
-field-for-field — is the output CONTRACT and the cutoff/routing
-semantics on a hand-computable corpus:
+The reference artifact's VALUES come from its private scraped corpus,
+so they are not reproducible (the vendored file pins key sets and key
+order only; its numbers are this corpus's); what IS replayable — and asserted here field-for-field — is
+the output CONTRACT and the cutoff/routing semantics on a
+hand-computable corpus:
 
 - nested CATEGORY → CONDITION → {mean, median, stdev, count,
   components:{cpu, ram, gpu}} shape, all three component-type keys
@@ -20,6 +22,7 @@ semantics on a hand-computable corpus:
 from __future__ import annotations
 
 import json
+import os
 import statistics
 
 import pytest
@@ -29,7 +32,9 @@ from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spa
     market_stats_tree,
 )
 
-REFERENCE_ARTIFACT = "/root/reference/market_stats.json"
+SHAPE_ARTIFACT = os.path.join(
+    os.path.dirname(__file__), "golden", "market_stats_shape.json"
+)
 
 SPECCED_SCHEMA = (
     "id string, title string, description string, price double, "
@@ -78,7 +83,7 @@ def tree(spark):
 
 @pytest.fixture(scope="module")
 def reference():
-    with open(REFERENCE_ARTIFACT, encoding="utf-8") as f:
+    with open(SHAPE_ARTIFACT, encoding="utf-8") as f:
         return json.load(f)
 
 
@@ -92,8 +97,8 @@ def _stats(prices):
 
 
 def test_nested_shape_matches_reference_artifact(tree, reference):
-    """Field-for-field contract parity with the shipped artifact: same
-    node key sets AND key order at every level."""
+    """Field-for-field contract parity with the reference artifact's
+    node shape: same node key sets AND key order at every level."""
     ref_prime = reference["GAMING"]["USED"]
     ref_leaf = ref_prime["components"]["cpu"]["INTEL I7"]
     ref_secondary = reference["BROKEN"]

@@ -206,6 +206,56 @@ def test_rp01_joins_are_all_broadcast(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 5  # 3 fallback + comp + user dims
 
 
+#: Optimized-plan length bound for score_listings over empty dims: about
+#: 22k characters with the spec kernel, about 590k with the with_specs
+#: column tree inlined.
+SCORE_LISTINGS_PLAN_CHARS = 60_000
+
+
+def test_score_listings_runs_specs_as_one_arrow_udf(spark):
+    """The poll-batch scorer extracts UD2 specs through ONE scalar Arrow
+    UDF: exactly one ArrowEvalPython, none of the spec regex literals,
+    and a plan that stays small — so the with_specs column tree cannot
+    be re-inlined silently (its Catalyst cost dominates a poll cycle)."""
+    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.functions import (
+        specs,
+    )
+    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.operators.risk import (
+        score_listings,
+    )
+
+    def empty(schema):
+        return spark.createDataFrame([], schema)
+
+    scored = score_listings(
+        empty(
+            "id string, title string, description string, price double, "
+            "api_condition string, is_refurbished boolean, user_id long"
+        ),
+        empty("category string, condition string, mean double, stdev double"),
+        empty(
+            "category string, condition string, comp_type string, "
+            "comp_name string, mean double, stdev double"
+        ),
+        users=empty(
+            "user_id long, register_days int, badges array<string>, "
+            "user_type string, scam_reports int"
+        ),
+        reviews=empty("user_id long, scoring double"),
+    )
+    plan = scored._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    patterns = {
+        name: getattr(specs, name)
+        for name in dir(specs)
+        if name.startswith(("RE_CPU_", "RE_GPU_")) or name == "RE_RAM"
+    }
+    assert len(patterns) == 9
+    leaked = [name for name, pat in patterns.items() if pat in plan]
+    assert not leaked, leaked
+    assert len(plan) < SCORE_LISTINGS_PLAN_CHARS, len(plan)
+
+
 def test_ds01_sample_is_shuffle_free(spark, sf_dir):
     """Stratified sampling is a filter on the scan — zero exchanges."""
     plan = _plan(spark, sf_dir, "ds01_stratified_sample")

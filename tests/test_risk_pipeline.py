@@ -7,8 +7,8 @@ Expected values are hand-computed from the reference algorithm
 (poller/poller.py:333-495,644-705), NOT from running our code.
 
 All cases run through ONE score_listings plan (module-scope fixture):
-the with_specs expression tree is large, so per-test plans would spend
-minutes in analysis for zero extra coverage.
+per-test plans would pay plan building and job start-up per test for
+zero extra coverage.
 """
 
 from __future__ import annotations
