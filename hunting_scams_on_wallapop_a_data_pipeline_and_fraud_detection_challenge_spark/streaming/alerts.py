@@ -16,9 +16,14 @@ semantics (``elastalert/rules/high_risk.yaml:1-42``,
   the watermark + exactly-once checkpointing.
 - ST7: session continuation / autosave → checkpointLocation.
 
-Scale: the only state is the windowed count (bounded by the watermark)
-and the dedupe keys (ditto) — both partition by key/window, no global
-state, so the job scales linearly with executors at any input rate.
+Scale: the windowed count and the ``dedupe`` keys are bounded by the
+watermark and partition by key/window. The realert operator keeps ONE
+state row for the whole query: the ids that fired within realert +
+buffer (45 minutes) of the newest event, so at most the 5,000-listing
+poll cap per poll landing in that span. It runs one vectorized Python
+call per micro-batch on one task, with no timers, so a drain is one
+micro-batch; a load that outgrows one core there would shard the
+constant group key by an id hash.
 """
 
 from __future__ import annotations
@@ -101,21 +106,28 @@ def realert_suppressed(
     suppressed until ``realert`` time has passed, measured in event
     time; a later match re-fires and restarts the window.
 
-    Custom stateful operator via ``applyInPandasWithState``: state per
-    item id = last fired event-time; each micro-batch emits only rows
-    that clear the window and advances the state. State is partitioned
-    by key and restored from the checkpoint on restart — the
-    distributed twin of the reference's writeback index
-    (``elastalert/config.yaml:11``).
+    Custom stateful operator via ``applyInPandasWithState`` on a
+    constant key: each micro-batch is ONE call over all its rows, and
+    the state is ONE row ``(ids, last_us)`` — every id still able to
+    suppress, with its last fired event time — restored from the
+    checkpoint on restart, the twin of the reference's writeback index
+    (``elastalert/config.yaml:11``). The call sorts the batch by (id,
+    event time) with one ``lexsort`` and walks each id's run with
+    ``searchsorted``: O(fired) steps per id, no per-row Python loop.
 
-    State is BOUNDED: every update registers an event-time timeout at
-    ``last_fired + realert`` — once the watermark passes that point the
-    key can no longer suppress anything (any on-time event would clear
-    the window anyway), so the entry is dropped. This mirrors ElastAlert
-    aging entries out of its writeback index; without it the state store
-    grows monotonically with distinct item ids over the job's lifetime.
-    The per-group fire scan is a searchsorted walk over the sorted
-    timestamp array — O(fired) steps, no per-row Python loop.
+    No timers (``GroupStateTimeout.NoTimeout``): the operator runs no
+    timeout pass and Spark schedules no no-data batch when the
+    watermark moves, so an ``AvailableNow`` drain is one micro-batch.
+    Without an event-time timeout Spark does not drop late rows for
+    this operator, so the call drops rows at or behind the watermark
+    itself, the same rule as Spark's late-row filter.
+
+    State is BOUNDED: every data batch evicts the ids whose
+    ``last + realert`` is at or below the watermark. Such an id can no
+    longer suppress anything, since any on-time event clears its window
+    anyway; this mirrors ElastAlert aging entries out of its writeback
+    index. The state holds only the ids whose window is still open at
+    the batch's watermark, whatever the job's lifetime.
     """
     import numpy as np
     import pandas as pd
@@ -131,61 +143,65 @@ def realert_suppressed(
             T.StructField("crawl_timestamp", T.TimestampType()),
         ]
     )
-    state_schema = T.StructType([T.StructField("last_fired_us", T.LongType())])
+    state_schema = T.StructType(
+        [
+            T.StructField("ids", T.ArrayType(T.StringType())),
+            T.StructField("last_us", T.ArrayType(T.LongType())),
+        ]
+    )
+    out_cols = [f.name for f in out_schema.fields]
     realert_us = realert_minutes * 60 * 1_000_000
 
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {f.name: pd.Series(dtype="object") for f in out_schema.fields}
-        )
-
     def fire(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            # watermark passed last_fired + realert: the key can't
-            # suppress any on-time event anymore — age it out
+        # ev_us is TRUE epoch µs computed JVM-side (unix_micros):
+        # pandas int64 on a session-localized naive timestamp is
+        # shifted by the session timezone, which must never mix with
+        # getCurrentWatermarkMs()
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        last = dict(zip(*state.get)) if state.exists else {}
+        pdf = pd.concat(list(pdf_iter), ignore_index=True)
+        # late rows go; a null event time compares False and stays
+        pdf = pdf[~(pdf["ev_us"] <= wm_us)]
+        ts = pdf["ev_us"].to_numpy(dtype=np.int64)
+        codes, uniques = pd.factorize(pdf["id"], use_na_sentinel=False)
+        ids = np.asarray(uniques, dtype=object)
+        ids[pd.isna(ids)] = None  # a null id is its own key
+        order = np.lexsort((ts, codes))
+        ts, codes = ts[order], codes[order]
+        starts = np.flatnonzero(np.diff(codes, prepend=-1))
+        fired: list[int] = []
+        for s, e in zip(starts, [*starts[1:], len(codes)]):
+            run = ts[s:e]
+            iid = ids[codes[s]]
+            prev = last.get(iid)
+            i = 0 if prev is None else int(np.searchsorted(run, prev + realert_us))
+            while i < len(run):
+                fired.append(s + i)
+                prev = int(run[i])
+                i = int(np.searchsorted(run, prev + realert_us))
+            if prev is not None:
+                last[iid] = prev
+        last = {k: v for k, v in last.items() if v + realert_us > wm_us}
+        if last:
+            state.update((list(last), list(last.values())))
+        elif state.exists:
             state.remove()
-            yield _empty()
-            return
-        last = state.get[0] if state.exists else None
-        pdfs = [p for p in pdf_iter if len(p)]
-        fired = None
-        out_cols = [f.name for f in out_schema.fields]
-        if pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            # ev_us is TRUE epoch µs computed JVM-side (unix_micros):
-            # pandas int64 on a session-localized naive timestamp is
-            # shifted by the session timezone, which must never mix
-            # with getCurrentWatermarkMs() in the timeout clamp below
-            pdf = pdf.sort_values("ev_us", kind="stable").reset_index(drop=True)
-            ts = pdf["ev_us"].to_numpy(dtype=np.int64)
-            idx: list[int] = []
-            i = 0 if last is None else int(np.searchsorted(ts, last + realert_us))
-            while i < len(ts):
-                idx.append(i)
-                last = int(ts[i])
-                i = int(np.searchsorted(ts, last + realert_us))
-            if idx:
-                fired = pdf.iloc[idx][out_cols]
-        if last is not None:
-            state.update((int(last),))
-            # event-time timeouts must be re-registered per invocation
-            # and sit strictly above the current watermark
-            state.setTimeoutTimestamp(
-                max(last // 1000 + realert_minutes * 60 * 1000,
-                    state.getCurrentWatermarkMs() + 1)
-            )
-        yield fired if fired is not None else _empty()
+        yield pdf.iloc[order[fired]][out_cols]
 
     return (
         stream.withWatermark("crawl_timestamp", buffer)
-        .withColumn("ev_us", F.unix_micros(F.col("crawl_timestamp")))
-        .groupBy("id")
+        .select(
+            "*",
+            F.unix_micros(F.col("crawl_timestamp")).alias("ev_us"),
+            F.lit(0).alias("batch"),  # one group: the whole micro-batch
+        )
+        .groupBy("batch")
         .applyInPandasWithState(
             fire,
             outputStructType=out_schema,
             stateStructType=state_schema,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 

@@ -188,8 +188,7 @@ def neardup_curated_stream(
     State is BOUNDED exactly like the exact-dup stage: signatures older
     than the watermark are pruned on every visit, and each bucket
     registers an event-time timeout at its newest signature + horizon —
-    when the watermark passes that, the whole entry drops (the
-    realert_suppressed pattern). Semantics match
+    when the watermark passes that, the whole entry drops. Semantics match
     ``dropDuplicatesWithinWatermark``: dedupe against anything still in
     state, first arrival (event time, then doc_id) wins, and rows below
     the watermark are dropped in-operator — never emitted, never added
@@ -299,7 +298,6 @@ def neardup_curated_stream(
         # clamp above the watermark: applyInPandasWithState does NOT
         # auto-drop late rows, and a bare max(ts)+horizon below the
         # watermark is an IllegalArgumentException that kills the query
-        # (the alerts.py realert clamp, same reason)
         state.setTimeoutTimestamp(max(max(ts_ms) + horizon_ms, wm_ms + 1))
         out = rows[["doc_id", "lang", "source", "ingest_ts", "fp", "n_tok"]].copy()
         out["dup"] = dup

@@ -44,8 +44,9 @@ Scale note (100 TB/day ingest): state is ONE fixed-width row per key
 key population, not by history; the shuffle keys on user_id (the batch
 twin's single-shuffle contract). The per-batch work is a vectorized
 numpy change-point scan, never a per-row Python loop. A production
-deployment with an unbounded key universe adds an inactivity timeout
-(the ST6 realert aging pattern) to retire dormant keys.
+deployment with an unbounded key universe adds an event-time
+inactivity timeout to retire dormant keys (as the near-dup buckets in
+``corpus_ingest.neardup_curated_stream`` do).
 """
 
 from __future__ import annotations

@@ -117,7 +117,9 @@ def child(cores: int, n_runs: int) -> None:
         try:
             fn(spark, DATA).count()  # warmup: analysis + codegen + fits
         except Exception as e:  # noqa: BLE001
-            print(f"WARNING: warmup failed for {name}: {e!r}", file=sys.stderr)
+            print(f"WARNING: warmup failed for {name}, skipped: {e!r}",
+                  file=sys.stderr)
+            continue
         samples = []
         for _ in range(n_runs):
             t0 = time.perf_counter()
@@ -139,23 +141,28 @@ def main() -> None:
     rewrite_multigroup(k)
     results = {}
     for cores in (high, low):
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--child",
-             str(cores), str(n_runs)],
-            capture_output=True, text=True, check=True,
-        )
+        try:
+            proc = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--child",
+                 str(cores), str(n_runs)],
+                capture_output=True, text=True, check=True,
+            )
+        except subprocess.CalledProcessError as e:
+            print(e.stderr, file=sys.stderr)
+            raise
         line = [ln for ln in proc.stdout.splitlines()
                 if ln.startswith("CHILD_RESULT ")][-1]
         results[cores] = json.loads(line[len("CHILD_RESULT "):])["timings"]
     for name in ENTRIES:
         tl, th = results[low].get(name), results[high].get(name)
-        ratio = round(tl / th, 2) if tl and th else None
+        ratio = round(tl / th, 2) if tl is not None and th else None
         print(json.dumps({
             "entry": name, f"sec_c{low}": tl, f"sec_c{high}": th,
             "speedup": ratio,
         }))
     ratios = [results[low][n] / results[high][n]
-              for n in ENTRIES if results[low].get(n) and results[high].get(n)]
+              for n in ENTRIES
+              if results[low].get(n) is not None and results[high].get(n)]
     gm = round(
         float(pow(2.718281828, sum(__import__("math").log(r) for r in ratios)
                   / len(ratios))), 2) if ratios else None
