@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from ..functions.conditions import map_api_condition
 from ..functions.prices import clean_price, corrected_price
 from ..functions.specs_arrow import with_specs_arrow
-from .skew import salted_join
 
 #: Composite-Z weights (poller.py:69-74; README.md:389-397).
 WEIGHTS = {"cpu": 0.5, "gpu": 0.3, "ram": 0.1, "category": 0.1}
@@ -68,7 +67,6 @@ def score_listings(
     users: DataFrame | None = None,
     reviews: DataFrame | None = None,
     specs_ready: bool = False,
-    user_join: str = "broadcast",
 ) -> DataFrame:
     """Full §3.1 scoring pipeline. Returns the input plus:
     price (corrected), price_corrected, category, condition,
@@ -81,14 +79,10 @@ def score_listings(
     reference ``with_specs``); otherwise the extraction runs through
     the row kernel ``with_specs_arrow``, one ``ArrowEvalPython`` node.
 
-    ``user_join`` picks the strategy for the user/review dim joins on
-    user_id: ``"broadcast"`` (default — the dims are small relative to
-    the fact side) or ``"salted"`` for the 100 TB posture where the
-    user dim outgrows the broadcast threshold AND seller keys are
-    skewed (power sellers): the fact side is salted into 8 sub-keys and
-    the dim replicated per salt, so the hot seller's reducer work
-    spreads 8 ways (operators/skew.py; row-identical to the broadcast
-    path, pinned by tests/test_skew.py).
+    The user/review dims join on user_id as broadcasts: they are small
+    relative to the fact side. A dim that outgrows the broadcast
+    threshold on skewed seller keys is ``operators/skew.salted_join``'s
+    case.
     """
     # -- X1/X2/F4 price normalization + hidden-price correction --------------
     df = listings.withColumn("__pc", corrected_price(
@@ -249,19 +243,14 @@ def score_listings(
     adj = F.lit(0)
     scam = F.lit(False)
     if users is not None:
-
-        def dim_join(fact: DataFrame, dim: DataFrame) -> DataFrame:
-            if user_join == "salted":
-                return salted_join(fact, dim, "user_id", n_salts=8, how="left")
-            return fact.join(F.broadcast(dim), "user_id", "left")
-
         u = users.select(
             "user_id", "register_days", "badges", "user_type", "scam_reports"
         )
-        df = dim_join(df, u)
+        df = df.join(F.broadcast(u), "user_id", "left")
         rv = review_stats(reviews) if reviews is not None else None
         if rv is not None:
-            df = dim_join(df, rv.select("user_id", "sales", "avg_stars"))
+            rv = rv.select("user_id", "sales", "avg_stars")
+            df = df.join(F.broadcast(rv), "user_id", "left")
         else:
             df = df.withColumns({
                 "sales": F.lit(None).cast("long"),

@@ -546,18 +546,20 @@ def nn01_cosine_topk(
     over q_id partitions is bounded by |queries|·k rows after AQE).
     Double fold order is pinned so ranks match the oracle exactly.
 
-    ``impl="arrow"`` switches to the vectorized scale path: the same
-    scan-once/partial-top-k shape, but the per-pair math runs as one
-    numpy matmul per Arrow batch inside ``mapInPandas`` instead of
-    interpreted SQL ``aggregate()`` folds (higher-order functions are
-    CodegenFallback — each 384-dim dot is a per-element boxed loop).
-    Results are rank-identical with float64 cosines agreeing to ~1e-15
-    relative (pairwise vs sequential summation), so the exactness-
-    pinned SQL form stays the oracle subject and the Arrow form is
-    equivalence-gated in tests/test_scale_paths.py and timed in
-    bench.py — the 100 TB recommendation."""
+    ``impl="arrow"`` runs the same scan-once/partial-top-k shape on the
+    shared Arrow scaffold ``_arrow_partial_topk``: the per-pair math is
+    one numpy matmul per Arrow batch instead of interpreted SQL
+    ``aggregate()`` folds (higher-order functions are CodegenFallback —
+    each dot product is a per-element boxed loop). Results are
+    rank-identical with float64 cosines agreeing to ~1e-15 relative
+    (pairwise vs sequential summation), so the exactness-pinned SQL
+    form stays the oracle subject and the Arrow form is
+    equivalence-gated in tests/test_scale_paths.py — the 100 TB
+    recommendation."""
     if impl == "arrow":
-        return _nn01_arrow(spark, sf_dir)
+        emb = _t(spark, sf_dir, "embeddings")
+        _, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
+        return _arrow_cosine_topk(emb, Qn, q_ids, _KNN_K)
     # r13 (guide §2.5 + §6 pushdown): fanned corpus side, UNFANNED
     # query block — see _emb_base's docstring.
     base = _emb_base(spark, sf_dir)
@@ -575,121 +577,129 @@ def nn01_cosine_topk(
             (_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn"))).alias("cos"),
         )
     )
+    return _rank_by_cos(scored, _KNN_K)
+
+
+def _rank_by_cos(scored: DataFrame, k: int) -> DataFrame:
+    """Shared cosine ranking tail (nn01–nn03, SQL and Arrow forms):
+    per-query top-k by descending cosine, ties to the lower vec_id."""
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KNN_K)
-        .select("q_id", "vec_id", _r(F.col("cos"), 6).alias("cosine"), "rk")
-    )
-
-
-def _arrow_query_block(emb: DataFrame, n_queries: int):
-    """Collect the bounded query block (NULL/zero-norm rows dropped
-    exactly like the SQL paths' ``nrm > 0`` filter) → (Q, q_ids, Qn)."""
-    import numpy as np
-
-    qrows = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", "embedding")
-        .collect()  # bounded by n_queries — same contract as the IVF fit
-    )
-    # empty / wrong-dimension arrays would make np.asarray ragged and crash;
-    # drop them exactly like the corpus-side len == dim guard in
-    # _arrow_partial_topk (dim := the modal length of the query block)
-    lens = [len(r.embedding) for r in qrows]
-    if lens:
-        dim = max(set(lens), key=lens.count)
-        qrows = [r for r in qrows if len(r.embedding) == dim]
-    Q = np.asarray([r.embedding for r in qrows], dtype=np.float64)
-    q_ids = np.asarray([r.vec_id for r in qrows], dtype=np.int64)
-    qn = np.sqrt((Q * Q).sum(1))
-    keep = qn > 0
-    Q, q_ids, qn = Q[keep], q_ids[keep], qn[keep]
-    return Q, q_ids, Q / qn[:, None]
-
-
-def _arrow_partial_topk(emb: DataFrame, Qn, q_ids, k: int, mask_fn=None) -> DataFrame:
-    """Shared Arrow top-k scaffold for the vectorized ANN variants.
-
-    Each Arrow batch drops NULL/zero-norm rows, optionally restricts to
-    LSH candidates via ``mask_fn(V, ids) -> (n, q) bool`` BEFORE the
-    cosine matmul (rows colliding with no query never pay the per-pair
-    math — that is the point of the gate), computes the normalized
-    (n×q) cosine block as one float64 matmul, and emits a PARTIAL
-    top-k per query (≤ batches·queries·k rows ever shuffle); one tiny
-    window merges the partials."""
-    import numpy as np
-    import pandas as pd
-
-    dim = Qn.shape[1]
-
-    def part(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["embedding"].notna()]
-            if len(pdf):
-                # empty / wrong-dimension arrays would crash np.stack;
-                # the SQL twin drops empties via nrm > 0 and yields NULL
-                # cosines for dim mismatches — dropping both here is the
-                # defined behavior for malformed rows
-                pdf = pdf[pdf["embedding"].map(len) == dim]
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm = np.sqrt((V * V).sum(1))
-            ok = nrm > 0
-            V, ids, nrm = V[ok], ids[ok], nrm[ok]
-            if not len(V):
-                continue
-            overlap = None
-            if mask_fn is not None:
-                overlap = mask_fn(V, ids)  # (n, q)
-                cand = overlap.any(1)
-                V, ids, nrm, overlap = V[cand], ids[cand], nrm[cand], overlap[cand]
-                if not len(V):
-                    continue
-            C = (V / nrm[:, None]) @ Qn.T  # candidates×q cosine block
-            out = []
-            for qi in range(C.shape[1]):
-                mask = ids != q_ids[qi]
-                if overlap is not None:
-                    mask &= overlap[:, qi]
-                cm, im = C[:, qi][mask], ids[mask]
-                if not len(cm):
-                    continue
-                top = np.lexsort((im, -cm))[: min(k, len(cm))]
-                out.append(
-                    pd.DataFrame(
-                        {"q_id": q_ids[qi], "vec_id": im[top], "cos": cm[top]}
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    partial = emb.select("vec_id", "embedding").mapInPandas(
-        part, "q_id bigint, vec_id bigint, cos double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("q_id", "vec_id", _r(F.col("cos"), 6).alias("cosine"), "rk")
     )
 
 
-def _nn01_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _KNN_K,
-    n_queries: int = _KNN_QUERIES,
+def _arrow_query_block(emb: DataFrame, n_queries: int):
+    """Collect the bounded query block (``vec_id < n_queries``, the same
+    contract as the IVF fit) through the corpus-side guards of
+    ``_arrow_rows``, with dim := the modal length of the block →
+    (Q, q_ids, Qn)."""
+    import numpy as np
+
+    pdf = emb.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding")
+    pdf = pdf.toPandas()
+    lens = [len(e) for e in pdf["embedding"] if e is not None]
+    dim = max(set(lens), key=lens.count) if lens else 0
+    empty = (np.zeros(0, dtype=np.int64), np.zeros((0, dim)), np.zeros((0, dim)))
+    q_ids, Q, Qn = next(_arrow_rows([pdf], dim), empty)
+    return Q, q_ids, Qn
+
+
+def _arrow_rows(batches, dim: int):
+    """Batch guards shared by every Arrow embedding twin (nn01–nn07,
+    dd10/dd11): drop NULL, wrong-dimension (``len != dim``) and
+    zero-norm rows — the SQL forms drop empties via ``nrm > 0`` and
+    yield NULL scores for dim mismatches, so dropping both is the
+    defined behavior for malformed rows, never an ``np.stack`` crash.
+    Yields ``(ids, V, Vn)`` per non-empty batch: int64 ids, the raw
+    float64 vectors and their L2-normalized form."""
+    import numpy as np
+
+    for pdf in batches:
+        ok = pdf["embedding"].map(lambda e: e is not None and len(e) == dim)
+        ok = ok.to_numpy(dtype=bool)
+        if not ok.any():
+            continue
+        V = np.stack(pdf["embedding"].to_numpy()[ok]).astype(np.float64)
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)[ok]
+        nrm = np.sqrt((V * V).sum(1))
+        nz = nrm > 0
+        if nz.any():
+            V = V[nz]
+            yield ids[nz], V, V / nrm[nz][:, None]
+
+
+def _arrow_partial_topk(
+    emb: DataFrame,
+    q_ids,
+    k: int,
+    score,
+    *,
+    dim: int,
+    gate=None,
+    ascending: bool = False,
 ) -> DataFrame:
-    """Vectorized brute-force cosine top-k (see nn01 docstring): the
-    shared Arrow scaffold with no candidate gate — every corpus row
-    scores against every query, one (n×d)@(d×q) matmul per batch."""
-    emb = _t(spark, sf_dir, "embeddings")
-    _, q_ids, Qn = _arrow_query_block(emb, n_queries)
-    return _arrow_partial_topk(emb, Qn, q_ids, k)
+    """Shared Arrow top-k scaffold for the vectorized ANN twins
+    (nn01–nn07). Per Arrow batch:
+
+    - ``_arrow_rows`` drops NULL, wrong-dimension and zero-norm rows;
+    - ``gate(V, Vn) -> (mask, aux)``, when given, returns an (n, q)
+      candidate mask plus an optional per-row array for ``score``;
+      rows matching NO query are dropped BEFORE any scoring (that is
+      the point of the gate);
+    - ``score(Vn, aux) -> (n, q)`` scores the surviving rows against
+      every query in one block;
+    - self-pairs are excluded and each query keeps a PARTIAL top-k
+      (a lexsort on score, then vec_id), so at most
+      batches·queries·k rows ever shuffle.
+
+    One tiny window merges the partials: ``_rank_by_cos`` (descending
+    cosine, nn01–nn03) or, for ``ascending=True``, ``_rank_by_adc``
+    (ascending distance, the PQ paths)."""
+    import numpy as np
+    import pandas as pd
+
+    col = "adc" if ascending else "cos"
+
+    def part(batches):
+        for ids, V, Vn in _arrow_rows(batches, dim):
+            aux = None
+            mask = ids[:, None] != q_ids[None, :]  # (n, q) self-exclusion
+            if gate is not None:
+                overlap, aux = gate(V, Vn)
+                cand = overlap.any(1)
+                if not cand.any():
+                    continue
+                ids, Vn, mask = ids[cand], Vn[cand], mask[cand] & overlap[cand]
+                aux = None if aux is None else aux[cand]
+            S = score(Vn, aux)  # (n, q)
+            out = []
+            for qi in range(len(q_ids)):
+                m = mask[:, qi]
+                sm, im = S[m, qi], ids[m]
+                if not len(sm):
+                    continue
+                top = np.lexsort((im, sm if ascending else -sm))[:k]
+                out.append(
+                    pd.DataFrame({"q_id": q_ids[qi], "vec_id": im[top], col: sm[top]})
+                )
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    partial = emb.select("vec_id", "embedding").mapInPandas(
+        part, f"q_id bigint, vec_id bigint, {col} double"
+    )
+    return (_rank_by_adc if ascending else _rank_by_cos)(partial, k)
+
+
+def _arrow_cosine_topk(emb: DataFrame, Qn, q_ids, k: int, gate=None) -> DataFrame:
+    """The exact-cosine score block of nn01–nn03 on the shared
+    scaffold: ``(V / nrm) @ Qn.T``, one float64 matmul per batch."""
+    return _arrow_partial_topk(
+        emb, q_ids, k, lambda Vn, _: Vn @ Qn.T, dim=Qn.shape[1], gate=gate
+    )
 
 
 _ANN_BITS = 4  # sign bits per hash table (2^bits buckets/table)
@@ -867,12 +877,7 @@ def nn02_lsh_ann(
             (_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "vec_id", _r(F.col("cos"), 6).alias("cosine"), "rk")
-    )
+    return _rank_by_cos(scored, k)
 
 
 def _nn02_arrow(
@@ -916,12 +921,12 @@ def _nn02_arrow(
     Q, q_ids, Qn = _arrow_query_block(emb, n_queries)
     QB = buckets_of(Q)  # (q, tables)
 
-    def bucket_mask(V, ids):
+    def bucket_gate(V, Vn):
         B = buckets_of(V)  # (n, tables)
         # same-table bucket equality — the arrays_overlap twin
-        return (B[:, None, :] == QB[None, :, :]).any(-1)  # (n, q)
+        return (B[:, None, :] == QB[None, :, :]).any(-1), None  # (n, q)
 
-    return _arrow_partial_topk(emb, Qn, q_ids, k, mask_fn=bucket_mask)
+    return _arrow_cosine_topk(emb, Qn, q_ids, k, gate=bucket_gate)
 
 
 _NEARDUP_BITS = 4  # sign bits per table
@@ -2033,12 +2038,27 @@ def nn03_ivf_ann(
         # no dedupe pass: probe cells are distinct, so a candidate's one
         # cell matches at most one probe row per query
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "vec_id", _r(F.col("cos"), 6).alias("cosine"), "rk")
-    )
+    return _rank_by_cos(scored, k)
+
+
+def _ivf_probe_gate(C, Q, probes: int, normalized: bool = False):
+    """IVF probe gate for the Arrow scaffold, shared by nn03/nn05/nn06:
+    each query probes its ``probes`` nearest centroids (stable argsort —
+    ties break to the lowest cell id, the ranked-struct tie rule); a
+    row's cell is its argmin centroid (first minimum), in the raw or the
+    ``normalized`` space. Returns ``(gate, qprobe)``; the gate yields the
+    (n, q) "query probes my cell" mask and the cell as its aux array."""
+    import numpy as np
+
+    qcd = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+    qprobe = np.argsort(qcd, axis=1, kind="stable")[:, :probes]  # (q, probes)
+
+    def gate(V, Vn):
+        X = Vn if normalized else V
+        cell = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
+        return (cell[:, None, None] == qprobe[None, :, :]).any(-1), cell
+
+    return gate, qprobe
 
 
 def _nn03_arrow(
@@ -2049,7 +2069,7 @@ def _nn03_arrow(
     k: int = _KNN_K,
 ) -> DataFrame:
     """Vectorized IVF (see nn03 docstring): the probe gate rides the
-    shared _arrow_partial_topk scaffold as a mask_fn — per batch, one
+    shared _arrow_partial_topk scaffold — per batch, one
     (n, cells) distance reduction assigns cells, candidates outside
     every query's probe set are dropped BEFORE the cosine matmul, and
     exact cosine ranks only the survivors. Assignment and probing run
@@ -2061,14 +2081,8 @@ def _nn03_arrow(
         _fit_centroids(_train_vecs(spark, sf_dir), k=cells), dtype=np.float64
     )
     Q, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-    qcd = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-    qprobe = np.argsort(qcd, axis=1, kind="stable")[:, :probes]  # (q, probes)
-
-    def mask_fn(V, ids):
-        cell = ((V[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
-        return (cell[:, None, None] == qprobe[None, :, :]).any(-1)  # (n, q)
-
-    return _arrow_partial_topk(emb, Qn, q_ids, k, mask_fn=mask_fn)
+    gate, _ = _ivf_probe_gate(C, Q, probes)
+    return _arrow_cosine_topk(emb, Qn, q_ids, k, gate=gate)
 
 
 # ---------------------------------------------------------------------------
@@ -3378,66 +3392,45 @@ def _nn04_arrow(
     k: int = _KNN_K,
     codes: int = _PQ_CODES,
 ) -> DataFrame:
-    """Vectorized PQ-ADC (see nn04 docstring): encoding and table
-    lookup as batched numpy instead of nested SQL lambda folds. Per
-    Arrow batch: one (n, m, codes) distance tensor → argmin codes →
-    the ADC block is m fancy-indexed table gathers, then a partial
-    top-k per query; a tiny window merges partials. The per-candidate
-    cost is exactly the m lookups the operator promises — no 64-dim
-    math touches the corpus after encoding."""
+    """Vectorized PQ-ADC (see nn04 docstring) on the shared Arrow
+    scaffold: per batch, one (n, m, codes) distance tensor → argmin
+    codes, then ``_pq_adc_block``'s m table gathers — the per-candidate
+    cost is exactly the m lookups the operator promises, no 64-dim math
+    touches the corpus after encoding."""
     import numpy as np
-    import pandas as pd
 
     emb = _t(spark, sf_dir, "embeddings")
     cbs = np.asarray(
         _pq_codebooks(_train_vecs(spark, sf_dir), codes=codes), dtype=np.float64
     )  # (m, codes, sub)
     _, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-    qsub = Qn.reshape(len(q_ids), _PQ_M, _PQ_SUB)
-    # T[q, s, j] = ||q_sub - C[s][j]||² — the per-query lookup tables
+    adc = _pq_adc_block(cbs, Qn)
+    return _arrow_partial_topk(
+        emb, q_ids, k, lambda Vn, _: adc(Vn), dim=_EMB_DIM, ascending=True
+    )
+
+
+def _pq_adc_block(cbs, Qn):
+    """(n, q) ADC block for flat PQ: per-query lookup tables
+    ``T[q, s, j] = ||q_sub - C[s][j]||²`` built once, then each batch's
+    (already normalized / rotated) vectors encode to argmin codes (ties
+    → lowest code, like the SQL form) and sum their m table entries
+    sequentially — the SQL fold's order."""
+    import numpy as np
+
+    qsub = Qn.reshape(len(Qn), _PQ_M, _PQ_SUB)
     T = ((qsub[:, :, None, :] - cbs[None, :, :, :]) ** 2).sum(-1)
     A = T.transpose(1, 2, 0)  # (m, codes, q) for per-subspace gathers
-    dim = _PQ_M * _PQ_SUB
 
-    def part(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["embedding"].notna()]
-            if len(pdf):
-                pdf = pdf[pdf["embedding"].map(len) == dim]
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm = np.sqrt((V * V).sum(1))
-            ok = nrm > 0
-            V, ids, nrm = V[ok], ids[ok], nrm[ok]
-            if not len(V):
-                continue
-            S = (V / nrm[:, None]).reshape(len(V), _PQ_M, _PQ_SUB)
-            d = ((S[:, :, None, :] - cbs[None, :, :, :]) ** 2).sum(-1)
-            code = d.argmin(-1)  # (n, m); ties → lowest code, like the SQL form
-            adc = np.zeros((len(V), len(q_ids)))
-            for s in range(_PQ_M):
-                adc += A[s, code[:, s], :]
-            out = []
-            for qi in range(len(q_ids)):
-                mask = ids != q_ids[qi]
-                am, im = adc[:, qi][mask], ids[mask]
-                if not len(am):
-                    continue
-                top = np.lexsort((im, am))[: min(k, len(am))]
-                out.append(
-                    pd.DataFrame(
-                        {"q_id": q_ids[qi], "vec_id": im[top], "adc": am[top]}
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def block(X):
+        S = X.reshape(len(X), _PQ_M, _PQ_SUB)
+        code = ((S[:, :, None, :] - cbs[None, :, :, :]) ** 2).sum(-1).argmin(-1)
+        adc = np.zeros((len(X), len(Qn)))
+        for s in range(_PQ_M):
+            adc += A[s, code[:, s], :]
+        return adc
 
-    partial = emb.select("vec_id", "embedding").mapInPandas(
-        part, "q_id bigint, vec_id bigint, adc double"
-    )
-    return _rank_by_adc(partial, k)
+    return block
 
 
 # ---------------------------------------------------------------------------
@@ -3685,77 +3678,24 @@ def _nn05_arrow(
     k: int = _KNN_K,
     probes: int = _IVF_PROBES,
 ) -> DataFrame:
-    """Vectorized IVF-PQ (see nn05 docstring): per Arrow batch, cell
-    assignment is one (n, cells, dim) distance reduction, the probe
-    gate masks candidates BEFORE any scoring (rows outside every
-    query's probe set never pay the ADC math — the point of the
-    inverted file), and scoring is nn04's fancy-indexed table gathers.
-    Partial per-query top-k; the shared ADC rank tail merges."""
+    """Vectorized IVF-PQ (see nn05 docstring) on the shared Arrow
+    scaffold: the gate assigns cells with one (n, cells, dim) distance
+    reduction over the RAW vectors (nn03's space) and masks each row to
+    the queries probing its cell, so rows outside every probe set never
+    pay the ADC math; the score block is ``_pq_adc_block`` over the
+    normalized vectors (nn04's space)."""
     import numpy as np
-    import pandas as pd
 
     emb = _t(spark, sf_dir, "embeddings")
     vecs = _train_vecs(spark, sf_dir)
     cents = np.asarray(_fit_centroids(vecs, k=_IVF_CELLS), dtype=np.float64)
     cbs = np.asarray(_pq_codebooks(vecs), dtype=np.float64)
     Q, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-    # per-query probe cells from RAW vectors (nn03's assignment space)
-    qcd = ((Q[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-    qprobe = np.argsort(qcd, axis=1, kind="stable")[:, :probes]  # (q, probes)
-    # per-query ADC tables from NORMALIZED vectors (nn04's space)
-    qsub = Qn.reshape(len(q_ids), _PQ_M, _PQ_SUB)
-    T = ((qsub[:, :, None, :] - cbs[None, :, :, :]) ** 2).sum(-1)
-    A = T.transpose(1, 2, 0)
-    dim = _PQ_M * _PQ_SUB
-
-    def part(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["embedding"].notna()]
-            if len(pdf):
-                pdf = pdf[pdf["embedding"].map(len) == dim]
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm = np.sqrt((V * V).sum(1))
-            ok = nrm > 0
-            V, ids, nrm = V[ok], ids[ok], nrm[ok]
-            if not len(V):
-                continue
-            cell = ((V[:, None, :] - cents[None, :, :]) ** 2).sum(-1).argmin(1)
-            # probe gate BEFORE scoring: (n, q) candidate mask
-            overlap = (
-                cell[:, None, None] == qprobe[None, :, :]
-            ).any(-1)  # (n, q)
-            cand = overlap.any(1)
-            V, ids, nrm, overlap = V[cand], ids[cand], nrm[cand], overlap[cand]
-            if not len(V):
-                continue
-            S = (V / nrm[:, None]).reshape(len(V), _PQ_M, _PQ_SUB)
-            d = ((S[:, :, None, :] - cbs[None, :, :, :]) ** 2).sum(-1)
-            code = d.argmin(-1)
-            adc = np.zeros((len(V), len(q_ids)))
-            for s in range(_PQ_M):
-                adc += A[s, code[:, s], :]
-            out = []
-            for qi in range(len(q_ids)):
-                mask = (ids != q_ids[qi]) & overlap[:, qi]
-                am, im = adc[:, qi][mask], ids[mask]
-                if not len(am):
-                    continue
-                top = np.lexsort((im, am))[: min(k, len(am))]
-                out.append(
-                    pd.DataFrame(
-                        {"q_id": q_ids[qi], "vec_id": im[top], "adc": am[top]}
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    partial = emb.select("vec_id", "embedding").mapInPandas(
-        part, "q_id bigint, vec_id bigint, adc double"
+    gate, _ = _ivf_probe_gate(cents, Q, probes)
+    adc = _pq_adc_block(cbs, Qn)
+    return _arrow_partial_topk(
+        emb, q_ids, k, lambda Vn, _: adc(Vn), dim=_EMB_DIM, gate=gate, ascending=True
     )
-    return _rank_by_adc(partial, k)
 
 
 # ---------------------------------------------------------------------------
@@ -4031,79 +3971,40 @@ def _nn06_arrow(
     k: int = _KNN_K,
     probes: int = _IVF_PROBES,
 ) -> DataFrame:
-    """Vectorized residual IVF-PQ (see nn06 docstring): per Arrow
-    batch, normalized-space cell assignment, residual subtraction and
-    encoding are three matmul-shaped reductions; scoring gathers from
-    the per-(query, probe) table of the candidate's OWN cell — the
-    probe gate masks before any ADC math, like _nn05_arrow."""
+    """Vectorized residual IVF-PQ (see nn06 docstring) on the shared
+    Arrow scaffold: the gate assigns cells in the NORMALIZED space and
+    masks each row to the queries probing its cell (the cell rides
+    along to scoring); the score block encodes the residual
+    ``vn - centroid[cell]`` and gathers from the per-(query, probe)
+    table of the row's OWN cell. A row has one cell and a query's
+    probes are distinct, so each (row, query) pair falls in at most one
+    probe and the whole (n, q) block is one gather."""
     import numpy as np
-    import pandas as pd
 
     emb = _t(spark, sf_dir, "embeddings")
     cents, cbs = _residual_ivfpq_fit(_train_vecs(spark, sf_dir))
     C = np.asarray(cents, dtype=np.float64)
     CB = np.asarray(cbs, dtype=np.float64)  # (m, codes, sub)
     _, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-    qcd = ((Qn[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-    qprobe = np.argsort(qcd, axis=1, kind="stable")[:, :probes]  # (q, probes)
+    gate, qprobe = _ivf_probe_gate(C, Qn, probes, normalized=True)
     # per-(query, probe) residual ADC tables: (q, probes, m, codes)
     Rq = Qn[:, None, :] - C[qprobe]
     rsub = Rq.reshape(len(q_ids), probes, _PQ_M, _PQ_SUB)
     T = ((rsub[:, :, :, None, :] - CB[None, None, :, :, :]) ** 2).sum(-1)
-    dim = _PQ_M * _PQ_SUB
+    qa = np.arange(len(q_ids))[None, :, None]
+    sa = np.arange(_PQ_M)[None, None, :]
 
-    def part(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["embedding"].notna()]
-            if len(pdf):
-                pdf = pdf[pdf["embedding"].map(len) == dim]
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm = np.sqrt((V * V).sum(1))
-            ok = nrm > 0
-            V, ids = V[ok], ids[ok]
-            if not len(V):
-                continue
-            S = V / nrm[ok][:, None]
-            cell = ((S[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
-            # probe gate BEFORE scoring
-            overlap = (cell[:, None, None] == qprobe[None, :, :]).any(-1)
-            cand = overlap.any(1)
-            S, ids, cell = S[cand], ids[cand], cell[cand]
-            if not len(S):
-                continue
-            R = (S - C[cell]).reshape(len(S), _PQ_M, _PQ_SUB)
-            d = ((R[:, :, None, :] - CB[None, :, :, :]) ** 2).sum(-1)
-            code = d.argmin(-1)  # (n, m)
-            out = []
-            for qi in range(len(q_ids)):
-                ams, ims = [], []
-                for p in range(probes):
-                    mask = (cell == qprobe[qi, p]) & (ids != q_ids[qi])
-                    if not mask.any():
-                        continue
-                    cc = code[mask]
-                    a = T[qi, p][np.arange(_PQ_M)[None, :], cc].sum(1)
-                    ams.append(a)
-                    ims.append(ids[mask])
-                if not ams:
-                    continue
-                am, im = np.concatenate(ams), np.concatenate(ims)
-                top = np.lexsort((im, am))[: min(k, len(am))]
-                out.append(
-                    pd.DataFrame(
-                        {"q_id": q_ids[qi], "vec_id": im[top], "adc": am[top]}
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def score(Vn, cell):
+        R = (Vn - C[cell]).reshape(len(Vn), _PQ_M, _PQ_SUB)
+        code = ((R[:, :, None, :] - CB[None, :, :, :]) ** 2).sum(-1).argmin(-1)
+        # which probe of each query holds the row's cell (0 where none —
+        # those pairs are masked out by the gate)
+        p = (cell[:, None, None] == qprobe[None, :, :]).argmax(-1)  # (n, q)
+        return T[qa, p[:, :, None], sa, code[:, None, :]].sum(-1)
 
-    partial = emb.select("vec_id", "embedding").mapInPandas(
-        part, "q_id bigint, vec_id bigint, adc double"
+    return _arrow_partial_topk(
+        emb, q_ids, k, score, dim=_EMB_DIM, gate=gate, ascending=True
     )
-    return _rank_by_adc(partial, k)
 
 
 # ---------------------------------------------------------------------------
@@ -4674,13 +4575,12 @@ def dd10_semantic_dedup(
     the oracle-pinned single-level form.
 
     ``impl="arrow"`` cuts the CONSTANT of both n^1.5 terms (same law,
-    same verdicts — the nn-family twin architecture): assignment is
-    one (batch, cells) numpy distance reduction per Arrow batch, and
-    the within-cell pair search becomes a per-cell gram matrix in
-    ``applyInPandas`` instead of a self-join of interpreted dot folds.
-    Equivalence-gated on (vec_id, cell, keep) in
-    tests/test_scale_paths.py; the SQL form stays the oracle
-    subject."""
+    same verdicts) on the shared ``_arrow_semdedup`` kernel: assignment
+    is one (batch, cells) numpy distance reduction per Arrow batch, and
+    the within-cell pair search is a per-cell gram matrix instead of a
+    self-join of interpreted dot folds. Equivalence-gated on
+    (vec_id, cell, keep) in tests/test_scale_paths.py; the SQL form
+    stays the oracle subject."""
     if impl == "arrow":
         return _dd10_arrow(spark, sf_dir, threshold=threshold, cells=cells)
     emb = _t(spark, sf_dir, "embeddings")
@@ -4705,6 +4605,14 @@ def dd10_semantic_dedup(
     assigned = base.select("vec_id", "vn", cell.alias("cell")).localCheckpoint(
         eager=False
     )
+    return _semdedup_verdicts(assigned, threshold)
+
+
+def _semdedup_verdicts(assigned: DataFrame, threshold: float) -> DataFrame:
+    """SemDeDup verdicts over (vec_id, vn, cell), shared by dd10/dd11's
+    SQL forms: the within-cell self-join keeps a < b pairs within the
+    cosine threshold, and the dup-id set comes back as an UNHINTED left
+    join keyed on vec_id (see dd10's docstring)."""
     dups = (
         assigned.alias("x")
         .join(assigned.alias("b"), "cell")
@@ -4728,15 +4636,10 @@ def _dd10_arrow(
     threshold: float = _NEARDUP_COS,
     cells: int = _IVF_CELLS,
 ) -> DataFrame:
-    """Vectorized SemDeDup (see dd10 docstring): per Arrow batch, one
-    (n, cells) distance reduction assigns cells (argmin = first-lowest
-    cell on ties, the SQL form's tie rule); then ONE shuffle by cell
-    and a per-cell gram matrix decides keep/drop — a vector drops iff
-    any smaller-id cell-mate is within the cosine threshold, read
-    straight off the matrix's lower triangle. Corpus-side guards match
-    `_normalized_vn_base` (NULL/wrong-dim/zero-norm rows dropped)."""
+    """Vectorized SemDeDup (see dd10 docstring) on ``_arrow_semdedup``:
+    the assignment is one (n, cells) distance reduction per batch
+    (argmin = first-lowest cell on ties, the SQL form's tie rule)."""
     import numpy as np
-    import pandas as pd
 
     emb = _t(spark, sf_dir, "embeddings")
     C = np.asarray(
@@ -4746,47 +4649,40 @@ def _dd10_arrow(
         ),
         dtype=np.float64,
     )
-    dim = C.shape[1]
 
-    def assign(batches):
-        for pdf in batches:
-            ok = pdf["embedding"].map(
-                lambda e: e is not None and len(e) == dim
-            )
-            pdf = pdf[ok]
-            if not len(pdf):
-                continue
-            V = np.asarray([list(e) for e in pdf["embedding"]], dtype=np.float64)
-            nrm = np.sqrt((V**2).sum(1))
-            keep = nrm > 0
-            if not keep.any():
-                continue
-            Vn = V[keep] / nrm[keep, None]
-            ids = pdf["vec_id"].to_numpy()[keep]
-            cell = ((Vn[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
+    def assign(Vn):
+        return ((Vn[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
+
+    return _arrow_semdedup(emb, C.shape[1], threshold, assign)
+
+
+def _arrow_semdedup(emb: DataFrame, dim: int, threshold: float, assign) -> DataFrame:
+    """Shared SemDeDup kernel for dd10/dd11's Arrow twins: per Arrow
+    batch, ``_arrow_rows``' guards (NULL/wrong-dim/zero-norm rows
+    dropped, as ``_normalized_vn_base`` does) and ``assign(Vn) -> cell``
+    on the normalized vectors; then ONE shuffle by cell and a per-cell
+    gram matrix decides keep/drop — a vector drops iff any smaller-id
+    cell-mate is within the cosine threshold, read straight off the
+    matrix's strict upper triangle (the SQL self-join's a < b pairs)."""
+    import numpy as np
+    import pandas as pd
+
+    def cells(batches):
+        for ids, _, Vn in _arrow_rows(batches, dim):
             yield pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "cell": cell.astype("int32"),
-                    "vn": list(Vn),
-                }
+                {"vec_id": ids, "cell": assign(Vn).astype("int32"), "vn": list(Vn)}
             )
 
     assigned = emb.select("vec_id", "embedding").mapInPandas(
-        assign, "vec_id bigint, cell int, vn array<double>"
+        cells, "vec_id bigint, cell int, vn array<double>"
     )
 
     def per_cell(pdf):
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         X = np.asarray(list(pdf["vn"]), dtype=np.float64)
-        G = X @ X.T
-        dup = [bool((G[:j, j] >= threshold).any()) for j in range(len(pdf))]
+        dup = np.triu(X @ X.T >= threshold, 1).any(0)
         return pd.DataFrame(
-            {
-                "vec_id": pdf["vec_id"],
-                "cell": pdf["cell"],
-                "keep": [not d for d in dup],
-            }
+            {"vec_id": pdf["vec_id"], "cell": pdf["cell"], "keep": ~dup}
         )
 
     return assigned.groupBy("cell").applyInPandas(
@@ -4950,15 +4846,14 @@ def dd11_hierarchical_semdedup(
 ) -> DataFrame:
     """Hierarchical SemDeDup — dd10 with a FAISS-style coarse->fine
     assignment quantizer, the documented extension that takes semantic
-    dedup below single-level SemDeDup's Θ(n^1.5) (VERDICT r06: the one
-    superlinear growth law in the engine). Verdict semantics are
+    dedup below single-level SemDeDup's Θ(n^1.5). Verdict semantics are
     dd10's: within each FINE cell, a vector is a dup when a smaller-id
     cell-mate sits within the cosine threshold; the hierarchy only
     changes HOW a row finds its fine cell — the top-``cprobes``
     nearest coarse centroids first (k1 folds), then nearest fine
     centroid among those coarse cells' members (~cprobes*k/k1 folds)
     instead of all k. Multi-probing the coarse level is ct03's recall
-    lever applied to the hierarchy (VERDICT r07 item 4): a row whose
+    lever applied to the hierarchy: a row whose
     true fine cell sits just across a coarse boundary still finds it
     via the second-nearest coarse cell, lifting dup-recall from 0.66
     (single-probe) to 0.70 on the recall fixture (cprobes=3 measures
@@ -4991,14 +4886,11 @@ def dd11_hierarchical_semdedup(
     hash-verified.
 
     ``impl="arrow"`` cuts the constant of both n^(4/3) terms (same law,
-    same verdicts — the family twin architecture): per Arrow batch, one
-    (batch, k1) distance reduction picks the top-``cprobes`` coarse
-    cells per row, then each probe-set group takes an argmin over ONLY
-    the union of its member fine centroids (first-min = lowest member
-    index, the SQL masked-argmin tie rule), and the within-cell pair
-    search is dd10's per-cell gram matrix. Equivalence-gated on
-    (vec_id, cell, keep) in tests/test_scale_paths.py; the SQL form
-    stays the oracle subject."""
+    same verdicts): the shared ``_arrow_semdedup`` kernel with a
+    coarse→fine probe-group assignment per Arrow batch (see
+    ``_dd11_arrow``). Equivalence-gated on (vec_id, cell, keep) in
+    tests/test_scale_paths.py; the SQL form stays the oracle
+    subject."""
     if impl == "arrow":
         return _dd11_arrow(
             spark,
@@ -5064,20 +4956,7 @@ def dd11_hierarchical_semdedup(
     assigned = base.select("vec_id", "vn", cell.alias("cell")).localCheckpoint(
         eager=False
     )
-    dups = (
-        assigned.alias("x")
-        .join(assigned.alias("b"), "cell")
-        .filter(F.col("x.vec_id") < F.col("b.vec_id"))
-        .filter(_dot(F.col("x.vn"), F.col("b.vn")) >= threshold)
-        .select(F.col("b.vec_id").alias("vec_id"))
-        .distinct()
-        .select("vec_id", F.lit(True).alias("is_dup"))
-    )
-    return assigned.join(dups, "vec_id", "left").select(
-        "vec_id",
-        F.col("cell").cast("int").alias("cell"),
-        F.col("is_dup").isNull().alias("keep"),
-    )
+    return _semdedup_verdicts(assigned, threshold)
 
 
 def _dd11_arrow(
@@ -5089,17 +4968,15 @@ def _dd11_arrow(
     coarse: int = _HIER_COARSE,
     cprobes: int = _HIER_PROBES,
 ) -> DataFrame:
-    """Vectorized hierarchical SemDeDup (see dd11 docstring): per Arrow
-    batch a (n, k1) distance reduction picks each row's top-``cprobes``
-    coarse cells (stable argsort — ties break to the lowest cell id,
-    the ranked-struct tie rule), then each probe-set group takes an
-    argmin over only the UNION of its member fine centroids (np.argmin
-    = first minimum, mapped back through the ascending member-index
-    list = the SQL form's masked-argmin tie rule); one shuffle by fine
-    cell and dd10's per-cell gram matrix decide keep/drop. Corpus
-    guards match `_normalized_vn_base`."""
+    """Vectorized hierarchical SemDeDup (see dd11 docstring) on
+    ``_arrow_semdedup``: per batch a (n, k1) distance reduction picks
+    each row's top-``cprobes`` coarse cells (stable argsort — ties
+    break to the lowest cell id, the ranked-struct tie rule), then each
+    probe-set group takes an argmin over only the UNION of its member
+    fine centroids (np.argmin = first minimum, mapped back through the
+    ascending member-index list = the SQL form's masked-argmin tie
+    rule)."""
     import numpy as np
-    import pandas as pd
 
     emb = _t(spark, sf_dir, "embeddings")
     fine, co, f2c = _fit_hier_cells(
@@ -5114,61 +4991,19 @@ def _dd11_arrow(
         np.asarray([j for j in range(len(fine)) if f2c[j] == cg], dtype=np.int64)
         for cg in range(len(co))
     ]
-    dim = Cf.shape[1]
 
-    def assign(batches):
-        for pdf in batches:
-            ok = pdf["embedding"].map(
-                lambda e: e is not None and len(e) == dim
-            )
-            pdf = pdf[ok]
-            if not len(pdf):
-                continue
-            V = np.asarray([list(e) for e in pdf["embedding"]], dtype=np.float64)
-            nrm = np.sqrt((V**2).sum(1))
-            keep = nrm > 0
-            if not keep.any():
-                continue
-            Vn = V[keep] / nrm[keep, None]
-            ids = pdf["vec_id"].to_numpy()[keep]
-            dc = ((Vn[:, None, :] - Cc[None, :, :]) ** 2).sum(-1)
-            # stable sort: equal-distance coarse cells rank by cell id,
-            # the ranked-struct tie rule shared with the SQL form
-            pc = np.argsort(dc, axis=1, kind="stable")[:, :nprobe]
-            cell = np.empty(len(Vn), dtype=np.int64)
-            for g in np.unique(pc, axis=0):
-                rows = (pc == g).all(1)
-                mem = np.unique(np.concatenate([members[c] for c in g]))
-                d = ((Vn[rows][:, None, :] - Cf[mem][None, :, :]) ** 2).sum(-1)
-                cell[rows] = mem[d.argmin(1)]
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "cell": cell.astype("int32"),
-                    "vn": list(Vn),
-                }
-            )
+    def assign(Vn):
+        dc = ((Vn[:, None, :] - Cc[None, :, :]) ** 2).sum(-1)
+        pc = np.argsort(dc, axis=1, kind="stable")[:, :nprobe]
+        cell = np.empty(len(Vn), dtype=np.int64)
+        for g in np.unique(pc, axis=0):
+            rows = (pc == g).all(1)
+            mem = np.unique(np.concatenate([members[c] for c in g]))
+            d = ((Vn[rows][:, None, :] - Cf[mem][None, :, :]) ** 2).sum(-1)
+            cell[rows] = mem[d.argmin(1)]
+        return cell
 
-    assigned = emb.select("vec_id", "embedding").mapInPandas(
-        assign, "vec_id bigint, cell int, vn array<double>"
-    )
-
-    def per_cell(pdf):
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = np.asarray(list(pdf["vn"]), dtype=np.float64)
-        G = X @ X.T
-        dup = [bool((G[:j, j] >= threshold).any()) for j in range(len(pdf))]
-        return pd.DataFrame(
-            {
-                "vec_id": pdf["vec_id"],
-                "cell": pdf["cell"],
-                "keep": [not d for d in dup],
-            }
-        )
-
-    return assigned.groupBy("cell").applyInPandas(
-        per_cell, "vec_id bigint, cell int, keep boolean"
-    )
+    return _arrow_semdedup(emb, Cf.shape[1], threshold, assign)
 
 
 # ---------------------------------------------------------------------------
@@ -5524,60 +5359,19 @@ def _nn07_arrow(
     sf_dir: str,
     k: int = _KNN_K,
 ) -> DataFrame:
-    """Vectorized rotated PQ (see nn07 docstring): the rotation is one
-    matmul per Arrow batch prepended to nn04's encode/gather flow."""
+    """Vectorized rotated PQ (see nn07 docstring): one rotation matmul
+    per batch ahead of ``_pq_adc_block`` on the shared Arrow scaffold."""
     import numpy as np
-    import pandas as pd
 
     emb = _t(spark, sf_dir, "embeddings")
     R, cbs = _opq_rotation_fit(_train_vecs(spark, sf_dir))
     Rm = np.asarray(R, dtype=np.float64)
     CB = np.asarray(cbs, dtype=np.float64)
     _, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-    qsub = (Qn @ Rm.T).reshape(len(q_ids), _PQ_M, _PQ_SUB)
-    T = ((qsub[:, :, None, :] - CB[None, :, :, :]) ** 2).sum(-1)
-    A = T.transpose(1, 2, 0)
-    dim = _PQ_M * _PQ_SUB
-
-    def part(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["embedding"].notna()]
-            if len(pdf):
-                pdf = pdf[pdf["embedding"].map(len) == dim]
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm = np.sqrt((V * V).sum(1))
-            ok = nrm > 0
-            V, ids = V[ok], ids[ok]
-            if not len(V):
-                continue
-            S = ((V / nrm[ok][:, None]) @ Rm.T).reshape(len(V), _PQ_M, _PQ_SUB)
-            d = ((S[:, :, None, :] - CB[None, :, :, :]) ** 2).sum(-1)
-            code = d.argmin(-1)
-            adc = np.zeros((len(V), len(q_ids)))
-            for s in range(_PQ_M):
-                adc += A[s, code[:, s], :]
-            out = []
-            for qi in range(len(q_ids)):
-                mask = ids != q_ids[qi]
-                am, im = adc[:, qi][mask], ids[mask]
-                if not len(am):
-                    continue
-                top = np.lexsort((im, am))[: min(k, len(am))]
-                out.append(
-                    pd.DataFrame(
-                        {"q_id": q_ids[qi], "vec_id": im[top], "adc": am[top]}
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    partial = emb.select("vec_id", "embedding").mapInPandas(
-        part, "q_id bigint, vec_id bigint, adc double"
+    adc = _pq_adc_block(CB, Qn @ Rm.T)
+    return _arrow_partial_topk(
+        emb, q_ids, k, lambda Vn, _: adc(Vn @ Rm.T), dim=_EMB_DIM, ascending=True
     )
-    return _rank_by_adc(partial, k)
 
 
 # ---------------------------------------------------------------------------

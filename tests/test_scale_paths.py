@@ -469,12 +469,22 @@ def test_nn06_arrow_path_matches_sql_path(spark, sf_dir):
 
 @pytest.mark.parametrize(
     "op_name",
-    ["nn04_pq_adc", "nn05_ivfpq", "nn06_residual_ivfpq", "nn07_opq_pq"],
+    [
+        "nn02_lsh_ann",
+        "nn03_ivf_ann",
+        "nn04_pq_adc",
+        "nn05_ivfpq",
+        "nn06_residual_ivfpq",
+        "nn07_opq_pq",
+        "dd10_semantic_dedup",
+        "dd11_hierarchical_semdedup",
+    ],
 )
-def test_pq_arrow_paths_drop_malformed_embeddings(spark, sf_dir, tmp_path, op_name):
+def test_arrow_paths_drop_malformed_embeddings(spark, sf_dir, tmp_path, op_name):
     """NULL and wrong-dimension embedding rows must be dropped by the
-    PQ arrow paths (like the SQL forms' nrm > 0 / fold-over-dim
-    behavior), not crash np.stack or skew the codebook fit."""
+    shared Arrow batch guards (like the SQL forms' nrm > 0 / fold-over-dim
+    behavior), not crash np.stack or skew the codebook fit: no output
+    row of an ANN twin names them, and no SemDeDup verdict covers them."""
     from pyspark.sql import functions as F
 
     from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans import (

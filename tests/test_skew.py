@@ -3,10 +3,9 @@
 1. AQE's skew-join splitting actually engages on a user_id-keyed join
    with a manufactured hot seller (90% of a 100k-row fact on one key) —
    the executed SortMergeJoin must carry ``skew=true``.
-2. The explicit salted fallback wired into the risk engine
-   (``score_listings(user_join="salted")``, for the case where the user
-   dim is NOT broadcast-able) is row-identical to the broadcast path
-   and really joins on the salt key.
+2. The explicit salted fallback (``operators/skew.salted_join``, for
+   the case where the user dim is NOT broadcast-able) is row-identical
+   to the plain join and really joins on the salt key.
 """
 
 from __future__ import annotations
@@ -16,8 +15,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.operators.risk import (
-    score_listings,
+from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.operators.skew import (
+    salted_join,
 )
 from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.sources.readers import (
     load_table,
@@ -121,16 +120,9 @@ _ROWS = [
 
 
 def test_salted_user_join_is_row_identical(spark):
+    """``salted_join`` on a hot seller is row-identical to the plain
+    left join on the user dim, and really joins on the salt key."""
     listings = spark.createDataFrame(_ROWS, _SPECCED)
-    prime = spark.createDataFrame(
-        [("GAMING", "USED", 500.0, 100.0)],
-        "category string, condition string, mean double, stdev double",
-    )
-    comp = spark.createDataFrame(
-        [("GAMING", "USED", "cpu", "INTEL I7", 550.0, 100.0)],
-        "category string, condition string, comp_type string, comp_name string, "
-        "mean double, stdev double",
-    )
     users = spark.createDataFrame(
         [
             (1, 400, ["TOP seller"], "pro", 0),
@@ -140,28 +132,11 @@ def test_salted_user_join_is_row_identical(spark):
         "user_id long, register_days int, badges array<string>, "
         "user_type string, scam_reports int",
     )
-    reviews = spark.createDataFrame(
-        [(1, 90) for _ in range(10)] + [(3, 40)],
-        "user_id long, scoring int",
-    )
+    plain = listings.join(users, "user_id", "left")
+    salted = salted_join(listings, users, "user_id", n_salts=8, how="left")
 
-    def run(strategy):
-        out = score_listings(
-            listings, prime, comp, users, reviews,
-            specs_ready=True, user_join=strategy,
-        ).select("id", "risk_score", "enriched", F.to_json("risk_factors").alias("rf"))
-        return sorted(map(tuple, out.collect()))
+    def rows(df):
+        return sorted(map(tuple, df.select(*plain.columns).collect()), key=repr)
 
-    assert run("salted") == run("broadcast")
-
-    # the salted variant really routes through the salt key
-    salted_plan = (
-        score_listings(
-            listings, prime, comp, users, reviews,
-            specs_ready=True, user_join="salted",
-        )
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "__salt" in salted_plan
+    assert rows(salted) == rows(plain)
+    assert "__salt" in salted._jdf.queryExecution().optimizedPlan().toString()
