@@ -307,12 +307,12 @@ EXCLUDED = {
     "a01c_approx_median_rank_gate": "audit gate over a01/a01b's sketch",
     # verify/bucketed variants of benched heavy paths: the interesting
     # cost lives in the benched representative (dd02's LSH bands, dd03's
-    # simhash votes, dd06's kernels, nn02's embedding LSH, cp01/cp03's
+    # simhash projection, dd06's CC kernel, nn02's embedding LSH, cp01/cp03's
     # composed pipelines) and scale_smoke gates their growth laws
     "dd04_ngram_jaccard_pairs": "dd02's candidate-verify stage alone",
     "dd05_embedding_neardup": "embedding-LSH path benched via nn02; smoke-gated",
     "dd07_cluster_survivors": "one keyed agg over dd06's benched kernel",
-    "dd08_simhash_neardup": "banding tail of the benched dd03 votes",
+    "dd08_simhash_neardup": "banding tail of the benched dd03 signatures",
     "ct01_benchmark_contamination": "dd02-shape band probe, bounded bench side",
     "ct02_decontaminated_train": "ct01 + one anti-join",
     "ct03_semantic_contamination": "dd10-shape cell probe, bounded bench side",
@@ -500,9 +500,6 @@ VARIANTS = {
     "dd11_hierarchical_semdedup_arrow": (
         "dd11_hierarchical_semdedup", {"impl": "arrow"},
     ),
-    # the O(log n) star-contraction CC kernel next to the default
-    # label propagation (equivalence-gated in tests/test_scale_paths.py)
-    "dd06_neardup_clusters_star": ("dd06_neardup_clusters", {"impl": "star"}),
     # the production IVF retrieval legs (VERDICT r07 item 3):
     # recall-gated against their brute-force forms in
     # tests/test_ann_recall.py and by nn08's contract rows

@@ -25,6 +25,13 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda x: x != "")
 
 
+def has_tokens(text: Column) -> Column:
+    """``size(tokens(text)) > 0`` without building the array: a token
+    exists iff the text holds a character the ``\\s+`` split does not
+    consume. NULL text stays NULL."""
+    return text.rlike(r"\S")
+
+
 def sql_tokens(expr: str) -> str:
     return f"list_filter(regexp_split_to_array(lower({expr}), '\\s+'), x -> x <> '')"
 
@@ -301,3 +308,33 @@ def sql_fingerprint(expr: str) -> str:
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), {harr}), "
         f"(a, b) -> (a*31 + b) % {M31})"
     )
+
+
+# --- SimHash ----------------------------------------------------------------
+
+
+def simhash_expr(text: Column, bits: int) -> Column:
+    """``bits``-wide SimHash of a document: one ±1 vote per bit per
+    distinct-token ``hmod`` hash, bit set where the vote sum is
+    positive. Integer sums are order-free, so the value is exact and
+    engine-independent. A row without tokens gets 0. The hash array is
+    bound as a lambda variable so the tokenizer runs once per row, not
+    once per bit (the ``shingles`` binding trick)."""
+    hs = F.transform(distinct_tokens(text), lambda t: hmod(t))
+
+    def _of(h_arr: Column) -> Column:
+        sim = None
+        for j in range(bits):
+            vote = F.aggregate(
+                h_arr,
+                F.lit(0),
+                lambda acc, h: acc
+                + F.when(
+                    F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
+                ).otherwise(-1),
+            )
+            term = F.when(vote > 0, F.lit(1 << j)).otherwise(F.lit(0))
+            sim = term if sim is None else sim + term
+        return sim.cast("bigint")
+
+    return F.element_at(F.transform(F.array(hs), _of), 1)

@@ -39,9 +39,14 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import (
     M31,
+    _BLOOM_BITS,
+    _BLOOM_K,
+    bloom_build,
+    bloom_probe,
     h32,
     hmod,
     seeded,
+    shingle_hashes,
     sql_h32,
     sql_hmod,
     sql_seeded,
@@ -51,11 +56,13 @@ from ..functions.textstats import (
     distinct_tokens,
     dup_ratio,
     fingerprint,
+    has_tokens,
     ngrams,
     predicted_lang,
     quality_components,
     quality_score,
     shingles,
+    simhash_expr,
     sql_bpe_token_count,
     sql_distinct_tokens,
     sql_dup_ratio,
@@ -321,31 +328,18 @@ def _simhash_sql(bits: int = _SIMHASH_BITS) -> str:
 def dd03_simhash(
     spark: SparkSession, sf_dir: str, *, bits: int = _SIMHASH_BITS
 ) -> DataFrame:
-    """16-bit SimHash per document: per-bit ±1 votes over distinct-token
-    hashes, bit set where the vote is positive. Near-dups land on equal
-    (or Hamming-close) simhash values — dedup becomes a groupBy on one
-    BIGINT. One explode + one groupBy; partial aggregation collapses
-    the vote sums map-side."""
-    docs = _t(spark, sf_dir, "documents")
-    ex = docs.select(
-        "doc_id", F.explode(distinct_tokens(F.col("text"))).alias("tok")
-    ).withColumn("h", hmod(F.col("tok")))
-    votes = ex.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.col("h").bitwiseAND(F.lit(1 << j)) != 0, 1).otherwise(-1)
-            ).alias(f"v{j}")
-            for j in range(bits)
-        ]
+    """``bits``-wide SimHash per document with at least one token: ±1
+    votes over distinct-token hashes, bit set where the vote is
+    positive (``simhash_expr``, the one SimHash in the package; the
+    streaming near-dup stage signs with it too). Near-dups land on
+    equal (or Hamming-close) simhash values — dedup becomes a groupBy
+    on one BIGINT. A per-row projection: no shuffle."""
+    text = F.col("text")
+    return (
+        _t(spark, sf_dir, "documents")
+        .filter(has_tokens(text))
+        .select("doc_id", simhash_expr(text, bits).alias("simhash"))
     )
-    sim = reduce(
-        add,
-        [
-            F.when(F.col(f"v{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            for j in range(bits)
-        ],
-    )
-    return votes.select("doc_id", sim.cast("bigint").alias("simhash"))
 
 
 _NGRAM_JACCARD = 0.3
@@ -1058,58 +1052,36 @@ _CC_AUTO_SWITCH_ROUNDS = 10
 
 
 @query("dd06_neardup_clusters", oracle=_CC_SQL, ops=("DEDUP-CLUSTER",))
-def dd06_neardup_clusters(
-    spark: SparkSession, sf_dir: str, *, impl: str = "auto"
-) -> DataFrame:
+def dd06_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup clusters: connected components over the verified near-dup
     pair graph — each doc gets the MINIMUM reachable doc_id as its
     cluster id (the canonical survivor), so 'keep one per cluster' is a
     filter on doc_id == cluster_id. The oracle replays the components
     as a recursive CTE (transitive closure + min), fine at test scale
-    while the iterative forms are the ones that survive 100 TB.
+    while the iterative kernel is the one that survives 100 TB.
 
-    Two iterative kernels, identical output (equivalence-gated in
-    tests/test_scale_paths.py), picked automatically by default:
-
-    - ``impl="labelprop"``: min-label propagation, one shuffle per
-      round, O(component diameter) rounds — near-dup clusters are
-      shallow, so 2-4 rounds here. Refuses to return unconverged
-      labels past its 30-round cap.
-    - ``impl="star"``: alternating large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond"),
-      O(log n) rounds on ANY topology — the guard against the
-      adversarial long-chain component where label propagation pays a
-      full shuffle per hop (tests/test_scale_paths.py demonstrates a
-      64-chain converging in 4 star rounds vs 30+ propagation rounds).
-      At 100 TB, where one pathological component would otherwise
-      serialize tens of shuffles, this is the kernel to pin.
-    - ``impl="auto"`` (default — VERDICT r05 item 4): run label
-      propagation with the cheap depth proxy the judge suggested — a
-      graph still unconverged after ``_CC_AUTO_SWITCH_ROUNDS`` rounds
-      (>2x the shallow regime) has a deep component, so restart on the
-      O(log n) star kernel instead of burning the remaining
-      O(diameter) shuffles. Shallow graphs never hit the switch and
-      pay nothing; deep graphs now complete without the caller knowing
-      an ``impl`` knob exists (pinned on the 40-chain fixture in
-      tests/test_scale_paths.py)."""
+    The components come from ``_cc_auto``, the package's one
+    connected-components kernel (gr03 runs it too): min-label
+    propagation, which settles a shallow near-dup graph in 2-4 rounds,
+    restarting on the O(log n) star contraction when the graph proves
+    deep."""
     pairs = _minhash_pairs(spark, sf_dir).select("a_id", "b_id")
-    if impl == "star":
-        labels, _ = _cc_star_contraction(pairs)
-    elif impl == "labelprop":
-        labels, _ = _cc_label_prop(pairs)
-    else:
-        labels, _ = _cc_auto(pairs)
+    labels, _ = _cc_auto(pairs)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
 
 def _cc_auto(pairs: DataFrame) -> tuple[DataFrame, int]:
-    """Depth-adaptive kernel selection: label propagation up to the
-    switch cap, star contraction on escape. The pair DataFrame is
-    re-read by the fallback — acceptable because the switch only fires
-    on the rare deep-chain graph, and the candidate generator behind it
-    (``_minhash_pairs``) persists its shingle table."""
+    """Connected components of the (a_id, b_id) edge list, as a
+    checkpointed (node, label) table whose label is the component's
+    minimum node, plus the round count. Runs label propagation up to
+    ``_CC_AUTO_SWITCH_ROUNDS``; a graph still moving there has a deep
+    component, so it restarts on the O(log n) star contraction
+    (Kiveris et al.) instead of paying one shuffle per hop. Both
+    kernels symmetrize their input and prove their fixed point or
+    raise. The pair DataFrame is re-read by the fallback — acceptable
+    because the switch only fires on the rare deep-chain graph."""
     try:
         return _cc_label_prop(pairs, cap=_CC_AUTO_SWITCH_ROUNDS)
     except _DeepComponents:
@@ -1118,9 +1090,8 @@ def _cc_auto(pairs: DataFrame) -> tuple[DataFrame, int]:
 
 class _DeepComponents(RuntimeError):
     """Label propagation hit its round cap with labels still moving —
-    a component's diameter exceeds the cap. The auto kernel catches
-    this and restarts on the O(log n) star contraction; explicit
-    ``impl="labelprop"`` callers see it as the refuse-to-guess error."""
+    a component's diameter exceeds the cap. ``_cc_auto`` catches this
+    and restarts on the O(log n) star contraction."""
 
 
 def _cc_label_prop(pairs: DataFrame, *, cap: int = 30) -> tuple[DataFrame, int]:
@@ -1219,8 +1190,8 @@ def _cc_label_prop(pairs: DataFrame, *, cap: int = 30) -> tuple[DataFrame, int]:
         raise _DeepComponents(
             f"label propagation did not converge within {cap} rounds — "
             f"{changed} labels still changing; a component's diameter "
-            "exceeds the cap. Use dd06_neardup_clusters(impl='star') "
-            "(the default impl='auto' switches to it automatically)."
+            "exceeds the cap (_cc_auto restarts such graphs on the star "
+            "contraction)"
         )
     # checkpoint the result so the caches it was built from can be freed
     # before the caller ever consumes it
@@ -1251,28 +1222,15 @@ def _cc_star_contraction(pairs: DataFrame) -> tuple[DataFrame, int]:
     never declared on a fingerprint collision. Same lineage hygiene as
     label propagation: superseded caches unpersist, localCheckpoint
     every 4 rounds, final labels checkpointed so every intermediate
-    cache is released before returning.
+    cache is released before returning. The fingerprint is seeded
+    from the INPUT edge set, so a graph already at its fixed point
+    finishes in ONE round.
 
-    Measured floor at sf0.1 (r07, quiet box, medians of 3): the graph
-    topologically needs TWO rounds (edge fingerprint 256 -> 244 -> 244)
-    where label propagation needs one fused round, and the per-round
-    fixed cost is ~1.0-1.2 s (three shuffles over a 256-edge list) plus
-    edges materialize ~1.0 s, the one exceptAll ~0.5 s and the labels
-    fold+checkpoint ~1.0 s — star 5.3 s vs labelprop 2.6 s, a 2x
-    scheduler-fixed-cost gap that auto-selection already hides from
-    callers and that inverts at scale where round COUNT dominates.
-    Rewrites tried and rejected with numbers: groupBy-min+join-back
-    (r06: 16x plan-ref blowup, 4.5 s vs 2.0 s kernel-only);
-    ls-distinct (r06: removed, one shuffle/round saved);
-    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true to
-    let AQE coalesce the cached rounds' 64-task window stages (r07:
-    star 5.3 -> 4.7 s — inside the run spread — while labelprop moved
-    2.6 -> 2.9 s; not a win, reverted). What DID land (r07): the
-    convergence fingerprint is seeded from the INPUT edge set, so a
-    graph already at its fixed point (the common incremental-re-run
-    case) finishes in ONE round instead of paying a second full round
-    to see two loop-internal fingerprints agree."""
-    spark = pairs.sparkSession
+    On the shallow sf0.1 near-dup graph this kernel costs about 2x
+    label propagation (two rounds of three small shuffles against one
+    fused round), which is why ``_cc_auto`` reaches for it only once a
+    graph proves deep. Rewrites tried and rejected, with their numbers,
+    are recorded in CHANGES.md."""
     w = Window.partitionBy("u")
     obs0 = Observation("dd06_star_input")
     edges = (
@@ -1307,25 +1265,7 @@ def _cc_star_contraction(pairs: DataFrame) -> tuple[DataFrame, int]:
         )
         # NOT deduped here: the small-star window min is insensitive to
         # row multiplicity and the round's output gets the one real
-        # distinct below — deduping ls too spent a whole extra shuffle
-        # per round for nothing (the r05→r06 constant-factor trim; a
-        # groupBy-min + join-back form was ALSO tried and reverted: it
-        # references the round input ~16x in the logical plan, needing
-        # 2x-frequent lineage cuts, and its extra AQE join stages cost
-        # more wall-clock than the window sorts it removed — 4.5s vs
-        # 2.0s kernel-only at sf0.1. r14 RE-MEASURED the VERDICT r13
-        # item-3 candidate on the current tree — a SIZE-GATED broadcast
-        # round: when the observe() fingerprint shows the contracted
-        # edge list is small, both per-node window minima become
-        # partial-aggregated groupBy minima broadcast-joined back, so
-        # only the round's output distinct moves rows. Output-identical
-        # (collect-compared vs labelprop, 477 labels), but 2x SLOWER:
-        # interleaved medians of 5 at sf0.1 — window form 4.88 s,
-        # broadcast form 9.27/10.27 s. Each broadcast min-table is its
-        # own query stage, so the form trades the two tiny 256-row
-        # window shuffles for four extra per-round driver round-trips —
-        # the exact per-round fixed cost that dominates this kernel.
-        # RE-REJECTED with current numbers.)
+        # distinct below
         ls = (
             sym.withColumn("m", F.least(F.min("v").over(w), F.col("u")))
             .filter(F.col("v") > F.col("u"))
@@ -6485,16 +6425,6 @@ def j06_range_count(
 # ---------------------------------------------------------------------------
 # Bloom-filter incremental dedup — probe new docs against the corpus bloom
 # ---------------------------------------------------------------------------
-#: bloom geometry: 4096 words x 63 usable bits (the sign bit is never
-#: set — DuckDB raises on 1 << 63) = 258,048 bits; 4 probes per key.
-#: The synthetic corpus tops out near ~27k distinct shingles (vocab 31
-#: => at most 31^3 3-gram shingles), so fill stays under ~35% and the
-#: false-positive rate under ~1.5% at every SF.
-_BLOOM_WORDS = 4096
-_BLOOM_BITS = _BLOOM_WORDS * 63
-_BLOOM_K = 4
-
-
 def _dd12_sql() -> str:
     probes = ", ".join(str(j) for j in range(_BLOOM_K))
     pos = sql_seeded("h", "j") + f" % {_BLOOM_BITS}"
@@ -6558,7 +6488,10 @@ def dd12_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver hash-verifies the filter's one-sided error contract every
     round), and the seen-shingle ratio.
 
-    The filter is plain integer arithmetic shared with the oracle: 4
+    The filter is the package's one Bloom build and probe
+    (``functions/hashing``'s ``bloom_build``/``bloom_probe`` over
+    ``shingle_hashes``; cp03 and the ST9 stream run the same three),
+    plain integer arithmetic shared with the oracle: 4
     Carter-Wegman probes (``seeded``) mod 258,048 bits packed into
     4,096 BIGINT words of 63 usable bits (bit 63 never set — DuckDB
     raises on ``1 << 63``), OR-folded with ``bit_or``. Fill stays
@@ -6577,65 +6510,18 @@ def dd12_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_shapes.py). A production delta-ingest run keeps
     just the bloom (broadcast, ~32 KB here, a few GB for a
     trillion-shingle corpus split across executors)."""
-    docs = _t(spark, sf_dir, "documents")
-    sh = (
-        docs.select("doc_id", tokens(F.col("text")).alias("t"))
-        .select("doc_id", shingles(F.col("t")).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select("doc_id", F.explode("sh").alias("s"))
-        .select("doc_id", hmod(F.col("s")).alias("h"))
-    )
+    sh = shingle_hashes(_t(spark, sf_dir, "documents"), "doc_id")
     ex = sh.filter(F.col("doc_id") % 10 != 0)
     inc = sh.filter(F.col("doc_id") % 10 == 0)
-
-    j = F.explode(F.array(*[F.lit(i) for i in range(_BLOOM_K)])).alias("j")
-    pos = (seeded(F.col("h"), F.col("j")) % _BLOOM_BITS).alias("pos")
-    bloom = (
-        ex.select("h", j)
-        .select(pos)
-        .select(
-            F.expr("pos DIV 63").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))"
-            ).alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
     exh = ex.select("h").distinct()
-
-    probe = (
-        inc.select("doc_id", "h", j)
-        .select("doc_id", "h", pos)
+    flagged = (
+        bloom_probe(inc, bloom_build(ex), "doc_id")
+        .join(exh.withColumn("exact_hit", F.lit(1)), "h", "left")
         .select(
             "doc_id",
-            "h",
-            F.expr("pos DIV 63").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))"
-            ).alias("mask"),
+            F.col("seen").alias("bloom_hit"),
+            F.coalesce(F.col("exact_hit"), F.lit(0)).alias("exact_hit"),
         )
-    )
-    hitbits = probe.join(F.broadcast(bloom), "word", "left").select(
-        "doc_id",
-        "h",
-        F.when(
-            F.col("bits").isNotNull()
-            & ((F.col("bits").bitwiseAND(F.col("mask"))) == F.col("mask")),
-            1,
-        )
-        .otherwise(0)
-        .alias("hit"),
-    )
-    persh = hitbits.groupBy("doc_id", "h").agg(
-        F.when(F.sum("hit") == _BLOOM_K, 1).otherwise(0).alias("bloom_hit")
-    )
-    flagged = persh.join(
-        exh.withColumn("exact_hit", F.lit(1)), "h", "left"
-    ).select(
-        "doc_id",
-        "bloom_hit",
-        F.coalesce(F.col("exact_hit"), F.lit(0)).alias("exact_hit"),
     )
     return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_sh"),
@@ -7962,9 +7848,10 @@ def cp03_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-ingest pipeline composed end-to-end (VERDICT r07
     item 5) — the cp01/cp02 discipline applied to the DELTA path every
     100 TB corpus actually runs day-to-day: cdc01's snapshot diff finds
-    what changed, dd12's bloom filter is the ONLY interface to the
-    historical corpus, and a ct01-style n-gram check decontaminates the
-    survivors against the held-out eval slice. Per incoming (added or
+    what changed, dd12's bloom filter (the shared ``bloom_build`` /
+    ``bloom_probe``) is the ONLY interface to the historical corpus,
+    and a ct01-style n-gram check decontaminates the survivors against
+    the held-out eval slice. Per incoming (added or
     changed) document with at least one shingle: distinct-shingle
     count, bloom-claimed-seen count, eval-shared count, the seen ratio,
     and three verdicts — ``dup_flag`` (seen ratio ≥ 0.5, the
@@ -8029,79 +7916,23 @@ def cp03_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "new_text",
     )
 
-    oldh = (
-        old.select("doc_id", "source", tokens(F.col("text")).alias("t"))
-        .select("doc_id", "source", shingles(F.col("t")).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select("doc_id", "source", F.explode("sh").alias("s"))
-        .select("doc_id", "source", hmod(F.col("s")).alias("h"))
-    )
-    jcol = F.explode(F.array(*[F.lit(i) for i in range(_BLOOM_K)])).alias("j")
-    pos = (seeded(F.col("h"), F.col("j")) % _BLOOM_BITS).alias("pos")
-    bloom = (
-        oldh.select("h", jcol)
-        .select(pos)
-        .select(
-            F.expr("pos DIV 63").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))"
-            ).alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
+    oldh = shingle_hashes(old, "doc_id", "source")
     ev = (
         oldh.filter(F.col("source") == _EVAL_SOURCE).select("h").distinct()
     )
-
-    ince = (
-        incoming.select(
-            "doc_id", "change_type", tokens(F.col("new_text")).alias("t")
-        )
-        .select("doc_id", "change_type", shingles(F.col("t")).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select("doc_id", "change_type", F.explode("sh").alias("s"))
-        .select("doc_id", "change_type", hmod(F.col("s")).alias("h"))
-        .distinct()
-    )
-    probe = (
-        ince.select("doc_id", "change_type", "h", jcol)
-        .select("doc_id", "change_type", "h", pos)
-        .select(
-            "doc_id",
-            "change_type",
-            "h",
-            F.expr("pos DIV 63").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))"
-            ).alias("mask"),
-        )
-    )
-    hitbits = probe.join(F.broadcast(bloom), "word", "left").select(
-        "doc_id",
-        "change_type",
-        "h",
-        F.when(
-            F.col("bits").isNotNull()
-            & ((F.col("bits").bitwiseAND(F.col("mask"))) == F.col("mask")),
-            1,
-        )
-        .otherwise(0)
-        .alias("hit"),
-    )
-    persh = hitbits.groupBy("doc_id", "change_type", "h").agg(
-        F.when(F.sum("hit") == _BLOOM_K, 1).otherwise(0).alias("bloom_hit")
-    )
+    ince = shingle_hashes(incoming, "doc_id", "change_type", text="new_text")
     # the eval slice is benchmark-sized in practice but corpus-derived
     # here — no broadcast hint (the tp01 lesson): AQE elects broadcast
     # from the MEASURED post-distinct size when it fits
-    flagged = persh.join(
-        ev.withColumn("eval_hit", F.lit(1)), "h", "left"
-    ).select(
-        "doc_id",
-        "change_type",
-        "bloom_hit",
-        F.coalesce(F.col("eval_hit"), F.lit(0)).alias("eval_hit"),
+    flagged = (
+        bloom_probe(ince, bloom_build(oldh), "doc_id", "change_type")
+        .join(ev.withColumn("eval_hit", F.lit(1)), "h", "left")
+        .select(
+            "doc_id",
+            "change_type",
+            F.col("seen").alias("bloom_hit"),
+            F.coalesce(F.col("eval_hit"), F.lit(0)).alias("eval_hit"),
+        )
     )
     agg = flagged.groupBy("doc_id", "change_type").agg(
         F.count(F.lit(1)).alias("n_sh"),
@@ -12788,14 +12619,12 @@ def j10_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# gr03: connected components — min-label propagation to a fixed point
+# gr03: connected components of the same-nation co-supplier graph
 # ---------------------------------------------------------------------------
-#: propagation rounds: labels travel one hop per round, so this bounds
-#: the component diameter the proof covers; the emitted `converged`
-#: flag (last round changed NO label) is the in-result evidence the
-#: fixed point was actually reached at this SF, not an assumption
-#: (measured: 2 rounds incl. the no-change round at sf0.01, 3 at
-#: sf0.1 — 4 leaves margin)
+#: the oracle's fixed propagation rounds: labels travel one hop per
+#: round, and its `converged` column proves the last round changed no
+#: label (2 rounds incl. the no-change round at sf0.01, 3 at sf0.1 —
+#: 4 leaves margin)
 _GR03_ROUNDS = 4
 
 #: the blocked subgraph CC runs on: gr01's co-purchase edges restricted
@@ -12850,71 +12679,37 @@ def _gr03_sql(rounds: int = _GR03_ROUNDS) -> str:
 
 
 @query("gr03_connected_components", oracle=_gr03_sql, ops=("GRAPH-CC",))
-def gr03_connected_components(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    rounds: int = _GR03_ROUNDS,
-    escape: str | None = "star",
-) -> DataFrame:
+def gr03_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components — the GRAPH-CC census that turns pair
-    evidence into cluster ids (dd06's label-propagation kernel as an
-    explicit, convergence-proven component operator; a dedup pipeline
-    runs exactly this downstream of its pair generator): every node
-    starts labeled with its own id, each round every node takes the
-    MIN of its own and its neighbors' labels, and after the fixed
-    {_GR03_ROUNDS} rounds the ledger reports one row per component
-    (component, n_nodes, min_node, max_node) plus a `converged`
-    column PROVING the last round changed no label — the gr01
-    fixed-point trick applied to min-label propagation (integer
-    labels, integer MIN: every intermediate state is bit-equal across
-    engines, which is what makes an iterative algorithm
-    driver-hash-verifiable at all; the proof is IN the verified rows,
-    not a docstring claim).
+    evidence into cluster ids: one row per component (component,
+    n_nodes, min_node, max_node, converged), where the component id is
+    its minimum node.
 
-    The graph is gr01's supplier co-purchase edge set (shared VERBATIM
-    via `_GR_EDGE_CTES` / `_gr_edges` — one definition, so the graph
-    operators cannot drift on what the graph is) BLOCKED to same-
-    nation pairs — the raw graph is a single clique at every SF, so
-    the unblocked census is vacuous; see `_GR03_BLOCK_CTES`. Isolated
-    suppliers stay in the census as singleton components.
+    The graph is gr01's supplier co-purchase edge set (`_GR_EDGE_CTES`
+    / `_gr_edges` — one definition, so the graph operators cannot
+    drift on what the graph is) BLOCKED to same-nation pairs — the raw
+    graph is a single clique at every SF, so the unblocked census is
+    vacuous; see `_GR03_BLOCK_CTES`. Isolated suppliers stay in the
+    census as singleton components.
 
-    Scale shape (100 TB): each round is ONE keyed equi-join of the
-    node-sized label table against the edge list plus one map-side-
-    combinable MIN aggregate and a node-keyed left join — the textbook
-    distributed label-propagation shape (a blocked co-purchase graph
-    is dense inside blocks, so plain propagation converges in a
-    handful of hops, and the emitted flag proves it did). Joins stay
-    UNHINTED (node side a-priori unbounded — the r09 rule); lineage is
-    cut every second round (the tk02 cadence). The final census is one
-    keyed aggregate; the convergence probe joins two node-sized
-    tables.
+    The components come from ``_cc_auto``, dd06's kernel: label
+    propagation that proves its fixed point, restarting on the O(log n)
+    star contraction when a blocked component is deeper than its
+    switch cap. The kernel raises rather than return unconverged
+    labels, so ``converged`` is always true. The oracle replays
+    ``_GR03_ROUNDS`` fixed rounds and computes the same flag from the
+    last round's label changes; should the driver corpus ever grow a
+    component deeper than that, the oracle row would read
+    ``converged=false`` and the comparison would fail loudly.
 
-    Depth escape (VERDICT r11 item 7 — a deep blocked component must
-    not SILENTLY emit ``converged=false`` rows at scale): after the
-    fixed rounds the convergence scalar is checked eagerly (a tiny job
-    over the final checkpoint), and if labels are still moving the
-    kernel switches — ``escape="star"`` (default) restarts on dd06's
-    O(log n) large-star/small-star contraction (``_cc_star_contraction``
-    — the SHARED kernel, which proves its own fixed point internally,
-    so the census then reports ``converged=true`` honestly);
-    ``escape="refuse"`` raises ``_DeepComponents`` (the explicit-
-    labelprop refusal semantics); ``escape=None`` keeps the raw
-    flagged census (the oracle-replayable fixed-round form). At every
-    test SF the blocked graph converges inside the fixed rounds, so
-    the driver-hashed plan is identical to the escape-free form; the
-    escape itself is pinned end-to-end on a synthetic deep-chain
-    fixture in tests/test_scale_paths.py. Deliberate divergence
-    surface: if the driver corpus ever grew a deep blocked component,
-    the escaped census would MISMATCH the fixed-round oracle and turn
-    the row red — chosen over registering escape=None, where the same
-    data change would keep the row silently green with
-    converged=false, the exact failure mode this escape exists to
-    prevent."""
+    Scale shape (100 TB): the kernel's rounds are keyed equi-joins and
+    MIN aggregates over the edge list; the census is one node-keyed
+    left join and one keyed aggregate. Joins stay UNHINTED (node side
+    a-priori unbounded)."""
     sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    ed = _gr_edges(spark, sf_dir)
     dom = (
-        ed.join(
+        _gr_edges(spark, sf_dir)
+        .join(
             sup.select(
                 F.col("s_suppkey").alias("src"),
                 F.col("s_nationkey").alias("na"),
@@ -12929,99 +12724,21 @@ def gr03_connected_components(
             "dst",
         )
         .filter(F.col("na") == F.col("nb"))
-        .select("src", "dst")
-        # r14 (guide §2.4 "two operations keyed the same way share one
-        # exchange"): repartition on src and PERSIST — the cached
-        # relation keeps hashpartitioning(src), so each round's
-        # src-keyed sort-merge join skips the edge-side exchange; the
-        # former lazy localCheckpoint came back as UnknownPartitioning
-        # and re-shuffled dom every round. Interleaved A/B medians of
-        # 5 at sf0.1: checkpoint 4.29 s, persist 3.18/3.11 s (0.73×).
-        # Session-local cache like dd02's shingle table (CacheManager
-        # plan matching), ~36k rows.
-        .repartition("src")
-        .persist()
+        .select(F.col("src").alias("a_id"), F.col("dst").alias("b_id"))
     )
-    # r14 note: gr01's adjacency-list round form was A/B'd here too
-    # (collect_list(dst) per src, explode after the node-sized join)
-    # and REJECTED as a wash — the blocked same-nation edge list is
-    # ~1/25 of the co-purchase graph, so the per-round edge join is
-    # already cheap, and the flat form keeps AQE skew-splitting
-    # available. Interleaved medians (same session, box drifting):
-    # flat 5.19/10.39 s vs adjacency 6.03/5.60/9.34 s at sf0.1.
-    s = (
+    labels, _ = _cc_auto(dom)
+    return (
         _t(spark, sf_dir, "lineitem")
         .select(F.col("l_suppkey").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("lab"))
-    )
-    prev = None
-    for r in range(1, rounds + 1):
-        m = (
-            dom.join(s, dom["src"] == s["node"])
-            .groupBy("dst")
-            .agg(F.min("lab").alias("ml"))
-        )
-        prev = s
-        s = (
-            s.join(m, s["node"] == m["dst"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lab"), F.coalesce(F.col("ml"), F.col("lab"))
-                ).alias("lab"),
-            )
-        )
-        if r % 2 == 0 or r == rounds:
-            # the FINAL checkpoint is eager so the escape's convergence
-            # probe below is a tiny job over materialized labels, not a
-            # re-run of the whole round chain
-            s = s.localCheckpoint(eager=(r == rounds and escape is not None))
-    chg = (
-        s.alias("a")
-        .join(prev.alias("b"), F.col("a.node") == F.col("b.node"))
-        .filter(F.col("a.lab") != F.col("b.lab"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_changed"))
-    )
-    if escape is not None and int(chg.collect()[0][0]) > 0:
-        if escape == "refuse":
-            raise _DeepComponents(
-                f"gr03: labels still moving after {rounds} rounds — a "
-                "blocked component's diameter exceeds the fixed round "
-                "budget; rerun with escape='star' (the O(log n) kernel) "
-                "or escape=None for the raw flagged census"
-            )
-        # restart on the shared O(log n) star-contraction kernel; it
-        # proves its own fixed point internally, so converged=true is
-        # honest. Isolated suppliers (absent from the edge list) stay
-        # singleton components via the coalesce.
-        labels, _ = _cc_star_contraction(
-            dom.select(F.col("src").alias("a_id"), F.col("dst").alias("b_id"))
-        )
-        s = (
-            s.select("node")
-            .join(labels, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("label"), F.col("node")).alias("lab"),
-            )
-        )
-        chg = spark.createDataFrame([(0,)], "n_changed bigint")
-    return (
-        s.groupBy(F.col("lab").alias("component"))
+        .join(labels, "node", "left")
+        .groupBy(F.coalesce(F.col("label"), F.col("node")).alias("component"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
             F.min("node").alias("min_node"),
             F.max("node").alias("max_node"),
         )
-        .crossJoin(F.broadcast(chg))
-        .select(
-            "component",
-            "n_nodes",
-            "min_node",
-            "max_node",
-            (F.col("n_changed") == 0).alias("converged"),
-        )
+        .withColumn("converged", F.lit(True))
     )
 
 

@@ -24,6 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.hashing import bloom_build, bloom_probe, shingle_hashes
+from ..functions.textstats import simhash_expr
+
 #: Landing-zone document schema: the driver `documents` columns plus the
 #: ingest event time the watermark rides on.
 DOC_STREAM_SCHEMA = T.StructType(
@@ -44,37 +47,6 @@ def read_document_stream(
     spark: SparkSession, landing_dir: str, schema: T.StructType = DOC_STREAM_SCHEMA
 ) -> DataFrame:
     return spark.readStream.schema(schema).json(landing_dir)
-
-
-def simhash_expr(text, bits: int):
-    """Per-row stateless twin of dd03's explode+groupBy simhash: ±1
-    votes per bit over distinct-token hashes, bit set where the vote is
-    positive. Integer sums are order-free, so this equals the batch
-    operator EXACTLY (gated in tests/test_streaming_corpus.py) — the
-    stream and a batch backfill can never sign the same text
-    differently. The hash array is bound as a lambda variable so the
-    tokenizer runs once per row, not once per bit (shingles lesson)."""
-    from ..functions.hashing import hmod
-    from ..functions.textstats import distinct_tokens
-
-    hs = F.transform(distinct_tokens(text), lambda t: hmod(t))
-
-    def _of(h_arr):
-        sim = None
-        for j in range(bits):
-            vote = F.aggregate(
-                h_arr,
-                F.lit(0),
-                lambda acc, h: acc
-                + F.when(
-                    F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1),
-            )
-            term = F.when(vote > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            sim = term if sim is None else sim + term
-        return sim.cast("bigint")
-
-    return F.element_at(F.transform(F.array(hs), _of), 1)
 
 
 def _curated_projection(
@@ -170,9 +142,10 @@ def neardup_curated_stream(
     where ``curated_stream`` only catches byte-identical re-ingests
     while the batch side has five near-dup families.
 
-    Shape: the stateless projection signs each doc (``simhash_expr`` —
-    bit-exact with batch dd03), the signature is sliced into dd08's
-    ``max_hamming + 1`` pigeonhole bands (shared ``_band_slices``), and
+    Shape: the stateless projection signs each doc with
+    ``simhash_expr`` (the function batch dd03 runs), the signature is
+    sliced into dd08's ``max_hamming + 1`` pigeonhole bands (shared
+    ``_band_slices``), and
     each (band, key) bucket runs a custom stateful operator
     (``applyInPandasWithState``): state is the bucket's recent
     signatures + event times — a handful of ints, never text. A doc is
@@ -413,86 +386,16 @@ def start_ingest_query(
 # ---------------------------------------------------------------------------
 
 
-def _shingle_hash_stream(docs: DataFrame) -> DataFrame:
-    """Per-doc DISTINCT shingle hashes — dd12's probe projection, shared
-    verbatim so the stream and the batch pipeline can never disagree on
-    what counts as a seen shingle."""
-    from ..functions.hashing import hmod
-    from ..functions.textstats import shingles, tokens
-
-    return (
-        docs.select("doc_id", shingles(tokens(F.col("text"))).alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select("doc_id", F.explode("sh").alias("s"))
-        .select("doc_id", hmod(F.col("s")).alias("h"))
-    )
-
-
-def _bloom_word_rows(sh: DataFrame) -> DataFrame:
-    """Collapse shingle hashes to the ≤``_BLOOM_WORDS`` (word, bits)
-    table — dd12's build stage (4 Carter-Wegman probes, 63 usable bits
-    per BIGINT word, map-side partial bit_or)."""
-    from ..functions.hashing import seeded
-    from ..plans.training_queries import _BLOOM_BITS, _BLOOM_K
-
-    j = F.explode(F.array(*[F.lit(i) for i in range(_BLOOM_K)])).alias("j")
-    pos = (seeded(F.col("h"), F.col("j")) % _BLOOM_BITS).alias("pos")
-    return (
-        sh.select("h", j)
-        .select(pos)
-        .select(
-            F.expr("pos DIV 63").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))"
-            ).alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
-
-
 def _probe_against_bloom(
     sh: DataFrame, bloom: DataFrame, dup_max: float
 ) -> DataFrame:
-    """Per-doc verdict from probing shingle hashes against a bloom word
-    table: shingle count, seen count (all ``_BLOOM_K`` probe bits set),
-    seen ratio, and the dup flag at cp03's threshold. The word table is
-    hard-capped at ``_BLOOM_WORDS`` rows, so its broadcast hint is safe
-    a priori (the one hint class the r09 rule allows)."""
-    from ..functions.hashing import seeded
-    from ..plans.training_queries import _BLOOM_BITS, _BLOOM_K
-
-    j = F.explode(F.array(*[F.lit(i) for i in range(_BLOOM_K)])).alias("j")
-    pos = (seeded(F.col("h"), F.col("j")) % _BLOOM_BITS).alias("pos")
-    probe = (
-        sh.select("doc_id", "h", j)
-        .select("doc_id", "h", pos)
-        .select(
-            "doc_id",
-            "h",
-            F.expr("pos DIV 63").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))"
-            ).alias("mask"),
-        )
-    )
-    hitbits = probe.join(F.broadcast(bloom), "word", "left").select(
-        "doc_id",
-        "h",
-        F.when(
-            F.col("bits").isNotNull()
-            & ((F.col("bits").bitwiseAND(F.col("mask"))) == F.col("mask")),
-            1,
-        )
-        .otherwise(0)
-        .alias("hit"),
-    )
-    persh = hitbits.groupBy("doc_id", "h").agg(
-        F.when(F.sum("hit") == _BLOOM_K, 1).otherwise(0).alias("seen")
-    )
+    """Per-doc verdict from probing (doc_id, h) shingle hashes against a
+    bloom word table with the shared ``bloom_probe``: shingle count,
+    seen count, seen ratio, and the dup flag at ``dup_max``."""
     ratio = F.col("n_seen").cast("double") / F.col("n_sh")
     return (
-        persh.groupBy("doc_id")
+        bloom_probe(sh, bloom, "doc_id")
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_sh"),
             F.sum("seen").cast("bigint").alias("n_seen"),
@@ -568,7 +471,8 @@ def start_bloom_ingest_query(
     to the batch pipeline (cp03), same split as the reference's
     cron-vs-backfill design.
 
-    The verdicts are dd12's exactly: same shingle/hash/probe exprs,
+    The verdicts are dd12's exactly: the same ``shingle_hashes``,
+    ``bloom_build`` and ``bloom_probe`` (``functions/hashing``), the
     same ``_CP03_DUP_MAX`` default threshold — gated against the batch
     operator in tests/test_streaming_bloom.py."""
     from ..plans.training_queries import _CP03_DUP_MAX
@@ -578,7 +482,7 @@ def start_bloom_ingest_query(
 
     def _sink(batch_df, batch_id):
         session = batch_df.sparkSession
-        sh = _shingle_hash_stream(batch_df)
+        sh = shingle_hashes(batch_df, "doc_id")
         bloom = read_bloom_state(session, state_dir)
         # materialize the verdicts BEFORE the state merge (ADVICE r09):
         # the probe plan lazily scans the state version it was built
@@ -591,13 +495,13 @@ def start_bloom_ingest_query(
         )
         sink(verdicts, batch_id)
         # fold the batch's bits into the word table: bounded collect
-        # (≤ _BLOOM_WORDS + batch words rows), idempotent bit_or merge,
+        # (≤ 2 × 4,096 word rows), idempotent bit_or merge,
         # committed as a fresh state VERSION (crash mid-write leaves the
         # previous version readable — see _write_bloom_state)
         merged: dict[int, int] = {
             int(r["word"]): int(r["bits"]) for r in bloom.collect()
         }
-        for r in _bloom_word_rows(sh).collect():
+        for r in bloom_build(sh).collect():
             w = int(r["word"])
             merged[w] = merged.get(w, 0) | int(r["bits"])
         if merged:
@@ -623,7 +527,7 @@ def seed_bloom_state(spark: SparkSession, docs: DataFrame, state_dir: str) -> No
     its snapshot; this writes it where the continuous query reads),
     committed as version 0 of the versioned state layout."""
     _write_bloom_state(
-        spark, _bloom_word_rows(_shingle_hash_stream(docs)), state_dir
+        spark, bloom_build(shingle_hashes(docs, "doc_id")), state_dir
     )
 
 

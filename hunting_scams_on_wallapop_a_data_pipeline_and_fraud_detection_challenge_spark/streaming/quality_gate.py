@@ -140,7 +140,7 @@ def _merge_key_state(
     """Fold this batch's key bits into the bloom state (idempotent
     bit_or, bounded collect — ST9's merge) behind the applied_bid
     fence, committed crash-safely as the next version."""
-    from .corpus_ingest import _bloom_word_rows
+    from ..functions.hashing import bloom_build
     from .state import read_latest_state, write_next_state
 
     state = read_latest_state(spark, state_dir, _UNIQUE_STATE_SCHEMA)
@@ -154,7 +154,7 @@ def _merge_key_state(
         for r in state.collect()
         if r["word"] is not None
     }
-    for r in _bloom_word_rows(_key_hashes(rows)).collect():
+    for r in bloom_build(_key_hashes(rows)).collect():
         w = int(r["word"])
         merged[w] = merged.get(w, 0) | int(r["bits"])
     write_next_state(

@@ -136,7 +136,7 @@ def test_stream_simhash_matches_batch_dd03(spark):
         _SIMHAM_SIG_BITS,
         dd03_simhash,
     )
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.streaming.corpus_ingest import (
+    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.functions.textstats import (
         simhash_expr,
     )
     from pyspark.sql import functions as F
