@@ -14,8 +14,9 @@ bit-for-bit. Derived hash families use Carter-Wegman style
 inside BIGINT (max ~2^36) with no overflow in either engine.
 
 The module also holds the one Bloom filter over shingle hashes
-(``shingle_hashes`` → ``bloom_build`` / ``bloom_probe``) that dd12,
-cp03 and the streaming ingest and quality gates share.
+(``shingle_hashes`` → ``bloom_build`` / ``bloom_merge`` /
+``bloom_probe``) that dd12, cp03 and the streaming ingest and quality
+gates share.
 
 Scale note: md5-per-value is heavier than xxhash64, but it stays inside
 whole-stage codegen (no Python), is branch-free, and the hash cost is
@@ -111,6 +112,12 @@ def bloom_build(hashes: DataFrame) -> DataFrame:
         .groupBy("word")
         .agg(F.bit_or("mask").alias("bits"))
     )
+
+
+def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """The union of two (word, bits) tables, OR-folded by word — the
+    merge of two Bloom filters over the same geometry."""
+    return a.unionByName(b).groupBy("word").agg(F.bit_or("bits").alias("bits"))
 
 
 def bloom_probe(hashes: DataFrame, bloom: DataFrame, *keys: str) -> DataFrame:

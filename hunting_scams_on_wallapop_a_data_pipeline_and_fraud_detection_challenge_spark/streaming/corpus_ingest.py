@@ -9,11 +9,17 @@ re-ingests with ``dropDuplicatesWithinWatermark`` on the content
 fingerprint. This is cp01's front half (dedup + quality) running
 continuously instead of as a batch pass.
 
-Scale: the only state is the fingerprint-dedupe map, bounded by the
-watermark horizon and partitioned by fingerprint — no global state, so
-the job scales linearly with executors. The dedupe key is the same
+Scale: the exact and near-dup stages keep only watermark-bounded
+state partitioned by fingerprint or signature band — no global state,
+so they scale linearly with executors. The dedupe key is the same
 ``md5(lower(trim(text)))`` cp01/dd01 use, so batch backfills and the
 stream can never disagree about what counts as a duplicate.
+
+The bloom-delta stream (ST9, ``start_bloom_ingest_query``) is the one
+stage with global state: a ≤4,096-word Bloom table kept in
+streaming/state.py's versioned store and folded through its fenced
+cycle, so a replayed batch reproduces its verdicts and commits
+nothing.
 """
 
 from __future__ import annotations
@@ -24,8 +30,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.hashing import bloom_build, bloom_probe, shingle_hashes
+from ..functions.hashing import (
+    bloom_build,
+    bloom_merge,
+    bloom_probe,
+    shingle_hashes,
+)
 from ..functions.textstats import simhash_expr
+from .state import fold_state, read_state, state_before, write_next_state
 
 #: Landing-zone document schema: the driver `documents` columns plus the
 #: ingest event time the watermark rides on.
@@ -41,6 +53,10 @@ DOC_STREAM_SCHEMA = T.StructType(
 
 #: How long a fingerprint stays deduplicable — bounds the state store.
 DEDUPE_HORIZON = "1 hour"
+
+#: The bloom state (ST9, and ST13's key bloom): the ≤4,096-row (word,
+#: bits) table plus state.py's replay fence.
+BLOOM_STATE_SCHEMA = "word BIGINT, bits BIGINT, applied_bid BIGINT"
 
 
 def read_document_stream(
@@ -410,32 +426,10 @@ def _probe_against_bloom(
     )
 
 
-def _bloom_state_versions(spark: SparkSession, state_dir: str) -> list[int]:
-    """COMMITTED bloom-state versions — the shared versioned-state
-    commit protocol (streaming/state.py; factored out in r11 so ST14's
-    maintained view rides the same contract this module established in
-    r10 under ADVICE r09)."""
-    from .state import committed_versions
-
-    return committed_versions(spark, state_dir)
-
-
 def read_bloom_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The newest COMMITTED (word, bits) bloom table, or an empty one
-    when no version has ever committed (streaming/state.py's reader —
-    a version is visible only once its ``_SUCCESS`` marker exists)."""
-    from .state import read_latest_state
-
-    return read_latest_state(spark, state_dir, "word BIGINT, bits BIGINT")
-
-
-def _write_bloom_state(spark: SparkSession, df: DataFrame, state_dir: str) -> None:
-    """Commit ``df`` as the next bloom-state version, crash-safely
-    (streaming/state.py's writer: fresh ``v=<latest+1>`` path, atomic
-    reader-visible switch, prune-keeps-predecessor)."""
-    from .state import write_next_state
-
-    write_next_state(spark, df, state_dir)
+    when no version has ever committed."""
+    return read_state(spark, state_dir, BLOOM_STATE_SCHEMA)
 
 
 def start_bloom_ingest_query(
@@ -455,21 +449,20 @@ def start_bloom_ingest_query(
     on-disk word table so later batches see them.
 
     State is the ≤4,096-row (word, bits) table under ``state_dir``,
-    stored as monotonically-versioned ``v=<n>`` commits — trivially
-    bounded regardless of ingest volume (the whole point of the bloom:
-    per-batch state I/O is kilobytes at any corpus size). Two distinct
-    guarantees (ADVICE r09 separated them): REPLAY safety comes from
-    the merge being a pure idempotent ``bit_or`` — a batch replayed
-    after a crash re-ORs the same bits; CRASH safety comes from the
-    versioned layout — each merge commits to a fresh ``v=<n+1>``
-    directory and readers only open directories with a ``_SUCCESS``
-    marker, so a crash mid-write can never destroy the previous state
-    (see :func:`_write_bloom_state`). Output exactly-once comes from
-    the checkpointed source offsets like every other ingest query
-    here. Within-batch duplicates do NOT flag each other (the batch's
-    bits land only after its verdicts) — that intra-delta diff belongs
-    to the batch pipeline (cp03), same split as the reference's
-    cron-vs-backfill design.
+    folded by ``bloom_merge`` through streaming/state.py's fenced
+    cycle — trivially bounded regardless of ingest volume (per-batch
+    state I/O is kilobytes at any corpus size). CRASH safety comes from
+    the versioned layout: a crash mid-write leaves the previous version
+    readable. REPLAY safety needs the fence, not just the idempotent
+    ``bit_or``: a batch replayed after a crash between the state commit
+    and the streaming commit log probes ``state_before`` its own id —
+    the version its verdicts were first computed against — so its docs
+    are never flagged as duplicates of themselves, and the fenced fold
+    commits nothing. Output exactly-once comes from the checkpointed
+    source offsets like every other ingest query here. Within-batch
+    duplicates do NOT flag each other (the batch's bits land only after
+    its verdicts) — that intra-delta diff belongs to the batch pipeline
+    (cp03), same split as the reference's cron-vs-backfill design.
 
     The verdicts are dd12's exactly: the same ``shingle_hashes``,
     ``bloom_build`` and ``bloom_probe`` (``functions/hashing``), the
@@ -483,7 +476,7 @@ def start_bloom_ingest_query(
     def _sink(batch_df, batch_id):
         session = batch_df.sparkSession
         sh = shingle_hashes(batch_df, "doc_id")
-        bloom = read_bloom_state(session, state_dir)
+        bloom = state_before(session, state_dir, batch_id, BLOOM_STATE_SCHEMA)
         # materialize the verdicts BEFORE the state merge (ADVICE r09):
         # the probe plan lazily scans the state version it was built
         # against, so an un-materialized DataFrame re-evaluated by the
@@ -494,24 +487,14 @@ def start_bloom_ingest_query(
             eager=True
         )
         sink(verdicts, batch_id)
-        # fold the batch's bits into the word table: bounded collect
-        # (≤ 2 × 4,096 word rows), idempotent bit_or merge,
-        # committed as a fresh state VERSION (crash mid-write leaves the
-        # previous version readable — see _write_bloom_state)
-        merged: dict[int, int] = {
-            int(r["word"]): int(r["bits"]) for r in bloom.collect()
-        }
-        for r in bloom_build(sh).collect():
-            w = int(r["word"])
-            merged[w] = merged.get(w, 0) | int(r["bits"])
-        if merged:
-            _write_bloom_state(
-                session,
-                session.createDataFrame(
-                    sorted(merged.items()), "word BIGINT, bits BIGINT"
-                ),
-                state_dir,
-            )
+        fold_state(
+            session,
+            state_dir,
+            batch_id,
+            BLOOM_STATE_SCHEMA,
+            bloom_build(sh),
+            bloom_merge,
+        )
 
     writer = stream.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", checkpoint_dir
@@ -525,9 +508,14 @@ def seed_bloom_state(spark: SparkSession, docs: DataFrame, state_dir: str) -> No
     """Lay down the historical corpus's bloom as the stream's starting
     state — the batch→stream handoff (cp03 builds the same table from
     its snapshot; this writes it where the continuous query reads),
-    committed as version 0 of the versioned state layout."""
-    _write_bloom_state(
-        spark, bloom_build(shingle_hashes(docs, "doc_id")), state_dir
+    committed as the next state version with a NULL fence: an unfenced
+    seed, which the next streamed batch folds into."""
+    write_next_state(
+        spark,
+        bloom_build(shingle_hashes(docs, "doc_id")).withColumn(
+            "applied_bid", F.lit(None).cast("bigint")
+        ),
+        state_dir,
     )
 
 

@@ -6,20 +6,15 @@ stored view — the cdc02-shaped change feed (insert / delete; an update
 travels as one retraction plus one insertion, the ivm02 rule) absorbed
 continuously.
 
-The view lives in the shared crash-safe versioned state store
-(streaming/state.py — ST9's ``v=<n>`` + ``_SUCCESS`` commit protocol):
-each batch reads the newest committed view, merges by plain addition
-(the Chan-identity merge, closed under subtraction because the
-partials are EXACT integers — the ivm02 argument), drops keys whose
-count reaches zero, and commits the next version. A crash mid-commit
-leaves the previous view intact. Because ``foreachBatch`` is
-at-least-once (a crash BETWEEN the state commit and the streaming
-commit-log write replays the batch) and a signed sum — unlike ST9's
-idempotent ``bit_or`` — would double-fold a replayed delta, every
-committed version carries the id of the last batch folded into it
-(``applied_bid``, on every row plus a NULL-key sentinel row so it
-survives an empty view): ``merge_batch`` no-ops on any batch id at or
-below the stored one, making the fold idempotent under replay.
+The view lives in the shared crash-safe versioned state store and
+folds through its one fenced cycle (streaming/state.py's
+``fold_state``): each batch's signed partials are added to the stored
+view (the Chan-identity merge, closed under subtraction because the
+partials are EXACT integers — the ivm02 argument), keys whose count
+reaches zero are dropped, and the next version commits. A signed sum
+would double-fold a replayed delta, so the store's ``applied_bid``
+fence makes a replayed batch (foreachBatch is at-least-once) fold
+nothing.
 
 Parity (pinned in tests/test_streaming_ivm.py): after any sequence of
 batches, the view equals a DIRECT recompute over the logical current
@@ -29,26 +24,19 @@ continuously.
 Scale shape (100 TB/day ingest): per batch ONE map-side-combinable
 signed aggregate over the delta (delta-sized, never history-sized) +
 one keyed merge against the view; no history scan ever happens after
-the first load. Two store layouts:
+the first load. Two store layouts share the one signed-sum merge
+(``_merge_view``):
 
 - ``n_buckets=None`` (default): the whole view is one versioned table
   — the single-file test shape, full-view rewrite per batch.
-- ``n_buckets=B`` (VERDICT r11 item 4 — the named production variant):
-  the view is KEY-BUCKETED, ``state_dir/bucket=<k>`` each an
-  independently versioned store under the same state.py commit
-  protocol. The bucket of a key is the pinned portable hash
-  (``h32(key) % B`` — stable across versions and engines), so a key's
-  state never moves buckets, the per-bucket merge touches ONLY that
-  bucket's keys (co-located by construction), and — the property that
-  makes it the 100 TB shape — a batch rewrites ONLY its DIRTY buckets:
-  per-batch state I/O is proportional to the delta's key spread, not
-  the view size. Each bucket carries its own ``applied_bid`` fence, so
-  replay (foreachBatch is at-least-once) folds each bucket exactly
-  once even when a crash interrupted a multi-bucket commit; Structured
-  Streaming replays the interrupted batch BEFORE any new one, so a
-  partially-committed batch always completes before more data folds —
-  cross-bucket consistency is restored at recovery, per-bucket
-  exactness never breaks (pinned in tests/test_streaming_ivm.py).
+- ``n_buckets=B`` (the production variant): the view is KEY-BUCKETED
+  through ``state.fold_bucketed`` — ``state_dir/bucket=<k>`` stores,
+  a key's bucket pinned by the portable hash, and a batch rewrites
+  ONLY its dirty buckets, so per-batch state I/O is proportional to
+  the delta's key spread, not the view size. Each bucket carries its
+  own fence, so a replay folds each bucket exactly once even when a
+  crash interrupted a multi-bucket commit (pinned in
+  tests/test_streaming_ivm.py).
 """
 
 from __future__ import annotations
@@ -57,16 +45,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .state import read_latest_state, write_next_state
+from .state import fold_bucketed, fold_state, read_bucketed, read_state
 
 #: change-feed landing schema: op is 'I' (insert) or 'D' (delete);
 #: an UPDATE is a ('D', old value) + ('I', new value) row pair
 CHANGE_SCHEMA = "user_id long, event_id long, op string, value double"
 
-#: the stored view: exact integer moments per key, plus the replay
-#: fence (the id of the last batch folded in — constant per version;
-#: a NULL-key sentinel row keeps it present even when the view itself
-#: is empty)
+#: the stored view: exact integer moments per key, plus state.py's
+#: replay fence
 VIEW_SCHEMA = (
     "user_id BIGINT, n BIGINT, s BIGINT, s2 BIGINT, applied_bid BIGINT"
 )
@@ -111,167 +97,48 @@ def signed_partials(df: DataFrame) -> DataFrame:
     )
 
 
-def merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
-    """Fold one micro-batch into the stored view: read the newest
-    committed view, NO-OP if ``batch_id`` was already folded (the
-    replay fence — foreachBatch is at-least-once), otherwise add the
-    batch's signed partials (union + keyed sum — the plan shape
-    ivm01/ivm02 pin), drop zero-count keys, and commit the next
-    version crash-safely with the fence advanced."""
-    spark = batch_df.sparkSession
-    state = read_latest_state(spark, state_dir, VIEW_SCHEMA)
-    applied = state.agg(F.max("applied_bid")).collect()[0][0]
-    if applied is not None and batch_id <= applied:
-        return  # replayed batch: already folded into a committed view
-    view = state.filter(F.col("user_id").isNotNull()).select(
-        "user_id", "n", "s", "s2"
-    )
-    merged = (
-        view.unionByName(signed_partials(batch_df))
+def _merge_view(view: DataFrame, partials: DataFrame) -> DataFrame:
+    """The signed-sum merge: union + keyed sum (the plan shape
+    ivm01/ivm02 pin); a key whose rows were all retracted leaves the
+    view — the view holds live keys only."""
+    return (
+        view.unionByName(partials)
         .groupBy("user_id")
         .agg(
             F.sum("n").cast("bigint").alias("n"),
             F.sum("s").cast("bigint").alias("s"),
-            F.sum(F.col("s2")).cast("bigint").alias("s2"),
+            F.sum("s2").cast("bigint").alias("s2"),
         )
-        # a key whose rows were all retracted leaves the view — the
-        # view holds live keys only
         .filter(F.col("n") != 0)
     )
-    sentinel = spark.createDataFrame(
-        [(None, 0, 0, 0, batch_id)], VIEW_SCHEMA
-    )
-    write_next_state(
-        spark,
-        merged.withColumn(
-            "applied_bid", F.lit(batch_id).cast("bigint")
-        ).unionByName(sentinel),
+
+
+def merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
+    """Fold one micro-batch's signed partials into the single-table
+    view through the fenced cycle."""
+    fold_state(
+        batch_df.sparkSession,
         state_dir,
+        batch_id,
+        VIEW_SCHEMA,
+        signed_partials(batch_df),
+        _merge_view,
     )
-
-
-def key_bucket(col, n_buckets: int):
-    """The pinned bucket of a view key: the shared portable hash mod
-    B — deterministic across versions, sessions and engines, so a
-    key's state can never migrate between bucket stores."""
-    from ..functions.hashing import h32
-
-    return (h32(col.cast("string")) % n_buckets).cast("int")
-
-
-def fold_bucketed(
-    spark: SparkSession,
-    partials: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    schema: str,
-    key_cols: list[str],
-    merge_aggs: list,
-    post_filter=None,
-) -> None:
-    """THE fence-checked bucketed merge cycle, shared by every
-    bucketed foreachBatch state (ST14's view merge, ST15's sketch
-    folds): ``partials`` arrive with a ``bucket`` column (already
-    materialized delta-sized by the caller), the dirty-bucket list is
-    a bounded collect (<= B rows), and each dirty bucket runs the
-    fence-checked read-merge-commit against its own
-    ``state_dir/bucket=<k>`` versioned store — clean buckets do ZERO
-    I/O, replayed batches fold nothing twice (each bucket carries its
-    own ``applied_bid`` fence on every row plus a NULL-key sentinel so
-    it survives an empty store). ``merge_aggs`` is the state's merge
-    algebra (signed SUM for the view, MAX/ADD for the sketches);
-    ``post_filter`` optionally drops dead keys after the merge (the
-    view's ``n != 0`` rule). The sentinel's arity comes from the
-    PARSED schema (field count), never from naive text splitting, so
-    comma-bearing types (DECIMAL(10,2), structs) stay safe."""
-    dirty = sorted(
-        r["bucket"] for r in partials.select("bucket").distinct().collect()
-    )
-    fence_key = key_cols[0]
-    n_fields = len(spark.createDataFrame([], schema).schema.fields)
-    for b in dirty:
-        bucket_dir = f"{state_dir}/bucket={b}"
-        state = read_latest_state(spark, bucket_dir, schema)
-        applied = state.agg(F.max("applied_bid")).collect()[0][0]
-        if applied is not None and batch_id <= applied:
-            continue  # this bucket already folded the replayed batch
-        view = state.filter(F.col(fence_key).isNotNull()).drop("applied_bid")
-        merged = (
-            view.unionByName(
-                partials.filter(F.col("bucket") == b).drop("bucket")
-            )
-            .groupBy(*key_cols)
-            .agg(*merge_aggs)
-        )
-        if post_filter is not None:
-            merged = merged.filter(post_filter)
-        sentinel = spark.createDataFrame(
-            [tuple([None] * n_fields)], schema
-        ).withColumn("applied_bid", F.lit(batch_id).cast("bigint"))
-        write_next_state(
-            spark,
-            merged.withColumn(
-                "applied_bid", F.lit(batch_id).cast("bigint")
-            ).unionByName(sentinel),
-            bucket_dir,
-        )
-
-
-def read_bucketed(
-    spark: SparkSession, state_dir: str, schema: str, n_buckets: int
-) -> DataFrame:
-    """A bucketed state across all bucket stores (sentinel rows
-    INCLUDED — callers filter their own fence key): the union of each
-    bucket's newest committed version — a never-written bucket reads
-    as empty."""
-    out = None
-    for b in range(n_buckets):
-        part = read_latest_state(spark, f"{state_dir}/bucket={b}", schema)
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def merge_batch_bucketed(
     batch_df: DataFrame, batch_id: int, state_dir: str, n_buckets: int
 ) -> None:
     """The bucketed production merge: fold one micro-batch into ONLY
-    the bucket stores its keys touch — the delta's signed partials are
-    materialized once (delta-sized localCheckpoint) and run through
-    the shared ``fold_bucketed`` cycle with the view's signed-SUM
-    algebra and the dead-key drop."""
-    spark = batch_df.sparkSession
-    partials = (
-        signed_partials(batch_df)
-        .withColumn("bucket", key_bucket(F.col("user_id"), n_buckets))
-        .localCheckpoint(eager=True)
-    )
+    the bucket stores its keys touch."""
     fold_bucketed(
-        spark,
-        partials,
-        batch_id,
+        batch_df.sparkSession,
         state_dir,
+        batch_id,
         VIEW_SCHEMA,
-        ["user_id"],
-        [
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("s").cast("bigint").alias("s"),
-            F.sum("s2").cast("bigint").alias("s2"),
-        ],
-        # a key whose rows were all retracted leaves the view — the
-        # view holds live keys only
-        post_filter=F.col("n") != 0,
-    )
-
-
-def read_bucketed_view(
-    spark: SparkSession, state_dir: str, n_buckets: int
-) -> DataFrame:
-    """The maintained view across all bucket stores (sentinels
-    excluded)."""
-    return (
-        read_bucketed(spark, state_dir, VIEW_SCHEMA, n_buckets)
-        .filter(F.col("user_id").isNotNull())
-        .select("user_id", "n", "s", "s2")
+        signed_partials(batch_df),
+        _merge_view,
+        n_buckets,
     )
 
 
@@ -306,18 +173,16 @@ def start_view_maintenance(
 def view_stats(
     spark: SparkSession, state_dir: str, n_buckets: int | None = None
 ) -> DataFrame:
-    """The maintained view (sentinel row excluded) with derived
-    mean/variance — the ivm02 fixed-order double derivations from the
-    exact integer moments, through the shared ``_r`` rounding rule
-    (one epsilon policy with the batch twin)."""
+    """The maintained view with derived mean/variance — the ivm02
+    fixed-order double derivations from the exact integer moments,
+    through the shared ``_r`` rounding rule (one epsilon policy with
+    the batch twin)."""
     from ..plans.queries import _r
 
     if n_buckets is None:
-        v = read_latest_state(spark, state_dir, VIEW_SCHEMA).filter(
-            F.col("user_id").isNotNull()
-        )
+        v = read_state(spark, state_dir, VIEW_SCHEMA)
     else:
-        v = read_bucketed_view(spark, state_dir, n_buckets)
+        v = read_bucketed(spark, state_dir, VIEW_SCHEMA, n_buckets)
     mean = F.col("s").cast("double") / F.col("n") / 100.0
     var = (
         (F.col("s2") - F.col("s").cast("double") * F.col("s") / F.col("n"))

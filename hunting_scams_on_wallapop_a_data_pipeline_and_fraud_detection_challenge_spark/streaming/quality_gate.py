@@ -33,17 +33,17 @@ Semantics (documented, not hidden):
   then the batch's own accepted keys fold in — a quarantined row's key
   stays available, so a corrected resubmission of a rejected order is
   admitted rather than re-quarantined as a duplicate of its own
-  rejected attempt — the same ≤4,096-word (word, bits) table, the
-  same shared versioned commit protocol (streaming/state.py), plus an
-  ``applied_bid`` fence so a replayed batch (foreachBatch is
-  at-least-once) probes the PREDECESSOR version its verdicts were
-  originally computed against — replay-stable verdicts, not just
-  replay-safe state. Bounded state buys approximation: a saturating
-  bloom can FALSELY flag a fresh key (quarantining it — the
-  conservative direction; a true duplicate is never admitted), at a
-  rate set by the fill factor — the documented bloom contract; exact
-  global uniqueness at scale is ST10's watermarked
-  dropDuplicates or a key-bucketed exact state (ivm.py's store).
+  rejected attempt — the same ≤4,096-word (word, bits) table and the
+  same fenced fold cycle as ST9 (streaming/state.py): a replayed batch
+  (foreachBatch is at-least-once) probes ``state_before`` its own id,
+  the version its verdicts were originally computed against —
+  replay-stable verdicts, not just replay-safe state. Bounded state
+  buys approximation: a saturating bloom can FALSELY flag a fresh key
+  (quarantining it — the conservative direction; a true duplicate is
+  never admitted), at a rate set by the fill factor — the documented
+  bloom contract; exact global uniqueness at scale is ST10's
+  watermarked dropDuplicates or a key-bucketed exact state
+  (``state.fold_bucketed``).
 - The ledger row (batch_id, rule, n_checked, n_violations, pass) per
   rule per batch equals dq02's orders legs evaluated on that batch's
   rows — the parity pin.
@@ -66,6 +66,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from ..functions.hashing import bloom_build, bloom_merge, hmod
+from .corpus_ingest import BLOOM_STATE_SCHEMA, _probe_against_bloom
+from .state import fold_state, state_before
+
 #: landing-file schema: the orders columns the rule suite consumes
 ORDERS_SCHEMA = (
     "o_orderkey long, o_custkey long, o_orderstatus string,"
@@ -82,10 +86,6 @@ def read_orders_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
 #: the extra ledger rule the opt-in global-uniqueness leg reports
 GLOBAL_UNIQUE_RULE = "orders_orderkey_unique_global"
 
-#: key-bloom state schema: ST9's (word, bits) table plus the replay
-#: fence (constant per committed version — the ST14 pattern)
-_UNIQUE_STATE_SCHEMA = "word BIGINT, bits BIGINT, applied_bid BIGINT"
-
 _LEDGER_SCHEMA = (
     "batch_id BIGINT, rule STRING, n_checked BIGINT,"
     " n_violations BIGINT, pass BOOLEAN"
@@ -95,76 +95,22 @@ _LEDGER_SCHEMA = (
 def _key_hashes(rows: DataFrame) -> DataFrame:
     """Per-row (doc_id=orderkey, h) probe rows for ST9's bloom
     machinery — one hash per key through the shared portable hash."""
-    from ..functions.hashing import hmod
-
     return rows.filter(F.col("o_orderkey").isNotNull()).select(
         F.col("o_orderkey").alias("doc_id"),
         hmod(F.col("o_orderkey").cast("string")).alias("h"),
     )
 
 
-def _probe_version(spark: SparkSession, state_dir: str, batch_id: int):
-    """The newest committed key-bloom version whose fence PRECEDES
-    ``batch_id`` — on a replay (foreachBatch is at-least-once) this is
-    the predecessor version the original verdicts were computed
-    against (the store keeps exactly one predecessor), so replayed
-    rows cannot self-flag against their own merged keys."""
-    from .state import committed_versions
-
-    for v in reversed(committed_versions(spark, state_dir)):
-        df = spark.read.parquet(f"{state_dir}/v={v}")
-        applied = df.agg(F.max("applied_bid")).collect()[0][0]
-        if applied is None or applied < batch_id:
-            return df.select("word", "bits"), applied
-    return spark.createDataFrame([], "word BIGINT, bits BIGINT"), None
-
-
 def _seen_keys(
     rows: DataFrame, spark: SparkSession, state_dir: str, batch_id: int
 ) -> DataFrame:
     """(o_orderkey, v_seen) for keys already ADMITTED by PRIOR batches,
-    by probing ST9's bloom word table (lazy import — one probe/build
-    definition with the corpus-ingest gate)."""
-    from .corpus_ingest import _probe_against_bloom
-
-    bloom, _ = _probe_version(spark, state_dir, batch_id)
+    by probing ST9's bloom word table (one probe definition with the
+    corpus-ingest gate)."""
+    bloom = state_before(spark, state_dir, batch_id, BLOOM_STATE_SCHEMA)
     return _probe_against_bloom(_key_hashes(rows), bloom, 1.0).select(
         F.col("doc_id").alias("o_orderkey"),
         F.col("dup_flag").alias("v_seen"),
-    )
-
-
-def _merge_key_state(
-    rows: DataFrame, spark: SparkSession, state_dir: str, batch_id: int
-) -> None:
-    """Fold this batch's key bits into the bloom state (idempotent
-    bit_or, bounded collect — ST9's merge) behind the applied_bid
-    fence, committed crash-safely as the next version."""
-    from ..functions.hashing import bloom_build
-    from .state import read_latest_state, write_next_state
-
-    state = read_latest_state(spark, state_dir, _UNIQUE_STATE_SCHEMA)
-    applied = state.agg(F.max("applied_bid")).collect()[0][0]
-    if applied is not None and batch_id <= applied:
-        return  # replayed batch: its keys are already in a committed version
-    # a keyless batch commits a (NULL, NULL, batch_id) sentinel so the
-    # fence still advances — skip it when rebuilding the word dict
-    merged: dict[int, int] = {
-        int(r["word"]): int(r["bits"])
-        for r in state.collect()
-        if r["word"] is not None
-    }
-    for r in bloom_build(_key_hashes(rows)).collect():
-        w = int(r["word"])
-        merged[w] = merged.get(w, 0) | int(r["bits"])
-    write_next_state(
-        spark,
-        spark.createDataFrame(
-            [(w, b, batch_id) for w, b in sorted(merged.items())]
-            or [(None, None, batch_id)],
-            _UNIQUE_STATE_SCHEMA,
-        ),
-        state_dir,
     )
 
 
@@ -264,8 +210,13 @@ def gate_batch(
         # that corrects and resubmits a rejected order is let through
         # instead of being permanently re-quarantined as a "duplicate"
         # of its own rejected attempt
-        _merge_key_state(
-            flagged.filter("NOT bad"), spark, unique_state_dir, batch_id
+        fold_state(
+            spark,
+            unique_state_dir,
+            batch_id,
+            BLOOM_STATE_SCHEMA,
+            bloom_build(_key_hashes(flagged.filter("NOT bad"))),
+            bloom_merge,
         )
 
 

@@ -15,12 +15,11 @@ dedup (a re-observed item keeps its best draw and ONE slot) ->
 re-top-K -> commit. State is K rows FOREVER, per-batch work is
 delta-sized.
 
-The sample lives in the shared crash-safe versioned store
-(streaming/state.py) with ST14's ``applied_bid`` replay fence (on
-every row plus a NULL-key sentinel): the top-K fold is idempotent by
-itself (folding the same rows twice changes nothing), but the fence
-makes a replayed batch do ZERO I/O instead of committing an identical
-version — the ST15 HLL-store argument, and the same uniform cycle.
+The sample folds through the shared fenced cycle (streaming/state.py's
+``fold_state``): the top-K fold is idempotent by itself (folding the
+same rows twice changes nothing), but the ``applied_bid`` fence makes
+a replayed batch do ZERO I/O instead of committing an identical
+version — the ST15 HLL-store argument.
 
 Parity (pinned in tests/test_streaming_sample.py): after every batch
 the maintained sample equals the direct sk05-style top-K over
@@ -39,14 +38,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .state import read_latest_state, write_next_state
+from .state import fold_state, read_state
 
 #: item-feed landing schema: an id + a positive weight-bearing value
 #: (sampling probability proportional to its cents quantization)
 ITEM_SCHEMA = "item_id long, value double"
 
 #: the stored sample: the K surviving (id, weight, priority) rows +
-#: the ST14 replay fence (NULL-key sentinel keeps it on an empty store)
+#: state.py's replay fence
 SAMPLE_SCHEMA = "item_id BIGINT, w BIGINT, pk DOUBLE, applied_bid BIGINT"
 
 #: sample size — sk05's K by default
@@ -99,35 +98,27 @@ def batch_sample(df: DataFrame, k: int) -> DataFrame:
 
 
 def merge_sample(batch_df: DataFrame, batch_id: int, state_dir: str, k: int) -> None:
-    """Fold one micro-batch into the stored sample: fence-checked
-    read, union of the stored K rows with the delta's top-k, re-top-K
-    (the mergeability identity sk05 certifies), commit — the
-    merge_batch cycle on K-row state."""
-    spark = batch_df.sparkSession
-    state = read_latest_state(spark, state_dir, SAMPLE_SCHEMA)
-    applied = state.agg(F.max("applied_bid")).collect()[0][0]
-    if applied is not None and batch_id <= applied:
-        return  # replayed batch: already folded into a committed sample
-    view = state.filter(F.col("item_id").isNotNull()).select(
-        "item_id", "w", "pk"
-    )
-    # the per-item dedup runs on the union too: an item already in the
-    # stored sample and re-arriving in the delta must occupy ONE slot
-    # (upgrading to its best draw), never two
-    merged = (
-        _dedup_items(view.unionByName(batch_sample(batch_df, k)))
-        .orderBy(F.desc("pk"), "item_id")
-        .limit(k)
-    )
-    sentinel = spark.createDataFrame(
-        [(None, None, None, batch_id)], SAMPLE_SCHEMA
-    )
-    write_next_state(
-        spark,
-        merged.withColumn(
-            "applied_bid", F.lit(batch_id).cast("bigint")
-        ).unionByName(sentinel),
+    """Fold one micro-batch into the stored sample through the fenced
+    cycle: union of the stored K rows with the delta's top-k, re-top-K
+    (the mergeability identity sk05 certifies). The per-item dedup
+    runs on the union too: an item already in the stored sample and
+    re-arriving in the delta must occupy ONE slot (upgrading to its
+    best draw), never two."""
+
+    def top_k(stored: DataFrame, delta: DataFrame) -> DataFrame:
+        return (
+            _dedup_items(stored.unionByName(delta))
+            .orderBy(F.desc("pk"), "item_id")
+            .limit(k)
+        )
+
+    fold_state(
+        batch_df.sparkSession,
         state_dir,
+        batch_id,
+        SAMPLE_SCHEMA,
+        batch_sample(batch_df, k),
+        top_k,
     )
 
 
@@ -154,12 +145,9 @@ def start_sample_maintenance(
 
 
 def read_sample(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The maintained sample (sentinel excluded) with its rank — the
-    serving shape of sk05's verified rows."""
-    s = read_latest_state(spark, state_dir, SAMPLE_SCHEMA).filter(
-        F.col("item_id").isNotNull()
-    )
-    return s.select(
+    """The maintained sample with its rank — the serving shape of
+    sk05's verified rows."""
+    return read_state(spark, state_dir, SAMPLE_SCHEMA).select(
         F.expr(
             "CAST(row_number() OVER (ORDER BY pk DESC, item_id) AS BIGINT)"
         ).alias("sample_rank"),

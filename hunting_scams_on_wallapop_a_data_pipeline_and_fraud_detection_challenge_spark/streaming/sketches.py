@@ -1,9 +1,9 @@
 """Streaming sketch maintenance (ST15) — the canonical streaming
 sketch VERDICT r12 item 3 named: sk02/sk04's HLL registers and sk03's
 quantile-sketch bucket counts are MAINTAINED per micro-batch in the
-key-bucketed versioned state store (ST14's machinery — streaming/
-state.py's ``v=<n>`` + ``_SUCCESS`` commit protocol with dirty-bucket-
-only I/O), instead of being rebuilt from history.
+key-bucketed versioned state store (streaming/state.py's
+``fold_bucketed``: the fenced ``v=<n>`` + ``_SUCCESS`` commit cycle
+with dirty-bucket-only I/O), instead of being rebuilt from history.
 
 The two maintained states are exactly the mergeable register algebras
 their batch twins PROVE mergeable (sk02's ``merge_exact``, sk03's
@@ -19,12 +19,10 @@ their batch twins PROVE mergeable (sk02's ``merge_exact``, sk03's
   ``_sk03_bucket``, shared verbatim) absorbed per batch.
 
 Replay safety (foreachBatch is at-least-once): ADD is not idempotent,
-so every bucket store carries ST14's ``applied_bid`` fence (a NULL-key
-sentinel row keeps it present on an empty store) and a replayed batch
-no-ops per bucket. MAX would be idempotent by itself, but the HLL
-store carries the same fence anyway — a replay then does ZERO I/O
-instead of committing an identical version, and both stores share one
-uniform merge cycle.
+so both stores fold through state.py's fenced cycle and a replayed
+batch folds nothing per bucket. MAX would be idempotent by itself,
+but the fence makes a replay do ZERO I/O instead of committing an
+identical version.
 
 Parity (pinned in tests/test_streaming_sketches.py): after every
 batch, each maintained state equals the batch sketch computed directly
@@ -48,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from .ivm import fold_bucketed, key_bucket, read_bucketed
+from .state import fold_bucketed, read_bucketed
 
 #: event-feed landing schema: a keyed value stream — grp is the
 #: sketch group (HLL cardinality per grp), k the entity key counted
@@ -56,11 +54,11 @@ from .ivm import fold_bucketed, key_bucket, read_bucketed
 EVENT_SCHEMA = "grp string, k long, v double"
 
 #: maintained HLL register state (per bucket store): register-wise
-#: max rho per (group, register) + the ST14 replay fence
+#: max rho per (group, register) + state.py's replay fence
 HLL_SCHEMA = "grp STRING, reg BIGINT, m BIGINT, applied_bid BIGINT"
 
 #: maintained quantile-sketch state (per bucket store): count per
-#: log-bucket + the ST14 replay fence
+#: log-bucket + state.py's replay fence
 QSK_SCHEMA = "b BIGINT, cnt BIGINT, applied_bid BIGINT"
 
 #: quantiles served by default — sk03's profile
@@ -127,6 +125,24 @@ def qsk_bucket_partials(df: DataFrame) -> DataFrame:
     )
 
 
+def _max_registers(regs: DataFrame, delta: DataFrame) -> DataFrame:
+    """HLL register merge: register-wise MAX (sk02's union identity)."""
+    return (
+        regs.unionByName(delta)
+        .groupBy("grp", "reg")
+        .agg(F.max("m").cast("bigint").alias("m"))
+    )
+
+
+def _sum_buckets(buckets: DataFrame, delta: DataFrame) -> DataFrame:
+    """Quantile-sketch merge: per-bucket ADDITION (sk03's merge)."""
+    return (
+        buckets.unionByName(delta)
+        .groupBy("b")
+        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+    )
+
+
 def fold_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -134,41 +150,28 @@ def fold_batch(
     qsk_dir: str,
     n_buckets: int,
 ) -> None:
-    """Fold one micro-batch into BOTH sketch states through the ONE
-    shared fence-checked bucketed merge cycle (``ivm.fold_bucketed``
-    — ST14's machinery, parameterized by the merge algebra). Each
-    partial is materialized once (delta-sized localCheckpoint); the
-    HLL bucket is the pinned hash of the GROUP (a group's registers
-    never migrate), the quantile bucket the pinned hash of the
-    log-bucket id."""
+    """Fold one micro-batch into BOTH sketch states through the shared
+    fenced bucketed cycle (``state.fold_bucketed``). The HLL bucket is
+    the pinned hash of the GROUP (a group's registers never migrate),
+    the quantile bucket the pinned hash of the log-bucket id."""
     spark = batch_df.sparkSession
-    regs = (
-        hll_register_partials(batch_df)
-        .withColumn("bucket", key_bucket(F.col("grp"), n_buckets))
-        .localCheckpoint(eager=True)
-    )
     fold_bucketed(
         spark,
-        regs,
-        batch_id,
         hll_dir,
+        batch_id,
         HLL_SCHEMA,
-        ["grp", "reg"],
-        [F.max("m").cast("bigint").alias("m")],
-    )
-    qsk = (
-        qsk_bucket_partials(batch_df)
-        .withColumn("bucket", key_bucket(F.col("b"), n_buckets))
-        .localCheckpoint(eager=True)
+        hll_register_partials(batch_df),
+        _max_registers,
+        n_buckets,
     )
     fold_bucketed(
         spark,
-        qsk,
-        batch_id,
         qsk_dir,
+        batch_id,
         QSK_SCHEMA,
-        ["b"],
-        [F.sum("cnt").cast("bigint").alias("cnt")],
+        qsk_bucket_partials(batch_df),
+        _sum_buckets,
+        n_buckets,
     )
 
 
@@ -198,27 +201,19 @@ def start_sketch_maintenance(
 def read_hll_registers(
     spark: SparkSession, hll_dir: str, n_buckets: int = N_BUCKETS_DEFAULT
 ) -> DataFrame:
-    """The maintained HLL register table (sentinels excluded).
-    ``n_buckets`` MUST match the maintenance fanout — it defaults to
-    the same ``N_BUCKETS_DEFAULT`` the writer defaults to, so bumping
-    the constant can never desync the write and read paths."""
-    return (
-        read_bucketed(spark, hll_dir, HLL_SCHEMA, n_buckets)
-        .filter(F.col("grp").isNotNull())
-        .select("grp", "reg", "m")
-    )
+    """The maintained HLL register table. ``n_buckets`` MUST match the
+    maintenance fanout — it defaults to the same ``N_BUCKETS_DEFAULT``
+    the writer defaults to, so bumping the constant can never desync
+    the write and read paths."""
+    return read_bucketed(spark, hll_dir, HLL_SCHEMA, n_buckets)
 
 
 def read_qsk_buckets(
     spark: SparkSession, qsk_dir: str, n_buckets: int = N_BUCKETS_DEFAULT
 ) -> DataFrame:
-    """The maintained quantile-sketch histogram (sentinels excluded);
-    the ``n_buckets`` contract is ``read_hll_registers``'s."""
-    return (
-        read_bucketed(spark, qsk_dir, QSK_SCHEMA, n_buckets)
-        .filter(F.col("b").isNotNull())
-        .select("b", "cnt")
-    )
+    """The maintained quantile-sketch histogram; the ``n_buckets``
+    contract is ``read_hll_registers``'s."""
+    return read_bucketed(spark, qsk_dir, QSK_SCHEMA, n_buckets)
 
 
 def hll_estimates(

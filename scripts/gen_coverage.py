@@ -36,7 +36,7 @@ MANUAL = {
     "ST6": "`streaming/alerts.py:deduped_alerts` (watermarked dedupe) + `realert_suppressed` (faithful ElastAlert realert via applyInPandasWithState, checkpoint-restored state) — tests/test_streaming_alerts.py",
     "ST7": "checkpointLocation resume — tests/test_streaming_alerts.py (second run, no re-fire)",
     "ST8": "`streaming/sessions.py:sessionized_counts` (native session_window + watermark; cross-restart session merge, exactly-once append emission) — tests/test_streaming_sessions.py",
-    "ST9": "`streaming/corpus_ingest.py:start_bloom_ingest_query` + `seed_bloom_state` (continuous bloom-delta dedup: <=4,096-word on-disk state, idempotent bit_or merge, batch->stream seed handoff) — tests/test_streaming_bloom.py (cross-batch dup flagging, checkpoint resume, verdict parity with dd12)",
+    "ST9": "`streaming/corpus_ingest.py:start_bloom_ingest_query` + `seed_bloom_state` (continuous bloom-delta dedup: <=4,096-word on-disk state folded through streaming/state.py's fenced cycle, batch->stream seed handoff) — tests/test_streaming_bloom.py (cross-batch dup flagging, checkpoint resume, crash-replay verdict stability, verdict parity with dd12)",
     "ST12": "`streaming/joins.py:attributed_purchases` (watermarked stream-stream interval join: two-sided range condition bounds and evicts join state; multi-touch attribution) — tests/test_streaming_joins.py (cross-batch/restart join, window exclusion, multi-touch, batch-twin parity)",
     "ST11": "`streaming/scd.py:scd2_closed_intervals` (continuous SCD2 change capture: one fixed-width state row per key, vectorized change-point scan, cross-restart version continuity) — tests/test_streaming_scd.py (close/version/restart, late-row drop, closed-ledger parity with cdc02)",
     "ST10": "`streaming/corpus_ingest.py:start_url_dedup_ingest_query` (continuous canonical-URL dedup: shared `_dd16_canon` projection, watermark-bounded dropDuplicatesWithinWatermark state, first-arrival-wins) — tests/test_streaming_url_dedup.py (cross-batch re-crawl drop, checkpoint resume, canonical-group parity with dd16)",

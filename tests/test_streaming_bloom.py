@@ -10,10 +10,12 @@ from __future__ import annotations
 import json
 
 from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.streaming.corpus_ingest import (
-    _bloom_state_versions,
     read_bloom_state,
     seed_bloom_state,
     start_bloom_ingest_query,
+)
+from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.streaming.state import (
+    committed_versions,
 )
 
 DOC_A = (
@@ -98,6 +100,34 @@ def test_bloom_stream_flags_cross_batch_dups_and_resumes(spark, tmp_path):
     assert len(after) <= 4096
 
 
+def test_bloom_stream_replay_after_crash_keeps_verdicts(spark, tmp_path):
+    """foreachBatch is at-least-once: a crash after the state commit
+    but before the streaming commit log replays the batch. The replay
+    must probe the state its verdicts were first computed against, so
+    its docs are not flagged as duplicates of themselves, and the
+    fenced fold must commit nothing."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    state = tmp_path / "bloom_state"
+    ckpt = tmp_path / "ckpt"
+    _write_ndjson(landing / "b1.json", [_doc(1, DOC_A), _doc(2, DOC_B)])
+
+    got: list[dict] = []
+    _drain(spark, landing, state, ckpt, got)
+    first = {r["doc_id"]: (r["n_seen"], r["dup_flag"]) for r in got}
+    assert set(first) == {1, 2}
+    versions = committed_versions(spark, str(state))
+
+    # crash after the state commit: batch 0's commit-log entry is lost
+    for name in ("0", ".0.crc"):
+        (ckpt / "commits" / name).unlink(missing_ok=True)
+    got.clear()
+    _drain(spark, landing, state, ckpt, got)
+    replay = {r["doc_id"]: (r["n_seen"], r["dup_flag"]) for r in got}
+    assert replay == first
+    assert committed_versions(spark, str(state)) == versions
+
+
 def test_bloom_state_survives_partial_writes(spark, tmp_path):
     """Crash-safety of the versioned state layout (ADVICE r09): an
     uncommitted version directory — a writer that died mid-write, so no
@@ -118,14 +148,14 @@ def test_bloom_state_survives_partial_writes(spark, tmp_path):
     committed = {
         (r.word, r.bits) for r in read_bloom_state(spark, str(state)).collect()
     }
-    assert committed and _bloom_state_versions(spark, str(state)) == [0]
+    assert committed and committed_versions(spark, str(state)) == [0]
 
     # simulate a writer that crashed mid-write: v=1 exists with data
     # files but no _SUCCESS marker
     partial = state / "v=1"
     partial.mkdir()
     (partial / "part-00000.parquet").write_bytes(b"garbage, not parquet")
-    assert _bloom_state_versions(spark, str(state)) == [0]
+    assert committed_versions(spark, str(state)) == [0]
     after = {
         (r.word, r.bits) for r in read_bloom_state(spark, str(state)).collect()
     }
@@ -134,7 +164,7 @@ def test_bloom_state_survives_partial_writes(spark, tmp_path):
     # the next real commit reclaims the dead v=1 path and becomes the
     # version readers see (seeding twice is idempotent content-wise)
     seed_bloom_state(spark, hist, str(state))
-    assert _bloom_state_versions(spark, str(state))[-1] == 1
+    assert committed_versions(spark, str(state))[-1] == 1
     again = {
         (r.word, r.bits) for r in read_bloom_state(spark, str(state)).collect()
     }

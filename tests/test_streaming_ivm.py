@@ -166,7 +166,7 @@ def _bview(spark, state, n_buckets=4):
 def _bucket_of(spark, users, n_buckets=4):
     from pyspark.sql import functions as F
 
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.streaming.ivm import (
+    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.streaming.state import (
         key_bucket,
     )
 

@@ -12,9 +12,6 @@ import json
 
 from pyspark.sql import functions as F
 
-from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.streaming.ivm import (
-    key_bucket,
-)
 from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.streaming.sketches import (
     EVENT_SCHEMA,
     N_BUCKETS_DEFAULT,
@@ -29,6 +26,7 @@ from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spa
 )
 from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.streaming.state import (
     committed_versions,
+    key_bucket,
 )
 
 NB = 4
