@@ -7,7 +7,7 @@ ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
 What it measures:
 
 - every ``HEADLINE`` registry entry plus every ``VARIANTS`` entry (the
-  alternate scale paths, e.g. the ``impl="arrow"`` twins) at the target
+  alternate scale paths, e.g. the ``impl="ivf"`` retrieval legs) at the target
   SF, timed end to end as ``fn(spark, sf_dir).count()`` — query build
   (Python construction, eager jobs, Catalyst analysis) plus execution;
 - per entry, the median of ``$SPARK_GRAFT_BENCH_RUNS`` samples
@@ -25,11 +25,8 @@ per-entry record lands in bench_latest.json (sf0.1 runs only).
 
 Caveat: ``.count()`` lets Catalyst prune work the count does not need,
 so an entry whose count skips a column's computation reads faster than
-it materializes. dd10/dd11's SQL forms are the known case: the count
-prunes their ``keep`` self-join and reads within a few percent of the
-Arrow twins, while a full materialization (``write.format("noop")``)
-shows the twins about 2.5x faster. Compare forms with a materializing
-write, not with these numbers.
+it materializes. Compare alternate forms with a materializing write
+(``write.format("noop")``), not with these numbers.
 """
 
 from __future__ import annotations
@@ -480,26 +477,13 @@ def bench_streaming_neardup_drain(spark, sf_dir):
 
 # Implementation variants of registered queries (name -> (registry name,
 # kwargs)): timed alongside HEADLINE so alternate scale paths get
-# round-over-round numbers too (nn01's Arrow path is equivalence-gated
-# against the SQL form in tests/test_scale_paths.py).
+# round-over-round numbers too.
 VARIANTS = {
     # a01b: the one-pass approx-percentile scale path — retired from the
     # driver registry (its sketch can never hash-match DuckDB's) but kept
     # timed here; a01c hash-verifies its accuracy contract. The value's
     # first element may be a registry name OR a direct callable.
     "a01b_approx_stats_scale_path": (queries_mod.a01b_approx_stats_scale_path, {}),
-    "nn01_cosine_topk_arrow": ("nn01_cosine_topk", {"impl": "arrow"}),
-    "nn02_lsh_ann_arrow": ("nn02_lsh_ann", {"impl": "arrow"}),
-    "ud2_spec_extraction_arrow": ("ud2_spec_extraction", {"impl": "arrow"}),
-    "nn03_ivf_ann_arrow": ("nn03_ivf_ann", {"impl": "arrow"}),
-    "nn04_pq_adc_arrow": ("nn04_pq_adc", {"impl": "arrow"}),
-    "nn05_ivfpq_arrow": ("nn05_ivfpq", {"impl": "arrow"}),
-    "nn06_residual_ivfpq_arrow": ("nn06_residual_ivfpq", {"impl": "arrow"}),
-    "nn07_opq_pq_arrow": ("nn07_opq_pq", {"impl": "arrow"}),
-    "dd10_semantic_dedup_arrow": ("dd10_semantic_dedup", {"impl": "arrow"}),
-    "dd11_hierarchical_semdedup_arrow": (
-        "dd11_hierarchical_semdedup", {"impl": "arrow"},
-    ),
     # the production IVF retrieval legs (VERDICT r07 item 3):
     # recall-gated against their brute-force forms in
     # tests/test_ann_recall.py and by nn08's contract rows

@@ -12,11 +12,12 @@ pattern set used here — behind one ``pandas_udf`` over
 ``(title, description)``: the plan carries a single ``ArrowEvalPython``
 node, and every other column stays in the JVM.
 
-``with_specs_arrow`` is the entry point the risk engine, the stats
-builder and ud2's ``impl="arrow"`` share. Equivalence to ``with_specs``
-is pinned by tests/test_domain_golden.py (golden, seeded fuzz, and
-score_listings through both forms, bit-exact) and
-tests/test_scale_paths.py (ud2, exact frame compare).
+``with_specs_arrow`` is the one Spark body of UD2 spec extraction:
+the risk engine, the stats builder and the ud2 registry entry all
+call it. Equivalence to ``with_specs`` is pinned by
+tests/test_domain_golden.py (golden, seeded fuzz, and score_listings
+through both forms, bit-exact); ud2 is compared to its DuckDB oracle
+by tests/test_oracle_parity.py.
 
 Scale shape: a pure row-local projection — no shuffle, no state; Arrow
 batches stream, so memory is bounded by the batch size at any corpus

@@ -75,9 +75,9 @@ def score_listings(
 
     ``specs_ready=True`` skips the UD2 extraction when the input
     already carries cpu/ram/gpu/category/condition_regex (e.g. shared
-    with a build_market_stats pass, or produced by the column-form
-    reference ``with_specs``); otherwise the extraction runs through
-    the row kernel ``with_specs_arrow``, one ``ArrowEvalPython`` node.
+    with a build_market_stats pass); otherwise the extraction runs
+    through ``with_specs_arrow``, the one UD2 row kernel, as one
+    ``ArrowEvalPython`` node.
 
     The user/review dims join on user_id as broadcasts: they are small
     relative to the fact side. A dim that outgrows the broadcast

@@ -23,9 +23,8 @@ from pyspark.sql import functions as F
 from ..functions.conditions import detect_condition
 from ..functions.factors import normalize_risk_factors
 from ..functions.textprep import SPAM_INDICATORS, truncate_spam
-from ..functions.specs import with_specs
 from ..functions.specs_arrow import with_specs_arrow
-from .queries import _fan_scan, _r, _t, query
+from .queries import _r, _t, query
 
 # ---------------------------------------------------------------------------
 # X15 + X16 + F4 — additive risk score, clamp, factor-list assembly
@@ -1069,9 +1068,7 @@ def _ud2_sql() -> str:
     oracle=_ud2_sql(),
     ops=("UD2", "X3", "X4", "X5", "X6", "X7", "X8", "X11", "X12"),
 )
-def ud2_spec_extraction(
-    spark: SparkSession, sf_dir: str, *, impl: str = "sql"
-) -> DataFrame:
+def ud2_spec_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full prioritized spec pipeline (sanitize → truncate → title-
     priority merge → classify → constrain → condition) over listing text
     synthesized from documents: 15 deterministic snippet variants cover
@@ -1086,17 +1083,12 @@ def ud2_spec_extraction(
     _ud2_sql_ram_vals). Remaining Java-only quirks stay golden-tested in
     tests/test_domain_golden.py.
 
-    ``impl="arrow"`` switches the extraction stage to the row kernel the
-    risk engine runs (``functions/specs_arrow.with_specs_arrow``): one
-    scalar Arrow UDF with compiled ``re`` patterns instead of ~40
-    sequential JVM regex projections. Equivalence to this SQL form is
-    pinned in tests/test_scale_paths.py; timings ride bench.py VARIANTS.
-
-    r13 note: a fanned-out scan (guide §2.5) was measured and REVERTED
-    here — interleaved A/B at sf0.1 gave 3.54 s as-is vs 3.81 s fanned:
-    this entry is driver-bound (plan build/analysis), not scan-bound,
-    so the optimization target is with_specs' packed extractor tree
-    (functions/specs.py), which cut the build 4.6 s → 2.2 s."""
+    The extraction stage is the row kernel the risk engine runs
+    (``functions/specs_arrow.with_specs_arrow``): one scalar Arrow UDF
+    with compiled ``re`` patterns, so the plan holds one
+    ``ArrowEvalPython`` instead of ~40 sequential JVM regex projections.
+    ``functions/specs.with_specs`` stays as the column-form reference
+    the golden and fuzz tests compare it against."""
     docs = _t(spark, sf_dir, "documents")
     n = len(_UD2_SNIPS)
     snip = F.element_at(
@@ -1113,8 +1105,7 @@ def ud2_spec_extraction(
         title.alias("title"),
         F.concat(snip, F.lit("\n"), spam, F.col("text")).alias("description"),
     )
-    specs = with_specs_arrow if impl == "arrow" else with_specs
-    out = specs(listings, title_col="title", desc_col="description")
+    out = with_specs_arrow(listings, title_col="title", desc_col="description")
     return out.select("doc_id", "cpu", "ram", "gpu", "category", "condition_regex")
 
 

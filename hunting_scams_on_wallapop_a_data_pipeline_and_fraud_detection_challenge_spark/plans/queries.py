@@ -1342,9 +1342,7 @@ from . import domain_queries  # noqa: E402,F401  (registers on import)
 #            (five-green) funds cp04_span_scrub_pipeline,
 #            nn06_residual_ivfpq (five-green) funds dd16_url_dedup,
 #            nn07_opq_pq (five-green) funds rk03_ndcg, and
-#            dd10_semantic_dedup (five-green; nn09's twin contract
-#            still re-runs both its forms every round) funds
-#            mm05_pair_dedup. Late round-10 the remaining five/six-
+#            dd10_semantic_dedup (five-green) funds mm05_pair_dedup. Late round-10 the remaining five/six-
 #            green stock parked one-for-one as the registry grew
 #            126 → 130: dd09_boilerplate_spans funds
 #            w06_sliding_window (time-RANGE frame),
@@ -1599,8 +1597,7 @@ _ROTATION_TAIL = [
     # parked round-10 (five-green) to fund the window slot for the new
     # rk03_ndcg entry:
     "nn07_opq_pq",
-    # parked round-10 (five-green; nn09's twin contract still re-runs
-    # both its forms every round) to fund the window slot for the new
+    # parked round-10 (five-green) to fund the window slot for the new
     # mm05_pair_dedup entry:
     "dd10_semantic_dedup",
     # parked late-round-10 (both five-green) to fund the window slots

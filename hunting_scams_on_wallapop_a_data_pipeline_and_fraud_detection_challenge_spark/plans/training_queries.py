@@ -479,15 +479,6 @@ def _hyperplane_signs(n_planes: int, dim: int = _EMB_DIM) -> list[list[float]]:
     ]
 
 
-def _bucket_col(vec, signs: list[list[float]]):
-    out = F.lit(0)
-    for j, plane in enumerate(signs):
-        # one parsed literal per plane, not dim F.lit() py4j round-trips
-        lit_plane = F.expr("array(" + ",".join(f"{s:.1f}D" for s in plane) + ")")
-        out = out + F.when(_dot(vec, lit_plane) > 0, F.lit(1 << j)).otherwise(0)
-    return out
-
-
 def _sql_bucket(vec: str, signs: list[list[float]]) -> str:
     terms = []
     for j, plane in enumerate(signs):
@@ -531,52 +522,25 @@ _KNN_K = 5
     """,
     ops=("ANN-BRUTEFORCE",),
 )
-def nn01_cosine_topk(
-    spark: SparkSession, sf_dir: str, *, impl: str = "sql"
-) -> DataFrame:
-    """Brute-force cosine top-k: broadcast the query set, stream the
-    corpus once, rank per query. The corpus side never shuffles — at
-    100 TB this is one scan + a tiny per-partition top-k (the window
-    over q_id partitions is bounded by |queries|·k rows after AQE).
-    Double fold order is pinned so ranks match the oracle exactly.
-
-    ``impl="arrow"`` runs the same scan-once/partial-top-k shape on the
-    shared Arrow scaffold ``_arrow_partial_topk``: the per-pair math is
-    one numpy matmul per Arrow batch instead of interpreted SQL
-    ``aggregate()`` folds (higher-order functions are CodegenFallback —
-    each dot product is a per-element boxed loop). Results are
-    rank-identical with float64 cosines agreeing to ~1e-15 relative
-    (pairwise vs sequential summation), so the exactness-pinned SQL
-    form stays the oracle subject and the Arrow form is
-    equivalence-gated in tests/test_scale_paths.py — the 100 TB
-    recommendation."""
-    if impl == "arrow":
-        emb = _t(spark, sf_dir, "embeddings")
-        _, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-        return _arrow_cosine_topk(emb, Qn, q_ids, _KNN_K)
-    # r13 (guide §2.5 + §6 pushdown): fanned corpus side, UNFANNED
-    # query block — see _emb_base's docstring.
-    base = _emb_base(spark, sf_dir)
-    q = _emb_base(spark, sf_dir, fan=False).filter(
-        F.col("vec_id") < _KNN_QUERIES
-    ).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    scored = (
-        base.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            (_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn"))).alias("cos"),
-        )
-    )
-    return _rank_by_cos(scored, _KNN_K)
+def nn01_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-k on the shared Arrow scaffold
+    ``_arrow_partial_topk``: collect the bounded query block, stream the
+    corpus once, and score each Arrow batch against every query with
+    one float64 matmul; each batch keeps a partial top-k per query, so
+    the corpus ``embedding`` column never shuffles — at 100 TB this is
+    one scan plus a per-partition top-k, merged by one tiny window over
+    at most batches·|queries|·k rows. Cosines agree with the oracle's
+    sequential fold to ~1e-15 relative (pairwise summation), well
+    inside the 6dp output rounding."""
+    emb = _t(spark, sf_dir, "embeddings")
+    _, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
+    return _arrow_cosine_topk(emb, Qn, q_ids, _KNN_K)
 
 
 def _rank_by_cos(scored: DataFrame, k: int) -> DataFrame:
-    """Shared cosine ranking tail (nn01–nn03, SQL and Arrow forms):
-    per-query top-k by descending cosine, ties to the lower vec_id."""
+    """Cosine ranking tail of the Arrow top-k scaffold (nn01–nn03):
+    merges the per-batch partials into each query's top-k by
+    descending cosine, ties to the lower vec_id."""
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -602,11 +566,11 @@ def _arrow_query_block(emb: DataFrame, n_queries: int):
 
 
 def _arrow_rows(batches, dim: int):
-    """Batch guards shared by every Arrow embedding twin (nn01–nn07,
+    """Batch guards shared by every Arrow embedding kernel (nn01–nn07,
     dd10/dd11): drop NULL, wrong-dimension (``len != dim``) and
-    zero-norm rows — the SQL forms drop empties via ``nrm > 0`` and
-    yield NULL scores for dim mismatches, so dropping both is the
-    defined behavior for malformed rows, never an ``np.stack`` crash.
+    zero-norm rows — the oracles drop empties via ``nrm > 0``, so
+    dropping all three is the defined behavior for malformed rows,
+    never an ``np.stack`` crash.
     Yields ``(ids, V, Vn)`` per non-empty batch: int64 ids, the raw
     float64 vectors and their L2-normalized form."""
     import numpy as np
@@ -635,8 +599,8 @@ def _arrow_partial_topk(
     gate=None,
     ascending: bool = False,
 ) -> DataFrame:
-    """Shared Arrow top-k scaffold for the vectorized ANN twins
-    (nn01–nn07). Per Arrow batch:
+    """Shared Arrow top-k scaffold for the ANN entries (nn01–nn07).
+    Per Arrow batch:
 
     - ``_arrow_rows`` drops NULL, wrong-dimension and zero-norm rows;
     - ``gate(V, Vn) -> (mask, aux)``, when given, returns an (n, q)
@@ -813,7 +777,6 @@ def nn02_lsh_ann(
     bits: int = _ANN_BITS,
     tables: int = _ANN_TABLES,
     k: int = _ANN_K,
-    impl: str = "sql",
 ) -> DataFrame:
     """Multi-table hyperplane-LSH ANN (the scale path): ``tables``
     independent hash tables of ``bits`` sign bits each (the cosine
@@ -824,77 +787,22 @@ def nn02_lsh_ann(
     the table union fixes recall at 1-(1-p^bits)^tables while keeping
     the candidate set ~tables/2^bits of the corpus.
 
-    Scale shape: bucket ids are computed in the scan projection (no
-    shuffle to build the index) and stay ON the row as an array whose
-    entries are tagged with their table index (bucket + t·2^bits, so
-    cross-table equality cannot collide); the probe is a broadcast
-    nested-loop join gated by ``arrays_overlap`` — the corpus never
-    explodes, never shuffles, the cheap ``tables``-int overlap check
-    gates the expensive cosine fold, and every (query, candidate) pair
-    scores exactly once (multi-table collisions of the same pair are
-    absorbed inside the overlap predicate, so no dedupe groupBy).
-    Tune ``bits`` up with corpus size (recall gate:
-    tests/test_ann_recall.py; ``bits=0, tables=1`` degenerates to
-    exact brute force, the gate's baseline).
-
-    ``impl="arrow"`` vectorizes both the bucketing (one sign-of-matmul
-    per Arrow batch against the hyperplane matrix) and the gated cosine
-    scoring, keeping the identical bucket/probe semantics — same
-    rationale and equivalence gate as nn01's Arrow path."""
-    if impl == "arrow":
-        return _nn02_arrow(spark, sf_dir, bits=bits, tables=tables, k=k)
-    tagged = F.transform(
-        _bucket_array(F.col("v"), bits, tables),
-        lambda b, i: b + i * F.lit(1 << bits),
-    )
-
-    # r13 (guide §2.5 + §6 pushdown): fanned corpus side, UNFANNED
-    # query block — see _emb_base's docstring.
-    def _mk(fan: bool) -> DataFrame:
-        return _emb_base(spark, sf_dir, fan=fan).withColumn("buckets", tagged)
-
-    base = _mk(True)
-    q = _mk(False).filter(F.col("vec_id") < _KNN_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("buckets").alias("qbuckets"),
-    )
-    scored = (
-        base.join(
-            F.broadcast(q), F.arrays_overlap(F.col("buckets"), F.col("qbuckets"))
-        )
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            (_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn"))).alias("cos"),
-        )
-    )
-    return _rank_by_cos(scored, k)
-
-
-def _nn02_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    bits: int,
-    tables: int,
-    k: int,
-    n_queries: int = _KNN_QUERIES,
-) -> DataFrame:
-    """Vectorized multi-table LSH probe (see nn02 docstring): the
-    shared Arrow scaffold gated by a same-table bucket-equality mask —
-    one (n×d)@(d×planes) matmul gives every sign bit, bit-packing
-    gives per-table bucket ids, and rows colliding with NO query are
-    dropped before the cosine matmul (candidate-identical to the
-    arrays_overlap plan).
+    Scale shape: the shared Arrow scaffold gated by a same-table
+    bucket-equality mask. Per batch, one (n×d)@(d×planes) matmul gives
+    every sign bit and bit-packing gives the per-table bucket ids (no
+    shuffle to build the index); rows colliding with NO query are
+    dropped before the cosine matmul, and every (query, candidate) pair
+    scores exactly once however many tables it collides in. Tune
+    ``bits`` up with corpus size (recall gate: tests/test_ann_recall.py;
+    ``bits=0, tables=1`` degenerates to exact brute force, the gate's
+    baseline).
 
     Exactness note: numpy's pairwise summation can in principle flip a
-    sign bit vs the sequential SQL fold when a plane dot product sits
-    within ~1e-16 of zero — a discrete candidate-set change, unlike
-    the ~1e-15 cosine drift. Deterministic per dataset (the gate either
-    always passes or visibly fails after a testdata regen), never
-    run-to-run flaky."""
+    sign bit vs the oracle's sequential fold when a plane dot product
+    sits within ~1e-16 of zero — a discrete candidate-set change,
+    unlike the ~1e-15 cosine drift. Deterministic per dataset (the
+    oracle check either always passes or visibly fails after a testdata
+    regen), never run-to-run flaky."""
     import numpy as np
 
     P = np.asarray(
@@ -912,12 +820,11 @@ def _nn02_arrow(
         )  # (n, tables)
 
     emb = _t(spark, sf_dir, "embeddings")
-    Q, q_ids, Qn = _arrow_query_block(emb, n_queries)
+    Q, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
     QB = buckets_of(Q)  # (q, tables)
 
     def bucket_gate(V, Vn):
         B = buckets_of(V)  # (n, tables)
-        # same-table bucket equality — the arrays_overlap twin
         return (B[:, None, :] == QB[None, :, :]).any(-1), None  # (n, q)
 
     return _arrow_cosine_topk(emb, Qn, q_ids, k, gate=bucket_gate)
@@ -1891,7 +1798,6 @@ def nn03_ivf_ann(
     cells: int = _IVF_CELLS,
     probes: int = _IVF_PROBES,
     k: int = _KNN_K,
-    impl: str = "sql",
 ) -> DataFrame:
     """IVF-style ANN, the second scale path next to hyperplane LSH:
     a seeded sample-trained ``cells``-cell coarse quantizer; each
@@ -1907,78 +1813,21 @@ def nn03_ivf_ann(
     tests/test_ann_recall.py (recall@k vs the exact nn01 ranking).
 
     At 100 TB: the centroid fit runs on a bounded sample (one sorted
-    TAKE of raw vectors, driver-side numpy — see _fit_centroids), the
-    centroid table ships as ONE constant-folded array<array<double>>
-    literal consumed by a transform() lambda (k*d scalar literals would
-    balloon the expression tree and recompile codegen per fit), and the
-    probe join is an equi-join on a small int cell id — no all-pairs
-    stage and no iterative distributed job anywhere.
+    TAKE of raw vectors, driver-side numpy — see _fit_centroids), and
+    the probe gate rides the shared _arrow_partial_topk scaffold: per
+    batch, one (n, cells) distance reduction assigns cells in the RAW
+    vector space, candidates outside every query's probe set are
+    dropped BEFORE the cosine matmul, and exact cosine ranks only the
+    survivors — no all-pairs stage and no iterative distributed job."""
+    import numpy as np
 
-    ``impl="arrow"`` switches to the vectorized scale path (the
-    nn01/nn02 pattern): cell assignment is one matmul-shaped distance
-    reduction per Arrow batch and the probe gate masks candidates
-    BEFORE the cosine matmul — rank-identical, equivalence-gated in
-    tests/test_scale_paths.py, timed in bench.py."""
-    if impl == "arrow":
-        return _nn03_arrow(spark, sf_dir, cells=cells, probes=probes, k=k)
-    centroids = _fit_centroids(_train_vecs(spark, sf_dir), k=cells)
-    # one Literal after constant folding, not k*d scalar nodes; built as
-    # a single SQL string because k*d F.lit() py4j round-trips cost
-    # ~0.5s of driver time (repr() round-trips doubles exactly)
-    cent_arr = _cents_spark_literal(centroids)
-
-    # r13 (guide §2.5 + §5, the nn04/05/07 shared-encode pattern):
-    # fanned scan + ONE ranked-cells evaluation per row, materialized
-    # behind a GC-reclaimed lazy checkpoint and shared by the corpus
-    # leg (cell = first element) and the query leg (top-`probes`
-    # slice) — before, each leg re-derived the k-centroid distance
-    # fold from the scan.
-    base = _emb_base(spark, sf_dir)
-
-    def _cell_dists(vec):
-        # squared L2 distance to every centroid: the centroid matrix is
-        # a single folded literal, so this stays O(1) plan nodes
-        return F.transform(
-            cent_arr,
-            lambda c: _fold_sum(F.zip_with(vec, c, lambda a, b: (a - b) * (a - b))),
-        )
-
-    def _ranked_cells(vec):
-        return F.array_sort(
-            F.transform(
-                _cell_dists(vec),
-                lambda d, i: F.struct(d.alias("d"), i.alias("cell")),
-            )
-        )
-
-    enc = base.withColumn("rc", _ranked_cells(F.col("v"))).localCheckpoint(
-        eager=False
+    emb = _t(spark, sf_dir, "embeddings")
+    C = np.asarray(
+        _fit_centroids(_train_vecs(spark, sf_dir), k=cells), dtype=np.float64
     )
-    assigned = enc.select(
-        "vec_id", "v", "nrm", F.element_at(F.col("rc"), 1)["cell"].alias("cell")
-    )
-    q = (
-        enc.filter(F.col("vec_id") < _KNN_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.explode(F.slice(F.col("rc"), 1, probes)).alias("p"),
-        )
-        .select("q_id", "qv", "qn", F.col("p.cell").alias("cell"))
-    )
-    scored = (
-        assigned.join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            (_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn"))).alias("cos"),
-        )
-        # no dedupe pass: probe cells are distinct, so a candidate's one
-        # cell matches at most one probe row per query
-    )
-    return _rank_by_cos(scored, k)
+    Q, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
+    gate, _ = _ivf_probe_gate(C, Q, probes)
+    return _arrow_cosine_topk(emb, Qn, q_ids, k, gate=gate)
 
 
 def _ivf_probe_gate(C, Q, probes: int, normalized: bool = False):
@@ -1999,30 +1848,6 @@ def _ivf_probe_gate(C, Q, probes: int, normalized: bool = False):
         return (cell[:, None, None] == qprobe[None, :, :]).any(-1), cell
 
     return gate, qprobe
-
-
-def _nn03_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    cells: int = _IVF_CELLS,
-    probes: int = _IVF_PROBES,
-    k: int = _KNN_K,
-) -> DataFrame:
-    """Vectorized IVF (see nn03 docstring): the probe gate rides the
-    shared _arrow_partial_topk scaffold — per batch, one
-    (n, cells) distance reduction assigns cells, candidates outside
-    every query's probe set are dropped BEFORE the cosine matmul, and
-    exact cosine ranks only the survivors. Assignment and probing run
-    in the RAW vector space exactly like the SQL form."""
-    import numpy as np
-
-    emb = _t(spark, sf_dir, "embeddings")
-    C = np.asarray(
-        _fit_centroids(_train_vecs(spark, sf_dir), k=cells), dtype=np.float64
-    )
-    Q, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-    gate, _ = _ivf_probe_gate(C, Q, probes)
-    return _arrow_cosine_topk(emb, Qn, q_ids, k, gate=gate)
 
 
 # ---------------------------------------------------------------------------
@@ -3061,8 +2886,8 @@ def _pq_codebooks(vecs: list, codes: int = _PQ_CODES) -> list:
 
 def _normalized_vn_base(emb: DataFrame) -> DataFrame:
     """(vec_id, vn) scan projection with the shared NULL/zero-norm
-    guards — the corpus front-end of every normalized-space operator
-    (nn04 PQ, nn06 residual IVF-PQ, dd10 SemDeDup).
+    guards — the corpus front-end of ct03's normalized-space cell
+    assignment.
 
     ``nrm`` is bound as a lambda variable before the element-wise
     division (r13 optimization): the naive ``transform(v, x / nrm)``
@@ -3092,8 +2917,8 @@ def _ranked_cells_of(vn, cent_arr):
     """Cells of ``cent_arr`` ranked by squared L2 distance to the bound
     vector ``vn`` — array of struct(d, cell), ties → lowest cell (the
     array_sort twin of the oracles' list_position-of-min). Shared by
-    nn06 and dd10 so the assignment algebra cannot drift between
-    them."""
+    ct03 and the IVF retrieval leg (``_ivf_scored_leg``) so the
+    assignment algebra cannot drift between them."""
     return F.array_sort(
         F.transform(
             F.transform(
@@ -3122,53 +2947,6 @@ def _pq_adc_sql() -> str:
     """DuckDB: ADC lookup-sum for candidate ``c`` against query ``q``."""
     return _sql_fold_sum(
         f"list_transform(range(1, {_PQ_M} + 1), s -> q.dls[s][c.codes[s] + 1])"
-    )
-
-
-def _pq_dls(vn, cb_lit):
-    """Spark: per-subspace distance lists of ``vn`` to every code —
-    the cross-engine twin of :func:`_pq_sub_d_sql`, shared by nn04 and
-    nn05. ``vn`` must be a bound lambda variable (shingles lesson)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(_PQ_M)),
-        lambda s: F.transform(
-            F.element_at(cb_lit, s),
-            lambda c: _fold_sum(
-                F.zip_with(
-                    F.slice(vn, (s - 1) * _PQ_SUB + 1, _PQ_SUB),
-                    c,
-                    lambda a, b: (a - b) * (a - b),
-                )
-            ),
-        ),
-    )
-
-
-def _pq_codes_col(dls_col):
-    """Spark: argmin code per subspace from the distance lists (tie →
-    lowest code, matching the oracles' list_position-of-min)."""
-    return F.transform(
-        dls_col,
-        lambda dl: F.element_at(
-            F.array_sort(
-                F.transform(dl, lambda d, i: F.struct(d.alias("d"), i.alias("j")))
-            ),
-            1,
-        )["j"],
-    )
-
-
-def _pq_adc_col():
-    """Spark: ADC lookup-sum over (qd, codes) columns — twin of
-    :func:`_pq_adc_sql`."""
-    return _fold_sum(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(_PQ_M)),
-            lambda s: F.element_at(
-                F.element_at(F.col("qd"), s),
-                F.element_at(F.col("codes"), s) + 1,
-            ),
-        )
     )
 
 
@@ -3255,7 +3033,6 @@ def nn04_pq_adc(
     *,
     k: int = _KNN_K,
     codes: int = _PQ_CODES,
-    impl: str = "sql",
 ) -> DataFrame:
     """Product-quantization ANN — the COMPRESSION scale path next to
     the pruning ones (nn02 LSH, nn03 IVF): each normalized vector is
@@ -3271,72 +3048,16 @@ def nn04_pq_adc(
 
     Fully oracle-checked via the nn03 replayed-fit pattern (seeded
     deterministic per-subspace k-means over the bounded sorted sample;
-    codebooks shared verbatim; every distance a pinned double fold) —
-    the approximation itself is hash-verified, and recall vs the exact
-    nn01 ranking is gated in tests/test_ann_recall.py.
+    codebooks shared verbatim) — the approximation itself is
+    hash-verified, and recall vs the exact nn01 ranking is gated in
+    tests/test_ann_recall.py.
 
-    Scale shape: encoding is one scan (codes shuffle as 8 small ints,
-    vectors never leave the stage); the query block is
-    dimension-sized and broadcasts with its precomputed lookup tables;
-    ranking is the per-partition top-k window. The whole per-row
-    computation binds the normalized vector as a lambda variable so
-    the norm fold can't be re-inlined per element (textstats.shingles
-    lesson)."""
-    if impl == "arrow":
-        return _nn04_arrow(spark, sf_dir, k=k, codes=codes)
-    # r13 optimization (the nn05 pattern, see there): fanned-out scan,
-    # distance lists bound once per row, one checkpointed encode pass
-    # shared by the corpus and query legs, `qd` kept only for query rows
-    emb = _fan_scan(spark, sf_dir, "embeddings")
-    cbs = _pq_codebooks(_train_vecs(spark, sf_dir), codes=codes)
-    cb_lit = _pq_spark_literal(cbs)
-
-    base = _normalized_vn_base(emb)
-
-    per_row = F.element_at(
-        F.transform(
-            F.array(F.col("vn")),
-            lambda vn: F.element_at(
-                F.transform(
-                    F.array(_pq_dls(vn, cb_lit)),
-                    lambda dl: F.struct(
-                        _pq_codes_col(dl).alias("codes"),
-                        F.when(F.col("vec_id") < _KNN_QUERIES, dl).alias("qd"),
-                    ),
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
-    enc = (
-        base.select("vec_id", per_row.alias("r"))
-        .select("vec_id", F.col("r.codes").alias("codes"), F.col("r.qd").alias("qd"))
-        .localCheckpoint(eager=True)
-    )
-    q = enc.filter(F.col("vec_id") < _KNN_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("qd").alias("qd")
-    )
-    scored = (
-        enc.select("vec_id", "codes")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pq_adc_col().alias("adc"))
-    )
-    return _rank_by_adc(scored, k)
-
-
-def _nn04_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _KNN_K,
-    codes: int = _PQ_CODES,
-) -> DataFrame:
-    """Vectorized PQ-ADC (see nn04 docstring) on the shared Arrow
-    scaffold: per batch, one (n, m, codes) distance tensor → argmin
-    codes, then ``_pq_adc_block``'s m table gathers — the per-candidate
-    cost is exactly the m lookups the operator promises, no 64-dim math
-    touches the corpus after encoding."""
+    Scale shape: the shared Arrow scaffold. Per batch, one
+    (n, m, codes) distance tensor gives the argmin codes, then
+    ``_pq_adc_block``'s m table gathers score every query — the
+    per-candidate cost is exactly the m lookups the operator promises,
+    no 64-dim math touches the corpus after encoding, and only the
+    per-batch partial top-k shuffles."""
     import numpy as np
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3354,8 +3075,8 @@ def _pq_adc_block(cbs, Qn):
     """(n, q) ADC block for flat PQ: per-query lookup tables
     ``T[q, s, j] = ||q_sub - C[s][j]||²`` built once, then each batch's
     (already normalized / rotated) vectors encode to argmin codes (ties
-    → lowest code, like the SQL form) and sum their m table entries
-    sequentially — the SQL fold's order."""
+    → lowest code, like the oracles' list_position-of-min) and sum
+    their m table entries sequentially — the oracles' fold order."""
     import numpy as np
 
     qsub = Qn.reshape(len(Qn), _PQ_M, _PQ_SUB)
@@ -3384,22 +3105,6 @@ def _cents_spark_literal(cents: list):
         + ",".join(
             "array(" + ",".join(repr(float(x)) + "D" for x in c) + ")"
             for c in cents
-        )
-        + ")"
-    )
-
-
-def _pq_spark_literal(cbs: list):
-    return F.expr(
-        "array("
-        + ",".join(
-            "array("
-            + ",".join(
-                "array(" + ",".join(repr(float(x)) + "D" for x in code) + ")"
-                for code in sub
-            )
-            + ")"
-            for sub in cbs
         )
         + ")"
     )
@@ -3502,7 +3207,6 @@ def nn05_ivfpq(
     *,
     k: int = _KNN_K,
     probes: int = _IVF_PROBES,
-    impl: str = "sql",
 ) -> DataFrame:
     """IVF-PQ — the production ANN architecture, composed from the two
     scale paths it is made of: the inverted file PRUNES (each query
@@ -3516,114 +3220,13 @@ def nn05_ivfpq(
 
     Both deterministic fits are replayed in the oracle, so the composed
     hand-off — which candidates each query scores — is hash-verified
-    end-to-end. At 100 TB: corpus rows shuffle as (cell, 8 codes) ints,
-    the query side broadcasts with its lookup tables, and the probe join
-    is an int equi-join — no all-pairs stage anywhere."""
-    if impl == "arrow":
-        return _nn05_arrow(spark, sf_dir, k=k, probes=probes)
-    emb = _fan_scan(spark, sf_dir, "embeddings")
-    vecs = _train_vecs(spark, sf_dir)
-    cent_arr = _cents_spark_literal(_fit_centroids(vecs, k=_IVF_CELLS))
-    cb_lit = _pq_spark_literal(_pq_codebooks(vecs))
-
-    def _ranked_cells(vec):
-        return F.array_sort(
-            F.transform(
-                F.transform(
-                    cent_arr,
-                    lambda c: _fold_sum(
-                        F.zip_with(vec, c, lambda a, b: (a - b) * (a - b))
-                    ),
-                ),
-                lambda d, i: F.struct(d.alias("d"), i.alias("cell")),
-            )
-        )
-
-    # r13 optimization, three stacked fixes measured 6.8 s → 1.6 s at
-    # sf0.1 with bit-identical output (plans/r13/nn05_ivfpq_*.txt):
-    # 1. the embeddings scan fans out (guide §2.5 — the single-row-group
-    #    file serialized the whole encode on one task);
-    # 2. every reused value — (v, nrm), then vn, then the distance
-    #    lists — is a bound lambda variable (shingles lesson), so the
-    #    norm fold is no longer re-inlined per element and the distance
-    #    lists are computed once per row even though both the code
-    #    argmin and the query-side table consume them;
-    # 3. the encoded corpus is localCheckpoint-ed (guide §5 lineage
-    #    cut), so the query leg and the corpus leg share ONE encode pass
-    #    instead of two full-plan evaluations. The checkpoint row is
-    #    scale-honest: (vec_id, cell, pcells, codes) ints plus the
-    #    m x codes double table ONLY for query rows (`qd` is NULL for
-    #    the rest of the corpus).
-    vcol = _vec_double(F.col("embedding"))
-    nrm = F.sqrt(_fold_sum(F.transform(vcol, lambda x: x * x)))
-    pre = emb.select("vec_id", vcol.alias("v"), nrm.alias("nrm")).filter(
-        F.col("nrm") > 0
-    )
-    per_row = F.element_at(
-        F.transform(
-            F.array(F.struct(F.col("v").alias("v"), F.col("nrm").alias("nrm"))),
-            lambda r: F.element_at(
-                F.transform(
-                    F.array(F.transform(r["v"], lambda x: x / r["nrm"])),
-                    lambda vn: F.element_at(
-                        F.transform(
-                            F.array(_pq_dls(vn, cb_lit)),
-                            lambda dl: F.struct(
-                                F.transform(
-                                    F.slice(_ranked_cells(r["v"]), 1, probes),
-                                    lambda p: p["cell"],
-                                ).alias("pcells"),
-                                _pq_codes_col(dl).alias("codes"),
-                                F.when(F.col("vec_id") < _KNN_QUERIES, dl).alias(
-                                    "qd"
-                                ),
-                            ),
-                        ),
-                        1,
-                    ),
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
-    enc = (
-        pre.select("vec_id", per_row.alias("r"))
-        .select(
-            "vec_id",
-            F.element_at(F.col("r.pcells"), 1).alias("cell"),
-            F.col("r.pcells").alias("pcells"),
-            F.col("r.codes").alias("codes"),
-            F.col("r.qd").alias("qd"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    q = enc.filter(F.col("vec_id") < _KNN_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("qd").alias("qd"),
-        F.explode(F.col("pcells")).alias("cell"),
-    )
-    scored = (
-        enc.select("vec_id", "cell", "codes")
-        .join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pq_adc_col().alias("adc"))
-    )
-    return _rank_by_adc(scored, k)
-
-
-def _nn05_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _KNN_K,
-    probes: int = _IVF_PROBES,
-) -> DataFrame:
-    """Vectorized IVF-PQ (see nn05 docstring) on the shared Arrow
-    scaffold: the gate assigns cells with one (n, cells, dim) distance
-    reduction over the RAW vectors (nn03's space) and masks each row to
-    the queries probing its cell, so rows outside every probe set never
-    pay the ADC math; the score block is ``_pq_adc_block`` over the
-    normalized vectors (nn04's space)."""
+    end-to-end. On the shared Arrow scaffold, the gate assigns cells
+    with one (n, cells, dim) distance reduction over the RAW vectors
+    (nn03's space) and masks each row to the queries probing its cell,
+    so rows outside every probe set never pay the ADC math; the score
+    block is ``_pq_adc_block`` over the normalized vectors (nn04's
+    space). At 100 TB only the per-batch partial top-k shuffles — no
+    all-pairs stage anywhere."""
     import numpy as np
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3766,7 +3369,6 @@ def nn06_residual_ivfpq(
     *,
     k: int = _KNN_K,
     probes: int = _IVF_PROBES,
-    impl: str = "sql",
 ) -> DataFrame:
     """Residual IVF-PQ — nn05 with the PQ codebooks fit on
     ``vn - centroid[cell]`` instead of the raw normalized vector, the
@@ -3787,138 +3389,14 @@ def nn06_residual_ivfpq(
     quantization error < flat nn05's at the same operating point) is
     measured in tests/test_ann_recall.py.
 
-    At 100 TB: corpus rows shuffle as (cell, 8 codes) ints exactly like
-    nn05; the query side stays dimension-sized (probes× rows, each with
-    an m×codes table) and broadcasts; the probe join is an int
-    equi-join. Residual encoding adds ONE vector subtraction per corpus
-    row in the scan projection — nothing new shuffles."""
-    if impl == "arrow":
-        return _nn06_arrow(spark, sf_dir, k=k, probes=probes)
-    # r13: fanned-out scan (guide §2.5 — the single-row-group file
-    # serialized the encode on one task). r14 (VERDICT r13 item 2,
-    # guide §5): ONE eager-checkpointed encode pass shared by the
-    # corpus and query legs, the nn05 pattern — the checkpoint row
-    # carries (cell, codes) for every row plus pcells and the
-    # normalized vector ONLY for query rows (NULL otherwise), so the
-    # query leg derives its per-(query, probed-cell) residual tables
-    # from the checkpoint instead of replaying the scan + cell ranking
-    # in a second subtree. Same doubles in, same _res_dls expression →
-    # bit-identical qd tables; oracle + ANN recall suite re-verified.
-    emb = _fan_scan(spark, sf_dir, "embeddings")
-    cents, cbs = _residual_ivfpq_fit(_train_vecs(spark, sf_dir))
-    cent_arr = _cents_spark_literal(cents)
-    cb_lit = _pq_spark_literal(cbs)
-
-    base = _normalized_vn_base(emb)
-
-    def _ranked_cells(vn):
-        return _ranked_cells_of(vn, cent_arr)
-
-    def _res_dls(vn, cell):
-        # bind the residual as a lambda variable so its producer (the
-        # zip_with subtraction) is computed once, not re-inlined per
-        # subspace element (shingles lesson); F.get is 0-based like cell
-        return F.element_at(
-            F.transform(
-                F.array(
-                    F.zip_with(vn, F.get(cent_arr, cell), lambda a, b: a - b)
-                ),
-                lambda rq: _pq_dls(rq, cb_lit),
-            ),
-            1,
-        )
-
-    # one row-encode for BOTH legs: bind vn -> ranked cells -> assigned
-    # cell -> residual tables -> codes, each stage a bound lambda
-    # variable so nothing re-inlines; query rows (vec_id < queries)
-    # additionally keep their probe list and normalized vector for the
-    # query leg below
-    per_row = F.element_at(
-        F.transform(
-            F.array(F.col("vn")),
-            lambda vn: F.element_at(
-                F.transform(
-                    F.array(_ranked_cells(vn)),
-                    lambda rc: F.element_at(
-                        F.transform(
-                            F.array(F.element_at(rc, 1)["cell"]),
-                            lambda cell: F.element_at(
-                                F.transform(
-                                    F.array(_res_dls(vn, cell)),
-                                    lambda dls: F.struct(
-                                        cell.alias("cell"),
-                                        _pq_codes_col(dls).alias("codes"),
-                                        F.when(
-                                            F.col("vec_id") < _KNN_QUERIES,
-                                            F.transform(
-                                                F.slice(rc, 1, probes),
-                                                lambda p: p["cell"],
-                                            ),
-                                        ).alias("pcells"),
-                                        F.when(
-                                            F.col("vec_id") < _KNN_QUERIES, vn
-                                        ).alias("qvn"),
-                                    ),
-                                ),
-                                1,
-                            ),
-                        ),
-                        1,
-                    ),
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
-    enc = (
-        base.select("vec_id", per_row.alias("r"))
-        .select(
-            "vec_id",
-            F.col("r.cell").alias("cell"),
-            F.col("r.codes").alias("codes"),
-            F.col("r.pcells").alias("pcells"),
-            F.col("r.qvn").alias("qvn"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # query leg FROM the checkpoint: 8 tiny rows, no second scan/rank
-    # subtree; the per-(query, probed cell) residual table is computed
-    # here because it depends on the probed cell
-    q = (
-        enc.filter(F.col("vec_id") < _KNN_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("qvn").alias("vn"),
-            F.explode("pcells").alias("cell"),
-        )
-        .select(
-            "q_id", "cell", _res_dls(F.col("vn"), F.col("cell")).alias("qd")
-        )
-    )
-    scored = (
-        enc.select("vec_id", "cell", "codes")
-        .join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pq_adc_col().alias("adc"))
-    )
-    return _rank_by_adc(scored, k)
-
-
-def _nn06_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _KNN_K,
-    probes: int = _IVF_PROBES,
-) -> DataFrame:
-    """Vectorized residual IVF-PQ (see nn06 docstring) on the shared
-    Arrow scaffold: the gate assigns cells in the NORMALIZED space and
-    masks each row to the queries probing its cell (the cell rides
-    along to scoring); the score block encodes the residual
-    ``vn - centroid[cell]`` and gathers from the per-(query, probe)
-    table of the row's OWN cell. A row has one cell and a query's
-    probes are distinct, so each (row, query) pair falls in at most one
-    probe and the whole (n, q) block is one gather."""
+    On the shared Arrow scaffold, the gate assigns cells in the
+    NORMALIZED space and masks each row to the queries probing its cell
+    (the cell rides along to scoring); the score block encodes the
+    residual ``vn - centroid[cell]`` and gathers from the
+    per-(query, probe) table of the row's OWN cell. A row has one cell
+    and a query's probes are distinct, so each (row, query) pair falls
+    in at most one probe and the whole (n, q) block is one gather. At
+    100 TB only the per-batch partial top-k shuffles."""
     import numpy as np
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -4476,7 +3954,6 @@ def dd10_semantic_dedup(
     *,
     threshold: float = _NEARDUP_COS,
     cells: int = _IVF_CELLS,
-    impl: str = "sql",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup with the pair
     search confined to k-means CELLS of the embedding space instead of
@@ -4491,94 +3968,25 @@ def dd10_semantic_dedup(
     against dd05's multi-table LSH, in exchange for a candidate stage
     with NO banding tables and cells that double as topic strata.
 
-    Scale shape: assignment happens in the scan projection (one fold
-    over the centroid literal per row, nn06's normalized space); the
-    within-cell self-join is the only shuffle, bounded by cell
-    occupancy; the dup-id set collapses distinct map-side and comes
-    back as an UNHINTED left join keyed on vec_id — the dup set is
-    dup-rate-sized (billions of rows at a realistic 10-30% dup rate
-    on 100 TB), so no broadcast hint: AQE elects the strategy from
-    measured sizes (plan-pinned in tests/test_plan_shapes.py). The
-    seeded fit replays in the oracle, so every keep/drop verdict is
-    hash-verified.
+    Scale shape: the shared ``_arrow_semdedup`` kernel. Assignment is
+    one (batch, cells) numpy distance reduction per Arrow batch in
+    nn06's normalized space (argmin = first-lowest cell on ties, the
+    oracle's list_position-of-min); the ``cell`` shuffle of
+    (vec_id, cell, vn) is the only exchange, and a per-cell gram matrix
+    decides keep/drop — no self-join, no hint (plan-pinned in
+    tests/test_plan_shapes.py). The seeded fit replays in the oracle,
+    so every keep/drop verdict is hash-verified.
 
     Cost law (measured, scripts/scale_smoke.py K=20): assignment costs
-    rows*cells, the cell join costs rows*occupancy = rows^2/cells —
-    the optimal single-level schedule is cells ~ sqrt(rows), where
-    BOTH terms are Θ(rows^1.5). That is single-level SemDeDup's
-    inherent cost, and the smoke gates it against 2*K^1.5 (not the
-    linear bound the banded/bucketed dedups meet). An
+    rows*cells, the per-cell pair search costs rows*occupancy =
+    rows^2/cells — the optimal single-level schedule is cells ~
+    sqrt(rows), where BOTH terms are Θ(rows^1.5). That is single-level
+    SemDeDup's inherent cost, and the smoke gates it against 2*K^1.5
+    (not the linear bound the banded/bucketed dedups meet). An
     occupancy-constant cells ~ rows schedule does NOT help: it makes
-    the join linear but the assignment fold quadratic. Going below
+    the pair search linear but the assignment quadratic. Going below
     n^1.5 requires a hierarchical (coarse->fine) quantizer for the
-    assignment — the standard FAISS-style extension, out of scope for
-    the oracle-pinned single-level form.
-
-    ``impl="arrow"`` cuts the CONSTANT of both n^1.5 terms (same law,
-    same verdicts) on the shared ``_arrow_semdedup`` kernel: assignment
-    is one (batch, cells) numpy distance reduction per Arrow batch, and
-    the within-cell pair search is a per-cell gram matrix instead of a
-    self-join of interpreted dot folds. Equivalence-gated on
-    (vec_id, cell, keep) in tests/test_scale_paths.py; the SQL form
-    stays the oracle subject."""
-    if impl == "arrow":
-        return _dd10_arrow(spark, sf_dir, threshold=threshold, cells=cells)
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = _fit_centroids(
-        [list(r) for r in _normalized_sample_matrix(_train_vecs(spark, sf_dir))],
-        k=cells,
-    )
-    cent_arr = _cents_spark_literal(cents)
-
-    base = _normalized_vn_base(emb)
-    cell = F.element_at(
-        F.transform(
-            F.array(F.col("vn")),
-            lambda vn: F.element_at(_ranked_cells_of(vn, cent_arr), 1)["cell"],
-        ),
-        1,
-    )
-    # the assignment fold (cells x dim per row) feeds BOTH self-join
-    # sides and the final verdict join — materialize it once
-    # (GC-reclaimed lazy checkpoint, the dd08 signature pattern) instead
-    # of recomputing it per consumer
-    assigned = base.select("vec_id", "vn", cell.alias("cell")).localCheckpoint(
-        eager=False
-    )
-    return _semdedup_verdicts(assigned, threshold)
-
-
-def _semdedup_verdicts(assigned: DataFrame, threshold: float) -> DataFrame:
-    """SemDeDup verdicts over (vec_id, vn, cell), shared by dd10/dd11's
-    SQL forms: the within-cell self-join keeps a < b pairs within the
-    cosine threshold, and the dup-id set comes back as an UNHINTED left
-    join keyed on vec_id (see dd10's docstring)."""
-    dups = (
-        assigned.alias("x")
-        .join(assigned.alias("b"), "cell")
-        .filter(F.col("x.vec_id") < F.col("b.vec_id"))
-        .filter(_dot(F.col("x.vn"), F.col("b.vn")) >= threshold)
-        .select(F.col("b.vec_id").alias("vec_id"))
-        .distinct()
-        .select("vec_id", F.lit(True).alias("is_dup"))
-    )
-    return assigned.join(dups, "vec_id", "left").select(
-        "vec_id",
-        F.col("cell").cast("int").alias("cell"),
-        F.col("is_dup").isNull().alias("keep"),
-    )
-
-
-def _dd10_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    threshold: float = _NEARDUP_COS,
-    cells: int = _IVF_CELLS,
-) -> DataFrame:
-    """Vectorized SemDeDup (see dd10 docstring) on ``_arrow_semdedup``:
-    the assignment is one (n, cells) distance reduction per batch
-    (argmin = first-lowest cell on ties, the SQL form's tie rule)."""
+    assignment — dd11."""
     import numpy as np
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -4597,13 +4005,13 @@ def _dd10_arrow(
 
 
 def _arrow_semdedup(emb: DataFrame, dim: int, threshold: float, assign) -> DataFrame:
-    """Shared SemDeDup kernel for dd10/dd11's Arrow twins: per Arrow
-    batch, ``_arrow_rows``' guards (NULL/wrong-dim/zero-norm rows
-    dropped, as ``_normalized_vn_base`` does) and ``assign(Vn) -> cell``
-    on the normalized vectors; then ONE shuffle by cell and a per-cell
-    gram matrix decides keep/drop — a vector drops iff any smaller-id
-    cell-mate is within the cosine threshold, read straight off the
-    matrix's strict upper triangle (the SQL self-join's a < b pairs)."""
+    """Shared SemDeDup kernel of dd10/dd11: per Arrow batch,
+    ``_arrow_rows``' guards (NULL/wrong-dim/zero-norm rows dropped) and
+    ``assign(Vn) -> cell`` on the normalized vectors; then ONE shuffle
+    by cell and a per-cell gram matrix decides keep/drop — a vector
+    drops iff any smaller-id cell-mate is within the cosine threshold,
+    read straight off the matrix's strict upper triangle (the oracle
+    self-join's a < b pairs)."""
     import numpy as np
     import pandas as pd
 
@@ -4667,22 +4075,6 @@ def _fit_hier_cells(
     used = sorted(set(f2c))
     remap = {c: i for i, c in enumerate(used)}
     return fine, [coarse[c] for c in used], [remap[c] for c in f2c]
-
-
-def _fine_structs_literal(fine: list, f2c: list):
-    """Fine level as ONE folded literal of struct(idx, cg, c) — the
-    membership filter reads cg (an int compare per fine cell) and only
-    the surviving members pay the dim-length distance fold."""
-    return F.expr(
-        "array("
-        + ",".join(
-            f"named_struct('idx', {j}, 'cg', {f2c[j]}, 'c', array("
-            + ",".join(repr(float(x)) + "D" for x in fine[j])
-            + "))"
-            for j in range(len(fine))
-        )
-        + ")"
-    )
 
 
 def _dd11_sql(
@@ -4782,7 +4174,6 @@ def dd11_hierarchical_semdedup(
     cells: int = _IVF_CELLS,
     coarse: int = _HIER_COARSE,
     cprobes: int = _HIER_PROBES,
-    impl: str = "sql",
 ) -> DataFrame:
     """Hierarchical SemDeDup — dd10 with a FAISS-style coarse->fine
     assignment quantizer, the documented extension that takes semantic
@@ -4790,10 +4181,10 @@ def dd11_hierarchical_semdedup(
     dd10's: within each FINE cell, a vector is a dup when a smaller-id
     cell-mate sits within the cosine threshold; the hierarchy only
     changes HOW a row finds its fine cell — the top-``cprobes``
-    nearest coarse centroids first (k1 folds), then nearest fine
-    centroid among those coarse cells' members (~cprobes*k/k1 folds)
-    instead of all k. Multi-probing the coarse level is ct03's recall
-    lever applied to the hierarchy: a row whose
+    nearest coarse centroids first (k1 distances), then nearest fine
+    centroid among those coarse cells' members (~cprobes*k/k1
+    distances) instead of all k. Multi-probing the coarse level is
+    ct03's recall lever applied to the hierarchy: a row whose
     true fine cell sits just across a coarse boundary still finds it
     via the second-nearest coarse cell, lifting dup-recall from 0.66
     (single-probe) to 0.70 on the recall fixture (cprobes=3 measures
@@ -4803,8 +4194,8 @@ def dd11_hierarchical_semdedup(
 
     Cost law: with cells ~ n^(2/3) and coarse ~ n^(1/3), assignment is
     rows*(k1 + cprobes*k/k1) = Θ(n^(4/3)) for any fixed probe count,
-    and the within-cell join is rows*occupancy = Θ(n^(4/3)) — vs
-    Θ(n^1.5) for both stages of single-level dd10 at its balanced
+    and the within-cell pair search is rows*occupancy = Θ(n^(4/3)) —
+    vs Θ(n^1.5) for both stages of single-level dd10 at its balanced
     cells ~ sqrt(n) schedule. The smoke (scripts/scale_smoke.py) gates
     this at 2*K^(4/3) with the knobs on that schedule. The residual
     recall tradeoff is the FINE-cell boundary (dd10's own documented
@@ -4814,108 +4205,16 @@ def dd11_hierarchical_semdedup(
     filter a no-op) and cprobes >= coarse ≡ dd10 (probing every coarse
     cell un-masks every fine cell), both over the SAME fine fit.
 
-    Scale shape mirrors dd10: assignment lives in the scan projection
-    (coarse fold bound once, then member-filtered fine folds — the
-    filter compares ints per fine cell; only members pay a dim-length
-    fold), the within-fine-cell self-join is the only shuffle, and the
-    dup-id set comes back as an UNHINTED left join keyed on vec_id —
-    dup-rate-sized like dd10's, so no broadcast hint (AQE elects the
-    strategy from measured sizes; plan-pinned in
-    tests/test_plan_shapes.py). Both fit levels replay in the oracle
-    (constants shared verbatim), so every keep/drop verdict is
-    hash-verified.
-
-    ``impl="arrow"`` cuts the constant of both n^(4/3) terms (same law,
-    same verdicts): the shared ``_arrow_semdedup`` kernel with a
-    coarse→fine probe-group assignment per Arrow batch (see
-    ``_dd11_arrow``). Equivalence-gated on (vec_id, cell, keep) in
-    tests/test_scale_paths.py; the SQL form stays the oracle
-    subject."""
-    if impl == "arrow":
-        return _dd11_arrow(
-            spark,
-            sf_dir,
-            threshold=threshold,
-            cells=cells,
-            coarse=coarse,
-            cprobes=cprobes,
-        )
-    emb = _t(spark, sf_dir, "embeddings")
-    fine, co, f2c = _fit_hier_cells(
-        [list(r) for r in _normalized_sample_matrix(_train_vecs(spark, sf_dir))],
-        k_fine=cells,
-        k_coarse=coarse,
-    )
-    co_arr = _cents_spark_literal(co)
-    fine_structs = _fine_structs_literal(fine, f2c)
-
-    base = _normalized_vn_base(emb)
-    # bind vn once (the computed-array lambda rule), then bind the
-    # probed coarse-cell set once so the member filter's per-fine-cell
-    # membership check reads a value, not re-inlined k1-folds
-    cell = F.element_at(
-        F.transform(
-            F.array(F.col("vn")),
-            lambda vn: F.element_at(
-                F.transform(
-                    F.array(
-                        F.transform(
-                            F.slice(
-                                _ranked_cells_of(vn, co_arr), 1, cprobes
-                            ),
-                            lambda s: s["cell"],
-                        )
-                    ),
-                    lambda pc: F.element_at(
-                        F.array_sort(
-                            F.transform(
-                                F.filter(
-                                    fine_structs,
-                                    lambda s: F.array_contains(pc, s["cg"]),
-                                ),
-                                lambda s: F.struct(
-                                    _fold_sum(
-                                        F.zip_with(
-                                            vn,
-                                            s["c"],
-                                            lambda a, b: (a - b) * (a - b),
-                                        )
-                                    ).alias("d"),
-                                    s["idx"].alias("cell"),
-                                ),
-                            )
-                        ),
-                        1,
-                    )["cell"],
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
-    assigned = base.select("vec_id", "vn", cell.alias("cell")).localCheckpoint(
-        eager=False
-    )
-    return _semdedup_verdicts(assigned, threshold)
-
-
-def _dd11_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    threshold: float = _NEARDUP_COS,
-    cells: int = _IVF_CELLS,
-    coarse: int = _HIER_COARSE,
-    cprobes: int = _HIER_PROBES,
-) -> DataFrame:
-    """Vectorized hierarchical SemDeDup (see dd11 docstring) on
-    ``_arrow_semdedup``: per batch a (n, k1) distance reduction picks
-    each row's top-``cprobes`` coarse cells (stable argsort — ties
-    break to the lowest cell id, the ranked-struct tie rule), then each
-    probe-set group takes an argmin over only the UNION of its member
-    fine centroids (np.argmin = first minimum, mapped back through the
-    ascending member-index list = the SQL form's masked-argmin tie
-    rule)."""
+    Scale shape mirrors dd10 on the shared ``_arrow_semdedup`` kernel:
+    per Arrow batch a (n, k1) distance reduction picks each row's
+    top-``cprobes`` coarse cells (stable argsort — ties break to the
+    lowest cell id), then each probe-set group takes an argmin over
+    only the UNION of its member fine centroids (np.argmin = first
+    minimum, mapped back through the ascending member-index list = the
+    oracle's masked-argmin tie rule). The ``cell`` shuffle is the only
+    exchange (plan-pinned in tests/test_plan_shapes.py). Both fit
+    levels replay in the oracle (constants shared verbatim), so every
+    keep/drop verdict is hash-verified."""
     import numpy as np
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -5212,7 +4511,6 @@ def nn07_opq_pq(
     sf_dir: str,
     *,
     k: int = _KNN_K,
-    impl: str = "sql",
 ) -> DataFrame:
     """OPQ-style rotated PQ — nn04 with a learned orthogonal rotation
     prepended (Ge et al.'s optimized product quantization, PCA +
@@ -5227,80 +4525,11 @@ def nn07_opq_pq(
     superiority); on real embedding corpora with correlated dims it is
     the standard accuracy upgrade at identical query cost.
 
-    Scale shape: identical to nn04 — the rotation is ONE extra fold
-    over a constant-folded 64x64 literal in the scan projection
-    (corpus rows still shuffle as 8 nibble codes; nothing new moves),
-    and the query block broadcasts with its rotated lookup tables.
-    Both fit stages replay in the oracle, hash-verifying the rotated
-    hand-off end-to-end."""
-    if impl == "arrow":
-        return _nn07_arrow(spark, sf_dir, k=k)
-    # r13 optimization (the nn05 pattern, see there): fanned-out scan,
-    # rotation and distance lists bound once per row, one checkpointed
-    # encode pass shared by both legs, `qd` kept only for query rows
-    emb = _fan_scan(spark, sf_dir, "embeddings")
-    R, cbs = _opq_rotation_fit(_train_vecs(spark, sf_dir))
-    rt_lit = _cents_spark_literal(R)  # same array<array<double>> literal shape
-    cb_lit = _pq_spark_literal(cbs)
-
-    base = _normalized_vn_base(emb)
-
-    def _rotated(vn):
-        # rv[i] = sum_j R[i][j] * vn[j]: one fold per output dim over
-        # the constant-folded rotation literal
-        return F.transform(
-            rt_lit,
-            lambda row: _fold_sum(F.zip_with(row, vn, lambda a, b: a * b)),
-        )
-
-    per_row = F.element_at(
-        F.transform(
-            F.array(F.col("vn")),
-            lambda vn: F.element_at(
-                F.transform(
-                    F.array(_rotated(vn)),
-                    lambda rv: F.element_at(
-                        F.transform(
-                            F.array(_pq_dls(rv, cb_lit)),
-                            lambda dl: F.struct(
-                                _pq_codes_col(dl).alias("codes"),
-                                F.when(
-                                    F.col("vec_id") < _KNN_QUERIES, dl
-                                ).alias("qd"),
-                            ),
-                        ),
-                        1,
-                    ),
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
-    enc = (
-        base.select("vec_id", per_row.alias("r"))
-        .select("vec_id", F.col("r.codes").alias("codes"), F.col("r.qd").alias("qd"))
-        .localCheckpoint(eager=True)
-    )
-    q = enc.filter(F.col("vec_id") < _KNN_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("qd").alias("qd")
-    )
-    scored = (
-        enc.select("vec_id", "codes")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _pq_adc_col().alias("adc"))
-    )
-    return _rank_by_adc(scored, k)
-
-
-def _nn07_arrow(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _KNN_K,
-) -> DataFrame:
-    """Vectorized rotated PQ (see nn07 docstring): one rotation matmul
-    per batch ahead of ``_pq_adc_block`` on the shared Arrow scaffold."""
+    Scale shape: identical to nn04 — the rotation is ONE extra matmul
+    per Arrow batch ahead of ``_pq_adc_block`` on the shared scaffold
+    (nothing new moves), and the query block's lookup tables are built
+    in the rotated space. Both fit stages replay in the oracle,
+    hash-verifying the rotated hand-off end-to-end."""
     import numpy as np
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -5383,37 +4612,13 @@ def _nn08_oracle() -> str:
 
 
 def _nn09_oracle() -> str:
-    """DuckDB twin of the twin/leg contract gate (split out of nn08 in
-    round 10 so rotation can park the two gates independently — VERDICT
-    r09 item 7). Two row kinds:
-
-    - dd10/dd11 twin-contract rows (VERDICT r06 item 3): the Spark side
-      counts (vec_id, cell, keep) agreements between each SemDeDup
-      form's Arrow twin and its SQL form; the oracle replays the SQL
-      form once, so its expectation is TOTAL agreement — any silent
-      Arrow/SQL divergence leaves Spark's hits short of total and turns
-      the whole driver row red.
-    - production-retrieval-leg contract rows (VERDICT r07 item 3): both
-      the brute-force oracle and the IVF-twin SQL replay here, hits =
-      result pairs they agree on, total = the brute-force set — the
-      IVF legs' recall floors become driver-re-verified numbers."""
-    from .queries import REGISTRY
-
+    """DuckDB twin of the production-retrieval-leg contract gate
+    (VERDICT r07 item 3): both the brute-force oracle and the IVF-twin
+    SQL replay here, hits = result pairs they agree on, total = the
+    brute-force set — the IVF legs' recall floors become
+    driver-re-verified numbers."""
     ctes = []
     selects = []
-    for dname in ("dd10_semantic_dedup", "dd11_hierarchical_semdedup"):
-        tag = dname.split("_")[0]
-        ctes.append(
-            f"t_{tag} AS (SELECT count(*) AS total FROM ("
-            + REGISTRY[dname].oracle_text()
-            + ") s)"
-        )
-        selects.append(
-            f"SELECT '{dname}' AS path, total AS hits, total,\n"
-            "       CAST(total AS DOUBLE) / total AS recall,\n"
-            "       CAST(total AS DOUBLE) / total >= 1.0 AS meets_floor\n"
-            f"FROM t_{tag}"
-        )
     leg_specs = [
         ("tp02_hard_negatives", _tp02_sql(), _tp02_ivf_sql(), "q_id, neg_id"),
         ("rk01_rank_fusion", _rk01_sql(), _rk01_sql(ivf=True), "q_id, doc_id"),
@@ -5457,21 +4662,16 @@ def nn08_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes once (GC-reclaimed lazy localCheckpoint, the dd09
     pattern) and broadcasts into six tiny hash joins. Each approximate
     path keeps its own documented scan/probe shape; the gate adds no
-    shuffle of its own beyond six single-row aggregates. The paths run
-    on their Arrow twins — the throughput recommendation — which the
-    equivalence gates (tests/test_scale_paths.py) pin rank-identical to
-    the exactness-pinned SQL forms, so the recall SETS are the same and
-    the oracle (composed from the SQL forms' replayed-fit oracles)
-    still hash-matches; a silent Arrow/SQL divergence would turn this
-    row red, making the driver itself re-verify the twin contract.
+    shuffle of its own beyond six single-row aggregates. The oracle is
+    composed from the paths' own replayed-fit oracles, so the recall
+    SETS hash-match only while every path stays rank-identical to its
+    oracle.
 
-    The dedup-twin and production-retrieval-leg contract rows that
-    composed here through round 9 now live in ``nn09_twin_contracts``
-    (VERDICT r09 item 7: the combined 10-row gate cost ~30 s of the
-    driver window; the split lets rotation park the two gates
-    independently)."""
+    The production-retrieval-leg contract rows live in
+    ``nn09_twin_contracts``, so the two gates can be parked
+    independently."""
     exact = (
-        nn01_cosine_topk(spark, sf_dir, impl="arrow")
+        nn01_cosine_topk(spark, sf_dir)
         .select("q_id", "vec_id", "rk")
         .localCheckpoint(eager=False)
     )
@@ -5487,7 +4687,7 @@ def nn08_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, k, floor in _NN_RECALL_FLOORS:
         truth = exact.filter(F.col("rk") <= k).select("q_id", "vec_id")
         hits = (
-            paths[name](spark, sf_dir, impl="arrow")
+            paths[name](spark, sf_dir)
             .select("q_id", "vec_id")
             .join(F.broadcast(truth), ["q_id", "vec_id"])
             .agg(F.count(F.lit(1)).alias("hits"))
@@ -5507,28 +4707,10 @@ def nn08_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("nn09_twin_contracts", oracle=_nn09_oracle, ops=("TWIN-CONTRACT-GATE",))
 def nn09_twin_contracts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-verified twin/leg contract gate, split out of
-    ``nn08_recall_gate`` in round 10 (VERDICT r09 item 7) so rotation
-    can park the ANN-recall rows and these composed-contract rows
-    independently. Four rows:
-
-    Two rows extend the driver-verified twin contract to the DEDUP
-    family (VERDICT r06 item 3): for dd10 AND dd11, hits =
-    (vec_id, cell, keep) verdicts the Arrow twin and SQL form agree on,
-    total = the verdict count, and the oracle (one replay of each SQL
-    form) expects full agreement — recall 1.0, floor 1.0 — so a single
-    diverging keep/drop verdict anywhere in the corpus turns the row
-    red. The agreement join carries NO broadcast hint (VERDICT r09
-    item 1: ``d_arrow`` is the FULL per-vector verdict table — corpus-
-    sized, the same a-priori-unbounded class the r08/r09 de-hint fixes
-    removed from the production dedup paths; a gate that only runs
-    when its driver can hold the corpus is a weaker contract). AQE
-    elects the strategy from measured sizes — at correctness SFs it
-    picks the same broadcast the hint used to force; at 100 TB it
-    degrades gracefully to a keyed sort-merge join.
-
-    Two rows gate the composed PRODUCTION retrieval legs (VERDICT r07
-    item 3): tp02's IVF hard-negative miner and rk01's IVF semantic
+    """Driver-verified contract gate for the composed PRODUCTION
+    retrieval legs (VERDICT r07 item 3), kept apart from
+    ``nn08_recall_gate`` so the two gates can be parked independently.
+    Two rows: tp02's IVF hard-negative miner and rk01's IVF semantic
     retriever each count the result pairs they share with their own
     brute-force oracle-subject form (hits) against that form's full set
     (total); the floors live in ``_LEG_RECALL_FLOORS`` — one constant
@@ -5537,36 +4719,6 @@ def nn09_twin_contracts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver row red. The leg sets stay genuinely bounded (|queries|
     × k), so their hit joins keep the broadcast hint."""
     out = None
-    # dedup twin-contract rows: hits = (vec_id, cell, keep) verdicts the
-    # Arrow twin and the SQL form AGREE on; the oracle's expectation is
-    # hits == total, so one diverging verdict turns the row red — the
-    # nn-family twin verification extended to both SemDeDup forms.
-    d_recall = F.col("hits") / F.col("total")
-    for dname, dfn in (
-        ("dd10_semantic_dedup", dd10_semantic_dedup),
-        ("dd11_hierarchical_semdedup", dd11_hierarchical_semdedup),
-    ):
-        d_sql = dfn(spark, sf_dir)
-        d_arrow = dfn(spark, sf_dir, impl="arrow")
-        d_row = (
-            d_sql.join(d_arrow, ["vec_id", "cell", "keep"])
-            .agg(F.count(F.lit(1)).alias("hits"))
-            .crossJoin(d_sql.agg(F.count(F.lit(1)).alias("total")))
-            .select(
-                F.lit(dname).alias("path"),
-                "hits",
-                "total",
-                d_recall.alias("recall"),
-                (d_recall >= F.lit(1.0)).alias("meets_floor"),
-            )
-        )
-        out = d_row if out is None else out.unionByName(d_row)
-    # production-retrieval-leg contract rows (VERDICT r07 item 3): the
-    # composed IVF legs (tp02's hard-negative miner, rk01's semantic
-    # retriever) re-verify their recall floors vs their own brute-force
-    # oracle-subject forms every driver round — hits = result pairs the
-    # two forms agree on, total = the brute-force set, floor shared
-    # with the oracle via _LEG_RECALL_FLOORS.
     for rname, rfn, keycols in (
         ("tp02_hard_negatives", tp02_hard_negatives, ["q_id", "neg_id"]),
         ("rk01_rank_fusion", rk01_rank_fusion, ["q_id", "doc_id"]),
@@ -5587,7 +4739,7 @@ def nn09_twin_contracts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (l_recall >= F.lit(floor)).alias("meets_floor"),
             )
         )
-        out = out.unionByName(l_row)
+        out = l_row if out is None else out.unionByName(l_row)
     return out
 
 

@@ -71,11 +71,10 @@ tests/test_risk_pipeline.py, registered end-to-end as
 `operators/export.py`, and feeding the Spark ML fraud classifier in
 `operators/ml.py` (tests/test_ml_fraud.py). Approximate operators (ANN,
 sketch aggregates) are quality-gated against their exact twins
-(tests/test_ann_recall.py, tests/test_scale_paths.py); nn01/nn02 also
-ship Arrow-vectorized implementation variants (`impl="arrow"`, one
-numpy matmul per batch instead of interpreted SQL folds) that are
-equivalence-gated against the exactness-pinned SQL forms and timed
-round-over-round via bench.py's VARIANTS table.
+(tests/test_ann_recall.py, tests/test_scale_paths.py). The ANN
+(nn01–nn07), SemDeDup (dd10/dd11) and UD2 spec-extraction entries run
+as Arrow kernels (one numpy block per Arrow batch, or one scalar
+`pandas_udf`), each compared exactly to its DuckDB oracle.
 
 | op | coverage |
 |---|---|"""

@@ -216,9 +216,9 @@ def _emb_op_nn06(spark, sf_dir, k):
     )
 
     # fixed cells/probes: the probed candidate stream is a constant
-    # FRACTION of the corpus, so the Arrow scale path should scale
-    # linearly with no knob change
-    return nn06_residual_ivfpq(spark, sf_dir, impl="arrow")
+    # FRACTION of the corpus, so the op should scale linearly with no
+    # knob change
+    return nn06_residual_ivfpq(spark, sf_dir)
 
 
 #: (label, fn, ratio_bound(k)) — each op is gated against its DOCUMENTED
@@ -234,7 +234,7 @@ EMB_OPS = [
     # the hierarchical assignment's improved law (VERDICT r06 item 2):
     # gated BELOW dd10's n^1.5 at its own documented n^(4/3)
     ("dd11_hierarchical_semdedup", _emb_op_dd11, lambda k: 2 * k ** (4.0 / 3.0)),
-    ("nn06_residual_ivfpq_arrow", _emb_op_nn06, lambda k: 2 * k),
+    ("nn06_residual_ivfpq", _emb_op_nn06, lambda k: 2 * k),
 ]
 
 

@@ -68,9 +68,15 @@ def test_a12_other_bucket_avoids_rank_window(spark, sf_dir):
 
 
 def test_nn01_broadcasts_queries_not_corpus(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "nn01_cosine_topk")
-    assert "BroadcastNestedLoopJoin" in plan  # tiny query side broadcast
-    assert "WindowGroupLimit" in plan  # per-partition top-k pushdown
+    """Brute-force top-k ships the tiny query block inside its Arrow
+    kernel and streams the corpus once: the plan's one data-moving
+    exchange carries only the per-batch partial top-k
+    (q_id, vec_id, cos) — the corpus embedding column never shuffles —
+    and the merge keeps its per-partition top-k pushdown."""
+    payload = _single_exchange_payload(spark, sf_dir, "nn01_cosine_topk")
+    assert all(c in payload for c in ("q_id#", "vec_id#", "cos#")), payload
+    assert "embedding#" not in payload, payload
+    assert "WindowGroupLimit" in _plan(spark, sf_dir, "nn01_cosine_topk")
 
 
 def test_nested_schema_pruning_on_export(spark, sf_dir, tmp_path):
@@ -304,6 +310,36 @@ def _exchange_payloads(
     return out
 
 
+def _single_exchange_payload(spark, sf_dir, name) -> str:
+    """The Input line of the plan's one data-moving exchange (the
+    round-robin scan fan-out excluded, see _exchange_payloads); fails
+    when the plan has none or more than one."""
+    payloads = _exchange_payloads(
+        _formatted_plan(spark, sf_dir, name), skip_round_robin=True
+    )
+    assert len(payloads) == 1, f"{name}: expected one exchange, got {payloads}"
+    return payloads[0]
+
+
+def _assert_semdedup_plan(spark, sf_dir, name) -> None:
+    """SemDeDup's scale contract (dd10/dd11): the analyzed plan carries
+    no hint, no all-pairs join appears, and the only exchange is the
+    ``cell`` shuffle of (vec_id, cell, vn) — the raw embedding column
+    never moves, and the scan reads only (vec_id, embedding)."""
+    df = REGISTRY[name].fn(spark, sf_dir)
+    qe = df._jdf.queryExecution()
+    assert qe.analyzed().toString().count("ResolvedHint") == 0
+    plan = qe.executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "hashpartitioning(cell#" in plan, plan
+    payload = _single_exchange_payload(spark, sf_dir, name)
+    assert all(c in payload for c in ("vec_id#", "cell#", "vn#")), payload
+    assert "embedding#" not in payload, payload
+    read = plan.split("ReadSchema:")[1].split("\n")[0]
+    assert read.strip() == "struct<vec_id:bigint,embedding:array<float>>", read
+
+
 def test_cp01_text_never_shuffles(spark, sf_dir):
     """The curation pipeline computes every text-derived column in the
     scan projection; no DATA-MOVING exchange — hash/range shuffle or
@@ -376,12 +412,13 @@ def test_txt07_vocab_is_topk_and_broadcast(spark, sf_dir):
 
 
 def test_nn06_probe_join_broadcasts_queries_not_corpus(spark, sf_dir):
-    """nn06's probe join must broadcast the dimension-sized query block
-    (probes x queries rows, each with its per-cell ADC tables); the
-    encoded corpus side must never shuffle for it."""
-    plan = _plan(spark, sf_dir, "nn06_residual_ivfpq")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    """nn06's per-(query, probed cell) ADC tables ship inside its Arrow
+    kernel: the plan's one data-moving exchange carries only the
+    per-batch partial top-k (q_id, vec_id, adc) — the corpus embedding
+    column never shuffles for the probe."""
+    payload = _single_exchange_payload(spark, sf_dir, "nn06_residual_ivfpq")
+    assert all(c in payload for c in ("q_id#", "vec_id#", "adc#")), payload
+    assert "embedding#" not in payload, payload
 
 
 def test_cp02_text_never_shuffles(spark, sf_dir):
@@ -420,23 +457,12 @@ def test_nn08_recall_gate_joins_broadcast_the_exact_set(spark, sf_dir):
 
 
 def test_nn09_twin_contract_joins_are_unhinted(spark, sf_dir):
-    """The twin/leg contract gate's composed plan (split out of nn08 in
-    round 10). The sort-merge joins allowed in ride in via the
-    retrieval-leg contract rows and the dedup-twin contract rows:
-    tp02's deliberately-unhinted (lo, hi) pair-set anti-joins (the
-    VERDICT r07 de-broadcast fix), rk01's depth-bounded (q_id, id)
-    rank-fusion full-outers, dd10/dd11's deliberately-unhinted vec_id
-    dup-verdict left joins (the VERDICT r08 de-broadcast fix), AND the
-    gate's own inner (vec_id, cell, keep) agreement joins — de-hinted
-    in round 10 (VERDICT r09 item 1: d_arrow is a corpus-sized verdict
-    table, so forcing it into a broadcast build OOMs the gate's driver
-    at production scale; AQE elects the strategy from measured sizes).
-    The analyzed plan must carry NO ResolvedHint on any vec_id join —
-    the only remaining hints are the bounded leg-set broadcasts."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.queries import (
-        REGISTRY,
-    )
-
+    """The retrieval-leg contract gate's composed plan. The sort-merge
+    joins allowed in ride in via the composed legs: tp02's
+    deliberately-unhinted (lo, hi) pair-set anti-joins (the VERDICT r07
+    de-broadcast fix) and rk01's depth-bounded (q_id, id) rank-fusion
+    full-outers. The only hints the gate adds are the bounded leg-set
+    broadcasts."""
     def hints(df):
         return df._jdf.queryExecution().analyzed().toString().count(
             "ResolvedHint"
@@ -446,16 +472,11 @@ def test_nn09_twin_contract_joins_are_unhinted(spark, sf_dir):
     # anchor relative to the composed components (the rk02 ADVICE
     # pattern — never a hard-coded literal): nn09 adds exactly TWO
     # hints of its own, the bounded iv-leg broadcasts (|queries| × k
-    # rows each); the de-hinted agreement joins add none. The bf legs'
-    # internal hints don't appear in the composed plan — their lineage
-    # hides behind the lazy localCheckpoint placeholder — so the anchor
-    # sums only the subtrees that survive into it: the four dedup forms
-    # and the two iv legs.
+    # rows each). The bf legs' internal hints don't appear in the
+    # composed plan — their lineage hides behind the lazy
+    # localCheckpoint placeholder — so the anchor sums only the two iv
+    # legs.
     component_hints = sum(
-        hints(REGISTRY[n].fn(spark, sf_dir))
-        + hints(REGISTRY[n].fn(spark, sf_dir, impl="arrow"))
-        for n in ("dd10_semantic_dedup", "dd11_hierarchical_semdedup")
-    ) + sum(
         hints(REGISTRY[n].fn(spark, sf_dir, impl="ivf"))
         for n in ("tp02_hard_negatives", "rk01_rank_fusion")
     )
@@ -468,11 +489,8 @@ def test_nn09_twin_contract_joins_are_unhinted(spark, sf_dir):
         s = line.lstrip(" +-:*")
         if s.startswith("SortMergeJoin"):
             keys = s.split("]")[0]
-            ok = (
-                ("LeftAnti" in s and "lo#" in keys)
-                or ("FullOuter" in s and "q_id#" in keys)
-                or ("LeftOuter" in s and "vec_id#" in keys)
-                or ("Inner" in s and "vec_id#" in keys)
+            ok = ("LeftAnti" in s and "lo#" in keys) or (
+                "FullOuter" in s and "q_id#" in keys
             )
             assert ok, (
                 f"unexpected sort-merge join in nn09's composed plan: {s}"
@@ -480,50 +498,10 @@ def test_nn09_twin_contract_joins_are_unhinted(spark, sf_dir):
 
 
 def test_dd11_assignment_lives_in_the_scan_projection(spark, sf_dir):
-    """Hierarchical SemDeDup's scale contract in the executed plan: the
-    dup-id set comes back as a broadcast and no sort-merge join appears
-    anywhere in the full plan; and the assignment STAGE (rebuilt
-    pre-checkpoint, since the localCheckpoint hides its lineage from
-    the final plan) is pure scan-projection work — zero exchanges, with
-    the embeddings scan pruned to (vec_id, embedding). The dup-id
-    verdict join is dup-rate-sized, so it must carry NO broadcast hint
-    (VERDICT r08 item 1) — AQE elects the strategy from measured sizes;
-    the join stays a keyed equi-join either way."""
-    df = REGISTRY["dd11_hierarchical_semdedup"].fn(spark, sf_dir)
-    qe = df._jdf.queryExecution()
-    assert qe.analyzed().toString().count("ResolvedHint") == 0
-    plan = qe.executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-    from pyspark.sql import functions as F
-
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        _fine_structs_literal,
-        _fit_hier_cells,
-        _normalized_sample_matrix,
-        _normalized_vn_base,
-        _t,
-        _train_vecs,
-    )
-
-    fine, co, f2c = _fit_hier_cells(
-        [list(r) for r in _normalized_sample_matrix(_train_vecs(spark, sf_dir))]
-    )
-    # the same projection dd11 checkpoints: base + a fine-cell column
-    # (the exact expression shape matters less than exchange-freedom,
-    # so a representative member-filtered fold stands in)
-    stage = _normalized_vn_base(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.size(
-            F.filter(_fine_structs_literal(fine, f2c), lambda s: s["cg"] == 0)
-        ).alias("probe"),
-    )
-    sp = stage._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in sp
-    read = sp.split("ReadSchema:")[1].split("\n")[0]
-    assert "vec_id" in read and "embedding" in read
-    assert "label" not in read
+    """Hierarchical SemDeDup assigns coarse->fine cells in the Arrow
+    kernel right over the embeddings scan, so nothing moves before the
+    one ``cell`` shuffle — see _assert_semdedup_plan."""
+    _assert_semdedup_plan(spark, sf_dir, "dd11_hierarchical_semdedup")
 
 
 def test_ds10_rates_broadcast_onto_the_scan(spark, sf_dir):
@@ -654,17 +632,10 @@ def test_dd12_bloom_build_collapses_and_broadcasts(spark, sf_dir):
 
 
 def test_dd10_verdict_join_is_not_hint_forced(spark, sf_dir):
-    """SemDeDup's keep/drop verdict join probes the distinct dup-id
-    set, which is dup-rate-sized (billions of rows at a realistic
-    10-30% dup rate on 100 TB) — so it must carry NO broadcast hint
-    (VERDICT r08 item 1): AQE elects the strategy from measured sizes,
-    and the join stays a keyed equi-join either way."""
-    df = REGISTRY["dd10_semantic_dedup"].fn(spark, sf_dir)
-    qe = df._jdf.queryExecution()
-    assert qe.analyzed().toString().count("ResolvedHint") == 0
-    plan = qe.executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
+    """SemDeDup decides keep/drop per cell after one ``cell`` shuffle;
+    no step joins against the dup-rate-sized verdict set, and nothing
+    carries a broadcast hint — see _assert_semdedup_plan."""
+    _assert_semdedup_plan(spark, sf_dir, "dd10_semantic_dedup")
 
 
 def test_ct03_hit_join_is_not_hint_forced(spark, sf_dir):

@@ -66,32 +66,138 @@ def test_approx_median_within_tolerance(spark, sf_dir):
         assert abs(approx[k] - m) / m <= 0.01, (k, approx[k], m)
 
 
-def test_nn01_arrow_path_matches_sql_path(spark, sf_dir):
-    """The vectorized (numpy-matmul mapInPandas) brute-force path must
-    be rank-identical to the exactness-pinned SQL-fold path, with
-    cosines agreeing far below the 6dp rounding the oracle checks."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        nn01_cosine_topk,
+# ---------------------------------------------------------------------------
+# Each ANN, SemDeDup and spec-extraction entry has one Spark body, an
+# Arrow kernel; test_oracle_parity compares it to its DuckDB oracle on
+# the session's tables. These compare it, exactly, on a second dataset
+# of the same size, so a float fold that lands on a different side of
+# a 6dp rounding or a cell boundary shows up on either one.
+# ---------------------------------------------------------------------------
+#: oracle builders that replay a quantizer fit over the embeddings named
+#: by SPARK_GRAFT_TESTDATA; the registry keeps its first resolution, so
+#: another dataset needs the builder itself
+_FIT_ORACLES = {
+    "nn03_ivf_ann": "_nn03_oracle",
+    "nn04_pq_adc": "_nn04_oracle",
+    "nn05_ivfpq": "_nn05_oracle",
+    "nn06_residual_ivfpq": "_nn06_oracle",
+    "nn07_opq_pq": "_nn07_oracle",
+    "dd10_semantic_dedup": "_dd10_sql",
+    "dd11_hierarchical_semdedup": "_dd11_sql",
+}
+
+
+@pytest.fixture(scope="module")
+def second_sf(sf_dir):
+    """The sf0.01 tables next to the session's (same row counts,
+    different rows); the session's own tables when they are sf0.01 or
+    no sibling exists."""
+    import os
+
+    alt = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.01")
+    return alt if os.path.isdir(alt) else sf_dir
+
+
+@pytest.fixture(scope="module")
+def second_ddb(second_sf):
+    import duckdb
+
+    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.sources.readers import (
+        TESTDATA_TABLES,
     )
 
-    sql_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.cosine)
-        for r in nn01_cosine_topk(spark, sf_dir).collect()
-    }
-    arrow_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.cosine)
-        for r in nn01_cosine_topk(spark, sf_dir, impl="arrow").collect()
-    }
-    assert sql_rows.keys() == arrow_rows.keys()
-    for key, (vec_id, cos) in sql_rows.items():
-        a_vec, a_cos = arrow_rows[key]
-        assert a_vec == vec_id, f"rank mismatch at {key}"
-        assert abs(a_cos - cos) < 1e-6, f"cosine drift at {key}"
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{second_sf}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+def _assert_matches_oracle_sql(spark, sf, ddb, monkeypatch, name, **kw):
+    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans import (
+        training_queries as tq,
+    )
+    from conftest import assert_frames_match
+
+    if name in _FIT_ORACLES:
+        monkeypatch.setenv("SPARK_GRAFT_TESTDATA", sf)
+        oracle = getattr(tq, _FIT_ORACLES[name])(**kw)
+    else:
+        oracle = REGISTRY[name].oracle_text()
+    actual = REGISTRY[name].fn(spark, sf, **kw).toPandas()
+    assert_frames_match(actual, ddb.execute(oracle).fetchdf(), f"{name}{kw}")
+
+
+def test_nn01_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "nn01_cosine_topk"
+    )
+
+
+def test_nn02_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "nn02_lsh_ann"
+    )
+
+
+def test_nn03_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "nn03_ivf_ann"
+    )
+
+
+def test_nn04_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "nn04_pq_adc"
+    )
+
+
+def test_nn05_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "nn05_ivfpq"
+    )
+
+
+def test_nn06_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "nn06_residual_ivfpq"
+    )
+
+
+def test_nn07_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "nn07_opq_pq"
+    )
+
+
+def test_dd10_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "dd10_semantic_dedup"
+    )
+
+
+def test_dd11_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    """Also at a non-default schedule, so the coarse->fine member
+    partition is exercised beyond the default 16/4 fit."""
+    for kw in ({}, {"cells": 8, "coarse": 2}):
+        _assert_matches_oracle_sql(
+            spark, second_sf, second_ddb, monkeypatch,
+            "dd11_hierarchical_semdedup", **kw,
+        )
+
+
+def test_ud2_arrow_path_matches_sql_path(spark, second_sf, second_ddb, monkeypatch):
+    _assert_matches_oracle_sql(
+        spark, second_sf, second_ddb, monkeypatch, "ud2_spec_extraction"
+    )
 
 
 def test_nn01_arrow_path_drops_null_embeddings(spark, sf_dir, tmp_path):
-    """Regression: a NULL embedding row must be dropped (like the SQL
-    path's nrm > 0 filter), not crash the numpy stack."""
+    """Regression: a NULL embedding row must be dropped (like the
+    oracle's nrm > 0 filter), not crash the numpy stack."""
     from pyspark.sql import functions as F
 
     from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
@@ -105,37 +211,14 @@ def test_nn01_arrow_path_drops_null_embeddings(spark, sf_dir, tmp_path):
         *[c for c in emb.columns if c not in ("vec_id", "embedding")],
     )
     emb.unionByName(null_row).write.parquet(str(tmp_path / "embeddings.parquet"))
-    out = nn01_cosine_topk(spark, str(tmp_path), impl="arrow").collect()
+    out = nn01_cosine_topk(spark, str(tmp_path)).collect()
     assert len(out) > 0
     assert all(r.vec_id != 1_000_000 for r in out)
 
 
-def test_nn02_arrow_path_matches_sql_path(spark, sf_dir):
-    """The vectorized LSH probe (sign-of-matmul bucketing + masked
-    cosine block) must reproduce the arrays_overlap plan exactly:
-    same candidates, same ranks, cosines within rounding slack."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        nn02_lsh_ann,
-    )
-
-    sql_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.cosine)
-        for r in nn02_lsh_ann(spark, sf_dir).collect()
-    }
-    arrow_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.cosine)
-        for r in nn02_lsh_ann(spark, sf_dir, impl="arrow").collect()
-    }
-    assert sql_rows.keys() == arrow_rows.keys()
-    for key, (vec_id, cos) in sql_rows.items():
-        a_vec, a_cos = arrow_rows[key]
-        assert a_vec == vec_id, f"rank mismatch at {key}"
-        assert abs(a_cos - cos) < 1e-6, f"cosine drift at {key}"
-
-
 def test_nn01_arrow_path_drops_malformed_embeddings(spark, sf_dir, tmp_path):
-    """Empty and wrong-dimension embedding arrays are dropped (the SQL
-    twin's nrm>0 / NULL-cosine behavior), never a numpy stack crash."""
+    """Empty and wrong-dimension embedding arrays are dropped (the
+    oracle's nrm>0 / NULL-cosine behavior), never a numpy stack crash."""
     from pyspark.sql import functions as F
 
     from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
@@ -155,7 +238,7 @@ def test_nn01_arrow_path_drops_malformed_embeddings(spark, sf_dir, tmp_path):
     emb.unionByName(empty_row).unionByName(short_row).write.parquet(
         str(tmp_path / "embeddings.parquet")
     )
-    out = nn01_cosine_topk(spark, str(tmp_path), impl="arrow").collect()
+    out = nn01_cosine_topk(spark, str(tmp_path)).collect()
     assert len(out) > 0
     assert all(r.vec_id < 1_000_000 for r in out)
 
@@ -286,20 +369,6 @@ def test_dd08_does_not_accumulate_persisted_tables(spark, sf_dir):
     assert after <= before + 1, f"dd08 caches accumulate: {before} -> {after}"
 
 
-def test_ud2_arrow_path_matches_sql_path(spark, sf_dir):
-    """The Arrow spec-extraction scale path must be row-for-row identical
-    to the JVM column-expression form (which is the DuckDB-oracle-checked
-    and golden-pinned one) — same gate pattern as nn01/nn02."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.domain_queries import (
-        ud2_spec_extraction,
-    )
-    from conftest import assert_frames_match
-
-    sql_form = ud2_spec_extraction(spark, sf_dir).toPandas()
-    arrow_form = ud2_spec_extraction(spark, sf_dir, impl="arrow").toPandas()
-    assert_frames_match(arrow_form, sql_form, "ud2 arrow vs sql")
-
-
 def test_dd08_auto_bits_tracks_corpus_size(spark, sf_dir):
     """bits="auto" derives signature width from the corpus row count
     (bands * log2(n/target), floored at 8 bits/band) and must produce
@@ -392,99 +461,6 @@ def test_star_contraction_converges_in_one_round_on_star_input(spark):
     assert rounds == 1, f"already-star input took {rounds} rounds"
 
 
-def test_nn03_arrow_path_matches_sql_path(spark, sf_dir):
-    """The batched-numpy IVF path must be rank-identical to the
-    oracle-pinned SQL form — same raw-space assignment, same probe
-    gate, same exact-cosine ranking of the survivors."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        nn03_ivf_ann,
-    )
-
-    sql_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.cosine)
-        for r in nn03_ivf_ann(spark, sf_dir).collect()
-    }
-    arrow_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.cosine)
-        for r in nn03_ivf_ann(spark, sf_dir, impl="arrow").collect()
-    }
-    assert sql_rows.keys() == arrow_rows.keys()
-    for key, (vec_id, cos) in sql_rows.items():
-        a_vec, a_cos = arrow_rows[key]
-        assert a_vec == vec_id, f"rank mismatch at {key}"
-        assert abs(a_cos - cos) < 1e-6, f"cosine drift at {key}"
-
-
-def test_nn04_arrow_path_matches_sql_path(spark, sf_dir):
-    """The batched-numpy ADC path must be rank-identical to the
-    oracle-pinned SQL form, with approx cosines agreeing far below the
-    6dp oracle rounding (numpy vs fold summation differs only in final
-    ulps over 8-term sums)."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        nn04_pq_adc,
-    )
-
-    sql_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.approx_cosine)
-        for r in nn04_pq_adc(spark, sf_dir).collect()
-    }
-    arrow_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.approx_cosine)
-        for r in nn04_pq_adc(spark, sf_dir, impl="arrow").collect()
-    }
-    assert sql_rows.keys() == arrow_rows.keys()
-    for key, (vec_id, cos) in sql_rows.items():
-        a_vec, a_cos = arrow_rows[key]
-        assert a_vec == vec_id, f"rank mismatch at {key}"
-        assert abs(a_cos - cos) < 1e-6, f"adc drift at {key}"
-
-
-def test_nn05_arrow_path_matches_sql_path(spark, sf_dir):
-    """The batched-numpy IVF-PQ path must be rank-identical to the
-    oracle-pinned SQL form — same probe gate, same candidates, same
-    ADC ranking."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        nn05_ivfpq,
-    )
-
-    sql_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.approx_cosine)
-        for r in nn05_ivfpq(spark, sf_dir).collect()
-    }
-    arrow_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.approx_cosine)
-        for r in nn05_ivfpq(spark, sf_dir, impl="arrow").collect()
-    }
-    assert sql_rows.keys() == arrow_rows.keys()
-    for key, (vec_id, cos) in sql_rows.items():
-        a_vec, a_cos = arrow_rows[key]
-        assert a_vec == vec_id, f"rank mismatch at {key}"
-        assert abs(a_cos - cos) < 1e-6, f"adc drift at {key}"
-
-
-def test_nn06_arrow_path_matches_sql_path(spark, sf_dir):
-    """The batched-numpy residual IVF-PQ path must be rank-identical
-    to the oracle-pinned SQL form — same normalized-space probe gate,
-    same residual encoding, same per-(query, cell) ADC tables."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        nn06_residual_ivfpq,
-    )
-
-    sql_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.approx_cosine)
-        for r in nn06_residual_ivfpq(spark, sf_dir).collect()
-    }
-    arrow_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.approx_cosine)
-        for r in nn06_residual_ivfpq(spark, sf_dir, impl="arrow").collect()
-    }
-    assert sql_rows.keys() == arrow_rows.keys()
-    for key, (vec_id, cos) in sql_rows.items():
-        a_vec, a_cos = arrow_rows[key]
-        assert a_vec == vec_id, f"rank mismatch at {key}"
-        assert abs(a_cos - cos) < 1e-6, f"adc drift at {key}"
-
-
 @pytest.mark.parametrize(
     "op_name",
     [
@@ -500,9 +476,9 @@ def test_nn06_arrow_path_matches_sql_path(spark, sf_dir):
 )
 def test_arrow_paths_drop_malformed_embeddings(spark, sf_dir, tmp_path, op_name):
     """NULL and wrong-dimension embedding rows must be dropped by the
-    shared Arrow batch guards (like the SQL forms' nrm > 0 / fold-over-dim
+    shared Arrow batch guards (like the oracles' nrm > 0 / fold-over-dim
     behavior), not crash np.stack or skew the codebook fit: no output
-    row of an ANN twin names them, and no SemDeDup verdict covers them."""
+    row of an ANN entry names them, and no SemDeDup verdict covers them."""
     from pyspark.sql import functions as F
 
     from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans import (
@@ -523,7 +499,7 @@ def test_arrow_paths_drop_malformed_embeddings(spark, sf_dir, tmp_path, op_name)
     )
     emb.unionByName(extras).write.parquet(str(tmp_path / "embeddings.parquet"))
     fn = getattr(tq, op_name)
-    out = fn(spark, str(tmp_path), impl="arrow").collect()
+    out = fn(spark, str(tmp_path)).collect()
     assert len(out) > 0
     assert all(r.vec_id < 1_000_000 for r in out)
 
@@ -649,74 +625,6 @@ def test_ds08_epoch_reshuffles_within_stages_only(spark, sf_dir):
         # ranks ordered by stage must be the same as ranks ordered by rank
         by_rank = [s for s, _ in sorted(epoch_map.values(), key=lambda t: t[1])]
         assert by_rank == sorted(by_rank), "a noisier stage ranked before a cleaner one"
-
-
-def test_nn07_arrow_path_matches_sql_path(spark, sf_dir):
-    """The batched-numpy rotated-PQ path must be rank-identical to the
-    oracle-pinned SQL form — same rotation, same codes, same ADC."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        nn07_opq_pq,
-    )
-
-    sql_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.approx_cosine)
-        for r in nn07_opq_pq(spark, sf_dir).collect()
-    }
-    arrow_rows = {
-        (r.q_id, r.rk): (r.vec_id, r.approx_cosine)
-        for r in nn07_opq_pq(spark, sf_dir, impl="arrow").collect()
-    }
-    assert sql_rows.keys() == arrow_rows.keys()
-    for key, (vec_id, cos) in sql_rows.items():
-        a_vec, a_cos = arrow_rows[key]
-        assert a_vec == vec_id, f"rank mismatch at {key}"
-        assert abs(a_cos - cos) < 1e-6, f"adc drift at {key}"
-
-
-def test_dd10_arrow_path_matches_sql_path(spark, sf_dir):
-    """The vectorized SemDeDup path must reproduce the oracle-pinned
-    SQL form VERDICT-FOR-VERDICT: same cell assignment (argmin ==
-    lowest-cell tie rule), same keep/drop for every vector — the gram
-    matrix's lower triangle is exactly the self-join's a < b pair
-    set."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        dd10_semantic_dedup,
-    )
-
-    sql_rows = {
-        r.vec_id: (r.cell, r.keep)
-        for r in dd10_semantic_dedup(spark, sf_dir).collect()
-    }
-    arrow_rows = {
-        r.vec_id: (r.cell, r.keep)
-        for r in dd10_semantic_dedup(spark, sf_dir, impl="arrow").collect()
-    }
-    assert sql_rows == arrow_rows
-
-
-def test_dd11_arrow_path_matches_sql_path(spark, sf_dir):
-    """The vectorized hierarchical SemDeDup path must reproduce the
-    oracle-pinned SQL form VERDICT-FOR-VERDICT: same coarse->fine
-    routing (np.argmin over the ascending member list == the SQL
-    masked-argmin tie rule), same keep/drop for every vector. Run at a
-    non-default schedule too, so the member partition logic is
-    exercised beyond the default 16/4 fit."""
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
-        dd11_hierarchical_semdedup,
-    )
-
-    for kw in ({}, {"cells": 8, "coarse": 2}):
-        sql_rows = {
-            r.vec_id: (r.cell, r.keep)
-            for r in dd11_hierarchical_semdedup(spark, sf_dir, **kw).collect()
-        }
-        arrow_rows = {
-            r.vec_id: (r.cell, r.keep)
-            for r in dd11_hierarchical_semdedup(
-                spark, sf_dir, impl="arrow", **kw
-            ).collect()
-        }
-        assert sql_rows == arrow_rows, f"dd11 twin diverged at {kw or 'default'}"
 
 
 def test_dd13_stoplist_drops_boilerplate_buckets(spark, tmp_path):
