@@ -224,8 +224,8 @@ HEADLINE = [
     # aggregate with struct-min/max first/last partials)
     "w07_sequence_patterns",
     "ts02_ohlc_resample",
-    # round-11: greedy MMR selection (one relevance scan + TakeOrdered
-    # shortlist, then 8 bounded argmax rounds over the C×C sim table)
+    # round-11: greedy MMR selection (one Arrow relevance scan for the
+    # shortlist, then 8 driver-side argmax rounds over the C×C sim table)
     "ds13_mmr_diverse_select",
     # round-12: BM25 serving from ix01's checkpointed postings (index
     # build + the dictionary-sized query-term join and query-
@@ -486,7 +486,7 @@ VARIANTS = {
     "a01b_approx_stats_scale_path": (queries_mod.a01b_approx_stats_scale_path, {}),
     # the production IVF retrieval legs (VERDICT r07 item 3):
     # recall-gated against their brute-force forms in
-    # tests/test_ann_recall.py and by nn08's contract rows
+    # tests/test_ann_recall.py and by nn09's contract rows
     "tp02_hard_negatives_ivf": ("tp02_hard_negatives", {"impl": "ivf"}),
     "rk01_rank_fusion_ivf": ("rk01_rank_fusion", {"impl": "ivf"}),
     # the production lexical leg (r12): the fusion's lexical ranks come

@@ -422,28 +422,6 @@ def _dot(a, b):
     return _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
 
 
-def _emb_base(spark: SparkSession, sf_dir: str, *, fan: bool = True) -> DataFrame:
-    """The shared (vec_id, v, nrm) embedding projection. ``fan=True``
-    fans the corpus-side scan out of its single row group (guide §2.5);
-    QUERY blocks must pass ``fan=False`` so their ``vec_id < N`` filter
-    pushes down to the parquet scan — a round-robin exchange BLOCKS
-    pushdown, so a fanned query block re-reads and re-shuffles the
-    whole table to keep 8 rows (measured r13: the first fan wave cost
-    tp02_ivf +4.8 s / rk01_ivf +3.2 s through exactly this)."""
-    emb = (
-        _fan_scan(spark, sf_dir, "embeddings")
-        if fan
-        else _t(spark, sf_dir, "embeddings")
-    )
-    return (
-        emb.select("vec_id", _vec_double(F.col("embedding")).alias("v"))
-        .withColumn(
-            "nrm", F.sqrt(_fold_sum(F.transform(F.col("v"), lambda x: x * x)))
-        )
-        .filter(F.col("nrm") > 0)
-    )
-
-
 def _sql_vec(col: str) -> str:
     return f"list_transform(range(1, len({col})+1), i -> CAST({col}[i] AS DOUBLE))"
 
@@ -538,7 +516,7 @@ def nn01_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rank_by_cos(scored: DataFrame, k: int) -> DataFrame:
-    """Cosine ranking tail of the Arrow top-k scaffold (nn01–nn03):
+    """Cosine ranking tail of the Arrow top-k scaffold (and of tp02):
     merges the per-batch partials into each query's top-k by
     descending cosine, ties to the lower vec_id."""
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -589,18 +567,18 @@ def _arrow_rows(batches, dim: int):
             yield ids[nz], V, V / nrm[nz][:, None]
 
 
-def _arrow_partial_topk(
+def _arrow_scored(
     emb: DataFrame,
     q_ids,
-    k: int,
     score,
     *,
     dim: int,
     gate=None,
+    keep: int | None = None,
     ascending: bool = False,
 ) -> DataFrame:
-    """Shared Arrow top-k scaffold for the ANN entries (nn01–nn07).
-    Per Arrow batch:
+    """Shared Arrow query-block scorer: (q_id, vec_id, cos|adc) rows of
+    the corpus against a bounded query block. Per Arrow batch:
 
     - ``_arrow_rows`` drops NULL, wrong-dimension and zero-norm rows;
     - ``gate(V, Vn) -> (mask, aux)``, when given, returns an (n, q)
@@ -609,13 +587,10 @@ def _arrow_partial_topk(
       the point of the gate);
     - ``score(Vn, aux) -> (n, q)`` scores the surviving rows against
       every query in one block;
-    - self-pairs are excluded and each query keeps a PARTIAL top-k
-      (a lexsort on score, then vec_id), so at most
-      batches·queries·k rows ever shuffle.
-
-    One tiny window merges the partials: ``_rank_by_cos`` (descending
-    cosine, nn01–nn03) or, for ``ascending=True``, ``_rank_by_adc``
-    (ascending distance, the PQ paths)."""
+    - self-pairs are excluded and, with ``keep``, each query keeps a
+      PARTIAL top-``keep`` (a lexsort on score, then vec_id), so at
+      most batches·queries·keep rows ever shuffle. Without ``keep``
+      every scored pair is emitted (tp02 filters before it ranks)."""
     import numpy as np
     import pandas as pd
 
@@ -639,15 +614,35 @@ def _arrow_partial_topk(
                 sm, im = S[m, qi], ids[m]
                 if not len(sm):
                     continue
-                top = np.lexsort((im, sm if ascending else -sm))[:k]
+                top = np.lexsort((im, sm if ascending else -sm))[:keep]
                 out.append(
                     pd.DataFrame({"q_id": q_ids[qi], "vec_id": im[top], col: sm[top]})
                 )
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    partial = emb.select("vec_id", "embedding").mapInPandas(
+    return emb.select("vec_id", "embedding").mapInPandas(
         part, f"q_id bigint, vec_id bigint, {col} double"
+    )
+
+
+def _arrow_partial_topk(
+    emb: DataFrame,
+    q_ids,
+    k: int,
+    score,
+    *,
+    dim: int,
+    gate=None,
+    ascending: bool = False,
+) -> DataFrame:
+    """Shared Arrow top-k scaffold (nn01–nn07, rk01–rk03, ds13):
+    ``_arrow_scored`` keeps a partial top-k per batch, and one tiny
+    window merges the partials: ``_rank_by_cos`` (descending cosine)
+    or, for ``ascending=True``, ``_rank_by_adc`` (ascending distance,
+    the PQ paths)."""
+    partial = _arrow_scored(
+        emb, q_ids, score, dim=dim, gate=gate, keep=k, ascending=ascending
     )
     return (_rank_by_adc if ascending else _rank_by_cos)(partial, k)
 
@@ -1819,19 +1814,27 @@ def nn03_ivf_ann(
     vector space, candidates outside every query's probe set are
     dropped BEFORE the cosine matmul, and exact cosine ranks only the
     survivors — no all-pairs stage and no iterative distributed job."""
-    import numpy as np
-
     emb = _t(spark, sf_dir, "embeddings")
-    C = np.asarray(
-        _fit_centroids(_train_vecs(spark, sf_dir), k=cells), dtype=np.float64
-    )
     Q, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-    gate, _ = _ivf_probe_gate(C, Q, probes)
+    gate = _ivf_fit_gate(spark, sf_dir, Q, cells, probes)
     return _arrow_cosine_topk(emb, Qn, q_ids, k, gate=gate)
 
 
+def _ivf_fit_gate(spark: SparkSession, sf_dir: str, Q, cells: int, probes: int):
+    """nn03's raw-space probe gate over the replayed sample fit
+    (``_fit_centroids`` on ``_train_vecs``), shared by nn03 and the
+    ``impl="ivf"`` legs of tp02 and rk01."""
+    import numpy as np
+
+    C = np.asarray(
+        _fit_centroids(_train_vecs(spark, sf_dir), k=cells), dtype=np.float64
+    )
+    return _ivf_probe_gate(C, Q, probes)[0]
+
+
 def _ivf_probe_gate(C, Q, probes: int, normalized: bool = False):
-    """IVF probe gate for the Arrow scaffold, shared by nn03/nn05/nn06:
+    """IVF probe gate for the Arrow scaffold, shared by nn03/nn05/nn06
+    and the tp02/rk01 ivf legs:
     each query probes its ``probes`` nearest centroids (stable argsort —
     ties break to the lowest cell id, the ranked-struct tie rule); a
     row's cell is its argmin centroid (first minimum), in the raw or the
@@ -2916,9 +2919,8 @@ def _normalized_vn_base(emb: DataFrame) -> DataFrame:
 def _ranked_cells_of(vn, cent_arr):
     """Cells of ``cent_arr`` ranked by squared L2 distance to the bound
     vector ``vn`` — array of struct(d, cell), ties → lowest cell (the
-    array_sort twin of the oracles' list_position-of-min). Shared by
-    ct03 and the IVF retrieval leg (``_ivf_scored_leg``) so the
-    assignment algebra cannot drift between them."""
+    array_sort twin of the oracles' list_position-of-min), ct03's
+    cell assignment."""
     return F.array_sort(
         F.transform(
             F.transform(
@@ -3230,11 +3232,9 @@ def nn05_ivfpq(
     import numpy as np
 
     emb = _t(spark, sf_dir, "embeddings")
-    vecs = _train_vecs(spark, sf_dir)
-    cents = np.asarray(_fit_centroids(vecs, k=_IVF_CELLS), dtype=np.float64)
-    cbs = np.asarray(_pq_codebooks(vecs), dtype=np.float64)
+    cbs = np.asarray(_pq_codebooks(_train_vecs(spark, sf_dir)), dtype=np.float64)
     Q, q_ids, Qn = _arrow_query_block(emb, _KNN_QUERIES)
-    gate, _ = _ivf_probe_gate(cents, Q, probes)
+    gate = _ivf_fit_gate(spark, sf_dir, Q, _IVF_CELLS, probes)
     adc = _pq_adc_block(cbs, Qn)
     return _arrow_partial_topk(
         emb, q_ids, k, lambda Vn, _: adc(Vn), dim=_EMB_DIM, gate=gate, ascending=True
@@ -6231,26 +6231,32 @@ def rk01_rank_fusion(
     ``Σ 1/(60 + rank)`` — the standard hard-negative-mining / eval
     retrieval stack for training-data pipelines, engine-side.
 
-    Exactness: ranks are row_number ties broken by id; both retriever
-    scores are pinned-order IEEE folds (the nn01/dd04 primitives), and
-    the fused score is exactly two integer-derived IEEE divisions added
-    in fixed (lexical, semantic) order — bit-identical cross-engine, so
-    the fused ORDERING and the reported score both hash-match. Absent
-    ranks report as 0 (never NULL — pandas would float-promote).
+    Exactness: ranks are row_number ties broken by id. The lexical
+    score is one pinned IEEE division; the semantic leg ranks by the
+    Arrow scaffold's matmul cosine, which agrees with the oracle's
+    sequential fold to ~1e-15 relative (nn01's contract), so its ranks
+    match. The fused score is exactly two integer-derived IEEE
+    divisions added in fixed (lexical, semantic) order — bit-identical
+    cross-engine, so the fused ORDERING and the reported score both
+    hash-match. Absent ranks report as 0 (never NULL — pandas would
+    float-promote).
 
-    Scale shape (100 TB): both retrievers broadcast the bounded query
-    block and stream the corpus once (no corpus shuffle); per-query
-    state after ranking is DEPTH-bounded, so the fusion join touches
-    |queries|·depth rows — driver-trivial at any corpus size.
+    Scale shape (100 TB): the lexical leg broadcasts the bounded query
+    block over one documents scan; the semantic leg is nn01's Arrow
+    scaffold (the query block ships inside the kernel and each batch
+    keeps a partial top-depth, so the corpus embedding column never
+    shuffles). Per-query state after ranking is DEPTH-bounded, so the
+    fusion join touches |queries|·depth rows — driver-trivial at any
+    corpus size.
 
-    ``impl="ivf"`` is the production semantic leg made real (VERDICT
-    r07 item 3): the embedding retriever becomes nn03's replayed-fit
-    cell probe (``_ivf_scored_leg``) instead of the brute-force
-    broadcast scan — ~probes/cells of the scoring folds; the lexical
-    leg and the fusion are UNCHANGED. probes == cells degenerates to
-    the exact brute-force fusion (pinned in tests/test_ann_recall.py);
-    the default operating point's fused-list recall vs the brute-force
-    form is gated there and re-verified every round by nn08's
+    ``impl="ivf"`` is the production semantic leg: nn03's probe gate
+    over the replayed sample fit (``_ivf_fit_gate``) drops rows outside
+    every query's probed cells before the cosine matmul —
+    ~probes/cells of the scoring work; the lexical leg and the fusion
+    are UNCHANGED. probes == cells degenerates to the exact
+    brute-force fusion (pinned in tests/test_ann_recall.py); the
+    default operating point's fused-list recall vs the brute-force
+    form is gated there and re-verified every round by nn09's
     rk01_rank_fusion_ivf contract row."""
     if lex == "bm25":
         # the production lexical leg (VERDICT r11 item 2's consumer):
@@ -6296,36 +6302,11 @@ def rk01_rank_fusion(
             .filter(F.col("lex_rk") <= _RRF_DEPTH)
             .select("q_id", "id", "lex_rk")
         )
-    eb = _emb_base(spark, sf_dir)
-    if impl == "ivf":
-        embscored = _ivf_scored_leg(
-            spark, sf_dir, eb, _RRF_QUERIES, cells=cells, probes=probes
-        ).select("q_id", F.col("vec_id").alias("id"), "cos")
-    else:
-        qe = _emb_base(spark, sf_dir, fan=False).filter(
-            F.col("vec_id") < _RRF_QUERIES
-        ).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-        embscored = (
-            eb.crossJoin(F.broadcast(qe))
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .select(
-                "q_id",
-                F.col("vec_id").alias("id"),
-                (
-                    _dot(F.col("v"), F.col("qv"))
-                    / (F.col("nrm") * F.col("qn"))
-                ).alias("cos"),
-            )
-        )
-    we = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("id"))
-    embr = (
-        embscored.withColumn("emb_rk", F.row_number().over(we))
-        .filter(F.col("emb_rk") <= _RRF_DEPTH)
-        .select("q_id", "id", "emb_rk")
+    emb = _t(spark, sf_dir, "embeddings")
+    Q, q_ids, Qn = _arrow_query_block(emb, _RRF_QUERIES)
+    gate = _ivf_fit_gate(spark, sf_dir, Q, cells, probes) if impl == "ivf" else None
+    embr = _arrow_cosine_topk(emb, Qn, q_ids, _RRF_DEPTH, gate=gate).select(
+        "q_id", F.col("vec_id").alias("id"), F.col("rk").alias("emb_rk")
     )
     fused = lexleg.join(embr, ["q_id", "id"], "full_outer")
     term_l = F.when(F.col("lex_rk").isNull(), F.lit(0.0)).otherwise(
@@ -6541,72 +6522,20 @@ _HN_QUERIES = 8  # vec_id/doc_id < 8 are the anchor set (ids align 1:1)
 _HN_K = 5  # hard negatives kept per anchor
 
 
-def _ivf_scored_leg(
-    spark: SparkSession,
-    sf_dir: str,
-    base: DataFrame,
-    n_queries: int,
-    *,
-    cells: int = _IVF_CELLS,
-    probes: int = _IVF_PROBES,
-) -> DataFrame:
-    """nn03's cell-probe candidate generation, factored for composition
-    into the tp02/rk01 production retrieval legs (VERDICT r07 item 3):
-    ``base`` is a (vec_id, v, nrm) corpus, the replayed-fit quantizer
-    assigns every row its nearest cell in the scan projection, queries
-    (vec_id < n_queries) probe their top-``probes`` cells, and exact
-    cosine scores ONLY the probed cells' members — the corpus streams
-    once through a broadcast equi-join on the small int cell id, never
-    an all-pairs nested loop. Returns (q_id, vec_id, cos). Same
-    constants, folds and first-min tie rules as ``_ivf_leg_sql``, so
-    the composed operators stay hash-exact against their twins."""
-    centroids = _fit_centroids(_train_vecs(spark, sf_dir), k=cells)
-    cent_arr = _cents_spark_literal(centroids)
-    ranked = _ranked_cells_of(F.col("v"), cent_arr)
-    # r13 (guide §2.5 + §5, the nn03/nn04 shared-encode pattern): one
-    # ranked-cells evaluation per row behind a GC-reclaimed lazy
-    # checkpoint, shared by the corpus and query legs — before, the
-    # query leg re-derived the whole scan subtree (and a fanned base's
-    # round-robin exchange blocked its vec_id pushdown: tp02_ivf
-    # measured +4.8 s from exactly this).
-    enc = base.withColumn("rc", ranked).localCheckpoint(eager=False)
-    assigned = enc.select(
-        "vec_id", "v", "nrm", F.element_at(F.col("rc"), 1)["cell"].alias("cell")
-    )
-    q = enc.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.explode(
-            F.transform(F.slice(F.col("rc"), 1, probes), lambda s: s["cell"])
-        ).alias("cell"),
-    )
-    return (
-        assigned.join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            (
-                _dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn"))
-            ).alias("cos"),
-        )
-    )
-
-
 def _ivf_leg_sql(
     n_queries: int,
     *,
     cells: int = _IVF_CELLS,
     probes: int = _IVF_PROBES,
 ) -> str:
-    """DuckDB twin of ``_ivf_scored_leg``: the CTE chain ``v0 → n0x →
-    basex → dx → ax → qx → ivfscored`` replaying the SAME seeded
+    """DuckDB twin of the ``impl="ivf"`` scoring legs of tp02/rk01
+    (``_ivf_fit_gate`` on the Arrow scaffold): the CTE chain ``v0 →
+    n0x → basex → dx → ax → qx → ivfscored`` replaying the SAME seeded
     quantizer fit (the nn03 oracle pattern) — ``ivfscored`` yields
     (q_id, vec_id, cos) for exactly the probed-cell candidates, with
-    the first-position-of-min tie rules that twin Spark's struct
-    array_sort. Composable inside a larger WITH (names suffixed x to
-    avoid colliding with the host query's CTEs)."""
+    the first-position-of-min tie rules that twin the gate's argmin
+    and stable argsort. Composable inside a larger WITH (names
+    suffixed x to avoid colliding with the host query's CTEs)."""
     import pyarrow.parquet as pq
 
     emb = (
@@ -6738,61 +6667,43 @@ def tp02_hard_negatives(
     exclusion the miner would feed the model its own positives as
     negatives and poison the training signal.
 
-    Exactness: cosines are the nn01 pinned-order IEEE folds, the dup
-    exclusion composes dd02's exact-Jaccard-verified pairs, ranks tie
-    on vec_id — so the whole mined set hash-matches the oracle, which
-    recomputes the same composition in DuckDB.
+    Exactness: cosines come from nn01's Arrow matmul, which agrees
+    with the oracle's sequential fold to ~1e-15 relative, far inside
+    the 6 dp output rounding; the dup exclusion composes dd02's
+    exact-Jaccard-verified pairs, ranks tie on vec_id — so the whole
+    mined set hash-matches the oracle, which recomputes the same
+    composition in DuckDB.
 
     Scale shape (100 TB): the positive set is dd02's banded-LSH plan —
     pair-table-sized, i.e. dup-rate-sized (billions of rows at corpus
     scale), so it joins the scored candidates as a plain equi-anti on
     materialized orientation-normalized ``(lo, hi)`` key columns with
     NO broadcast hint (AQE elects broadcast only when the measured
-    build side is actually small); the scoring leg broadcasts the
-    bounded query block and streams the corpus once (the nn01 shape),
-    and per-query state after ranking is k-bounded.
+    build side is actually small). The scoring leg is nn01's Arrow
+    scaffold (query block inside the kernel, corpus streamed once, the
+    embedding column never shuffles) without the per-batch top-k cut:
+    a dup-excluded pair must not push a valid negative out before the
+    anti-join runs. Per-query state after ranking is k-bounded.
 
-    ``impl="ivf"`` is that production leg made real (VERDICT r07
-    item 3): candidate generation becomes nn03's replayed-fit cell
-    probe (``_ivf_scored_leg`` — corpus assigned in the scan
-    projection, anchors probe their top cells, cosine only inside
-    probed cells: ~probes/cells of the brute-force folds); exclusion
-    and ranking are UNCHANGED. probes == cells degenerates to the
-    exact brute-force verdict (pinned in tests/test_ann_recall.py);
-    the default operating point's recall vs the brute-force form is
-    gated there and re-verified every round by nn08's
-    tp02_hard_negatives_ivf contract row."""
+    ``impl="ivf"`` is the production scoring leg: nn03's probe gate
+    over the replayed sample fit (``_ivf_fit_gate``) drops rows
+    outside every anchor's probed cells before the cosine matmul —
+    ~probes/cells of the brute-force work; exclusion and ranking are
+    UNCHANGED. probes == cells degenerates to the exact brute-force
+    verdict (pinned in tests/test_ann_recall.py); the default
+    operating point's recall vs the brute-force form is gated there
+    and re-verified every round by nn09's tp02_hard_negatives_ivf
+    contract row."""
     pos = dd02_minhash_lsh_pairs(spark, sf_dir).select(
         F.least("a_id", "b_id").alias("lo"),
         F.greatest("a_id", "b_id").alias("hi"),
     )
-    # r13 (guide §2.5 + §6 pushdown): fanned corpus side, UNFANNED
-    # query block — see _emb_base's docstring.
-    base = _emb_base(spark, sf_dir)
-    if impl == "ivf":
-        scored = _ivf_scored_leg(
-            spark, sf_dir, base, _HN_QUERIES, cells=cells, probes=probes
-        )
-    else:
-        q = _emb_base(spark, sf_dir, fan=False).filter(
-            F.col("vec_id") < _HN_QUERIES
-        ).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-        scored = (
-            base.crossJoin(F.broadcast(q))
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .select(
-                "q_id",
-                "vec_id",
-                (
-                    _dot(F.col("v"), F.col("qv"))
-                    / (F.col("nrm") * F.col("qn"))
-                ).alias("cos"),
-            )
-        )
+    emb = _t(spark, sf_dir, "embeddings")
+    Q, q_ids, Qn = _arrow_query_block(emb, _HN_QUERIES)
+    gate = _ivf_fit_gate(spark, sf_dir, Q, cells, probes) if impl == "ivf" else None
+    scored = _arrow_scored(
+        emb, q_ids, lambda Vn, _: Vn @ Qn.T, dim=Qn.shape[1], gate=gate
+    )
     keyed = scored.select(
         "q_id",
         "vec_id",
@@ -6801,17 +6712,7 @@ def tp02_hard_negatives(
         F.greatest("q_id", "vec_id").alias("hi"),
     )
     nondup = keyed.join(pos, ["lo", "hi"], "left_anti")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        nondup.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _HN_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neg_id"),
-            _r(F.col("cos"), 6).alias("cosine"),
-            "rk",
-        )
-    )
+    return _rank_by_cos(nondup, _HN_K).withColumnRenamed("vec_id", "neg_id")
 
 
 # ---------------------------------------------------------------------------
@@ -8702,36 +8603,17 @@ def _eval_truth_ranked(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The Spark twin of ``_eval_truth_ctes``: returns (truth, qids) —
-    the exact brute-force cosine top-``_EVAL_REL`` per query as
-    (q_id, id, rk), and the distinct query-id frame (derived from the
-    query BLOCK, not the truth, so a pathological no-candidate query
-    can never drop out of the metric output)."""
-    eb = _emb_base(spark, sf_dir, fan=False)
-    qe = _emb_base(spark, sf_dir, fan=False).filter(
-        F.col("vec_id") < _RRF_QUERIES
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
+    the exact cosine top-``_EVAL_REL`` per query as (q_id, id, rk) on
+    the shared Arrow scaffold, and the query-id frame built from the
+    collected query BLOCK, not the truth, so a pathological
+    no-candidate query can never drop out of the metric output."""
+    emb = _t(spark, sf_dir, "embeddings")
+    _, q_ids, Qn = _arrow_query_block(emb, _RRF_QUERIES)
+    truth = _arrow_cosine_topk(emb, Qn, q_ids, _EVAL_REL).select(
+        "q_id", F.col("vec_id").alias("id"), "rk"
     )
-    tscored = (
-        eb.crossJoin(F.broadcast(qe))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("id"),
-            (
-                _dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn"))
-            ).alias("cos"),
-        )
-    )
-    wt = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("id"))
-    truth = (
-        tscored.withColumn("rk", F.row_number().over(wt))
-        .filter(F.col("rk") <= _EVAL_REL)
-        .select("q_id", "id", "rk")
-    )
-    return truth, qe.select("q_id").distinct()
+    qids = spark.createDataFrame([(int(q),) for q in q_ids], "q_id bigint")
+    return truth, qids
 
 
 def _rk02_sql() -> str:
@@ -8774,13 +8656,14 @@ def rk02_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: ranks are BIGINT row_numbers with pinned tiebreaks
     (both lists); the reciprocal and recall are one IEEE division
-    each; the truth leg replays rk01's own cosine primitives; the
+    each; the truth leg is rk01's own semantic leg at depth
+    {_EVAL_REL}; the
     oracle composes the full rk01 oracle text as a subquery (the nn08
     WITH-inside-FROM idiom) so BOTH sides evaluate the SAME system
     list. Every row hash-matches.
 
-    Scale shape (100 TB): the truth leg broadcasts the bounded query
-    block over one corpus scan (rk01's own shape) and is
+    Scale shape (100 TB): the truth leg is nn01's Arrow scaffold (one
+    corpus scan, the embedding column never shuffles) and is
     depth-bounded after ranking; the metric join touches
     |queries|·topk rows — driver-trivial at any corpus size. In
     production the truth set is a labeled table read, not a computed
@@ -9267,11 +9150,11 @@ def rk03_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_EVAL_REL} graded docs), so NDCG is one IEEE division of two
     pinned doubles. Every row hash-matches.
 
-    Scale shape (100 TB): the truth leg broadcasts the bounded query
-    block over one corpus scan (rk01's own shape — the composed plan
-    adds exactly one nested-loop leg, plan-pinned relative to rk01's
-    count); the metric join touches |queries| × depth rows, and the
-    per-query fold state is depth-bounded."""
+    Scale shape (100 TB): the truth leg is rk02's (nn01's Arrow
+    scaffold, so the composed plan adds no nested-loop leg to rk01's,
+    plan-pinned relative to rk01's count); the metric join touches
+    |queries| × depth rows, and the per-query fold state is
+    depth-bounded."""
     sysr = rk01_rank_fusion(spark, sf_dir).select(
         "q_id", "doc_id", "fused_rk"
     ).filter(F.col("fused_rk") <= _NDCG_DEPTH)
@@ -12805,8 +12688,8 @@ def _ds13_sql(k: int = _DS13_K) -> str:
     # three times (the max-sim join, the NOT IN, the sel union) — under
     # CTE INLINING the expression tree grows ~3^k and the inlined form
     # did not finish in 120 s at sf0.01; MATERIALIZED pins the linear
-    # evaluation (the Spark side gets the same property from the
-    # per-round localCheckpoint cuts)
+    # evaluation (the Spark side runs the same greedy on the driver
+    # over the collected shortlist)
     return sql.replace("AS (", "AS MATERIALIZED (")
 
 
@@ -12826,101 +12709,61 @@ def ds13_mmr_diverse_select(
     A greedy float loop is the hardest operator class to
     hash-verify; this entry applies the gr01/tk02 unrolled-fixed-point
     trick to FLOAT greedy selection: the candidate relevances and the
-    full candidate-pairwise cosine table are computed ONCE with the
-    pinned fold order (`_dot`/`_sql_dot` — the nn01 exactness
-    machinery), every round's argmax consumes those bit-identical
-    doubles with a (score DESC, vec_id ASC) tiebreak, and λ = 0.5 is
-    an exact binary double so the two-term score is one fixed-order
-    expression. Both engines replay the identical {_DS13_K}-round
-    greedy, so every selection decision — and therefore every row —
-    hash-matches.
+    full candidate-pairwise cosine table are computed ONCE in the
+    pinned sequential fold order (``_dot``/``_sql_dot``'s
+    ``acc + a[i]·b[i]``, then one division by the norm product), every
+    round's argmax consumes those bit-identical doubles with a
+    (score DESC, vec_id ASC) tiebreak, and λ = 0.5 is an exact binary
+    double so the two-term score is one fixed-order expression. Both
+    engines replay the identical {_DS13_K}-round greedy, so every
+    selection decision — and therefore every row — hash-matches.
 
-    Scale shape (100 TB): the distributed work is the relevance scan
-    (broadcast query, corpus scanned once, TakeOrdered top-C — the
-    nn01 shape; at scale the shortlist comes from the IVF/PQ entries
-    instead); the greedy itself is inherently serial and BOUNDED —
-    C×C pairwise sims (576 doubles) and K rounds of argmax over ≤C
-    rows, all broadcast-sized (the selected-set joins hint broadcast
-    on an a-priori-≤{_DS13_K}-row side, the one-row-dim rule).
-    Plan-pinned: no CartesianProduct beyond the bounded C×C pairwise
-    build, TakeOrdered for the shortlist."""
-    base = _emb_base(spark, sf_dir, fan=False)
-    q = base.filter(F.col("vec_id") == _DS13_QID).select(
-        F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    Scale shape (100 TB): the distributed work is the relevance scan,
+    nn01's Arrow scaffold with a one-row query block (corpus scanned
+    once, a per-batch partial top-C, no corpus shuffle; at scale the
+    shortlist comes from the IVF/PQ entries instead). The greedy
+    itself is inherently serial and BOUNDED: the ≤C shortlisted raw
+    vectors are collected next to the anchor, and the C×C pairwise
+    sims (576 doubles) and K rounds of argmax over ≤C rows run on the
+    driver. A missing, NULL or zero anchor selects nothing, like the
+    oracle."""
+    import numpy as np
+
+    emb = _t(spark, sf_dir, "embeddings")
+    Q, q_ids, Qn = _arrow_query_block(emb, _DS13_QID + 1)
+    a = q_ids == _DS13_QID  # empty for a missing, NULL or zero anchor
+    short = _arrow_cosine_topk(emb, Qn[a], q_ids[a], _DS13_C)
+    ids = [r.vec_id for r in short.select("vec_id").collect()]
+    raw = dict(
+        emb.filter(F.col("vec_id").isin(ids)).select("vec_id", "embedding").collect()
     )
-    cand = (
-        base.filter(F.col("vec_id") != _DS13_QID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "v",
-            "nrm",
-            (_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn"))).alias(
-                "rel"
-            ),
-        )
-        .orderBy(F.desc("rel"), F.asc("vec_id"))
-        .limit(_DS13_C)
-        .localCheckpoint(eager=False)
+    V = np.array([raw[i] for i in ids], dtype=np.float64).reshape(len(ids), Q.shape[1])
+
+    def fold_dot(A, B):  # _dot's sequential fold order, vectorized over rows
+        acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+        for i in range(A.shape[-1]):
+            acc = acc + A[..., i] * B[..., i]
+        return acc
+
+    q = Q[a][:1]
+    nrm, qn = np.sqrt(fold_dot(V, V)), np.sqrt(fold_dot(q, q))
+    rel = fold_dot(V, q) / (nrm * qn)
+    sim = fold_dot(V[:, None, :], V[None, :, :]) / (nrm[:, None] * nrm[None, :])
+    rows, left, lam = [], set(range(len(ids))), float(_DS13_LAMBDA)
+    while left and len(rows) < k:
+        picked = [c for _, c, _, _ in rows]
+        score = {
+            c: rel[c] - lam * sim[c, picked].max() if picked else rel[c]
+            for c in left
+        }
+        c = min(left, key=lambda c: (-score[c], ids[c]))
+        rows.append((len(rows) + 1, c, float(rel[c]), float(score[c])))
+        left.remove(c)
+    out = spark.createDataFrame(
+        [(r, int(ids[c]), rl, sc) for r, c, rl, sc in rows],
+        "rank bigint, vec_id bigint, rel double, score double",
     )
-    a = cand.select(
-        F.col("vec_id").alias("ai"), F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-    )
-    b = cand.select(
-        F.col("vec_id").alias("bi"), F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"),
-    )
-    pw = (
-        a.join(b, F.col("ai") != F.col("bi"))
-        .select(
-            "ai",
-            "bi",
-            (_dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))).alias(
-                "sim"
-            ),
-        )
-        .localCheckpoint(eager=False)
-    )
-    crel = cand.select("vec_id", "rel")
-    picked = (
-        crel.orderBy(F.desc("rel"), F.asc("vec_id"))
-        .limit(1)
-        .select(
-            F.lit(1).cast("bigint").alias("rank"),
-            "vec_id",
-            "rel",
-            F.col("rel").alias("score"),
-        )
-    )
-    sel = picked
-    for r in range(2, k + 1):
-        sel_ids = sel.select("vec_id")
-        m = (
-            pw.join(
-                F.broadcast(sel_ids.select(F.col("vec_id").alias("bi"))), "bi"
-            )
-            .groupBy("ai")
-            .agg(F.max("sim").alias("ms"))
-        )
-        nxt = (
-            crel.join(m, crel["vec_id"] == m["ai"])
-            .join(F.broadcast(sel_ids), "vec_id", "left_anti")
-            .select(
-                "vec_id",
-                "rel",
-                (F.col("rel") - F.expr(_DS13_LAMBDA) * F.col("ms")).alias(
-                    "score"
-                ),
-            )
-            .orderBy(F.desc("score"), F.asc("vec_id"))
-            .limit(1)
-            .select(F.lit(r).cast("bigint").alias("rank"), "vec_id", "rel", "score")
-        )
-        sel = sel.unionByName(nxt)
-        if r % 2 == 0 or r == k:
-            sel = sel.localCheckpoint(eager=False)
-    return sel.select(
+    return out.select(
         "rank",
         "vec_id",
         (_r(F.col("rel"), 6) + F.lit(0.0)).alias("relevance"),

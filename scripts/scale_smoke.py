@@ -57,8 +57,9 @@ OPS = [
     # negative stage; linear as long as dd02 stays linear
     "tp01_contrastive_pairs",
     # snapshot diff = one key-partitioned full-outer join (delta-sized
-    # output); rank fusion = two broadcast-query corpus scans with
-    # depth-bounded per-query state — both linear in corpus size
+    # output); rank fusion = one broadcast-query documents scan plus
+    # one Arrow query-block scan of the embeddings (nn01's scaffold),
+    # with depth-bounded per-query state — both linear in corpus size
     "cdc01_snapshot_delta",
     "rk01_rank_fusion",
     # coverage curve: corpus work is one token->tf shuffle; the serial
@@ -66,9 +67,9 @@ OPS = [
     # bucket-keyed partial agg. both scan-dominated, hence linear
     "vc01_vocab_coverage",
     "pd01_padding_efficiency",
-    # hard negatives = dd02's banded-LSH positives (broadcast into an
-    # anti-join) + the nn01 broadcast-query scoring scan — linear as
-    # long as dd02 stays linear
+    # hard negatives = dd02's banded-LSH positives (an unhinted
+    # anti-join) + one Arrow query-block scoring scan of the embeddings
+    # (nn01's scaffold) — linear as long as dd02 stays linear
     "tp02_hard_negatives",
     # co-occurrence: the self-join quadratic is per-basket-bounded
     # (baskets don't grow with corpus size), so pair volume — and the

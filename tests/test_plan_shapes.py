@@ -14,8 +14,8 @@ from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spa
 )
 
 
-def _plan(spark, sf_dir, name) -> str:
-    df = REGISTRY[name].fn(spark, sf_dir)
+def _plan(spark, sf_dir, name, **kw) -> str:
+    df = REGISTRY[name].fn(spark, sf_dir, **kw)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -268,14 +268,14 @@ def test_ds01_sample_is_shuffle_free(spark, sf_dir):
     assert "Exchange" not in plan
 
 
-def _formatted_plan(spark, sf_dir, name) -> str:
+def _formatted_plan(spark, sf_dir, name, **kw) -> str:
     """explain('formatted') text — unlike toString(), it prints each
     node's Input/Output column lists, so exchanges can be audited for
     what they actually carry."""
     import contextlib
     import io
 
-    df = REGISTRY[name].fn(spark, sf_dir)
+    df = REGISTRY[name].fn(spark, sf_dir, **kw)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -483,7 +483,9 @@ def test_nn09_twin_contract_joins_are_unhinted(spark, sf_dir):
     qe = df._jdf.queryExecution()
     assert qe.analyzed().toString().count("ResolvedHint") == component_hints + 2
     # (BroadcastNestedLoopJoin appears legitimately: the single-row
-    # hits × total crossJoins and rk01's depth-bounded BNLJ legs.)
+    # hits × total crossJoins and the BNLJ of rk01's lexical leg, which
+    # broadcasts its query block; the semantic legs run on the Arrow
+    # scaffold and add none.)
     plan = qe.executedPlan().toString()
     for line in plan.splitlines():
         s = line.lstrip(" +-:*")
@@ -703,14 +705,31 @@ def test_cdc01_delta_is_one_keyed_full_outer(spark, sf_dir):
     assert plan.count("ReadSchema: struct<doc_id:bigint,text:string>") == 2
 
 
-def test_rk01_retrievers_broadcast_the_query_block(spark, sf_dir):
-    """Rank fusion's scale contract: BOTH retriever legs broadcast the
-    bounded query block over a single corpus scan (two BNLJ nodes, no
-    CartesianProduct), so the corpus never shuffles for scoring; only
-    the depth-bounded rank lists meet in the fusion join."""
-    plan = _plan(spark, sf_dir, "rk01_rank_fusion")
-    assert plan.count("BroadcastNestedLoopJoin") == 2, plan
+def _assert_embedding_never_moves(spark, sf_dir, name, **kw) -> str:
+    """The Arrow scaffold's scale contract, shared by every entry that
+    scores a query block on it: no CartesianProduct, and no
+    data-moving exchange carries the corpus ``embedding`` column (the
+    query block ships inside the kernel; only scored rows shuffle).
+    Returns the executed plan."""
+    payloads = _exchange_payloads(
+        _formatted_plan(spark, sf_dir, name, **kw), skip_round_robin=True
+    )
+    assert payloads, f"{name}: no exchanges found — plan parse failed?"
+    for p in payloads:
+        assert "embedding#" not in p, f"{name}: exchange carries embedding: {p}"
+    plan = _plan(spark, sf_dir, name, **kw)
     assert "CartesianProduct" not in plan, plan
+    return plan
+
+
+def test_rk01_retrievers_broadcast_the_query_block(spark, sf_dir):
+    """Rank fusion's scale contract: the lexical leg broadcasts the
+    bounded query block over one documents scan (its one BNLJ), the
+    semantic leg scores on the Arrow scaffold (no nested loop, the
+    embedding column never shuffles), and only the depth-bounded rank
+    lists meet in the fusion join."""
+    plan = _assert_embedding_never_moves(spark, sf_dir, "rk01_rank_fusion")
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
 
 
 def test_vc01_serial_window_sees_only_distinct_tf(spark, sf_dir):
@@ -743,16 +762,16 @@ def test_tp02_exclusion_is_not_hint_forced(spark, sf_dir):
     """Hard-negative mining's scale contract: the dd02 positive set is
     dup-rate-sized, so its exclusion anti-join must be a plain
     equi-anti on materialized (lo, hi) key columns with NO broadcast
-    hint (AQE decides from measured sizes); the only hint is the
-    bounded query block the scoring leg broadcasts, and nothing
-    degenerates to a CartesianProduct."""
+    hint (AQE decides from measured sizes); the scoring leg is the
+    Arrow scaffold, so the plan carries no hint at all, the embedding
+    column never shuffles and nothing degenerates to a
+    CartesianProduct."""
     df = REGISTRY["tp02_hard_negatives"].fn(spark, sf_dir)
     qe = df._jdf.queryExecution()
-    assert qe.analyzed().toString().count("ResolvedHint") == 1
-    plan = qe.executedPlan().toString()
+    assert qe.analyzed().toString().count("ResolvedHint") == 0
+    plan = _assert_embedding_never_moves(spark, sf_dir, "tp02_hard_negatives")
     assert "SortMergeJoin" in plan and "LeftAnti" in plan, plan
     assert "BroadcastNestedLoopJoin BuildRight, LeftAnti" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
 
 
 def test_co01_quadratic_is_basket_confined(spark, sf_dir):
@@ -771,22 +790,21 @@ def test_co01_quadratic_is_basket_confined(spark, sf_dir):
     assert "partial_count" in plan, plan
 
 
-def test_ivf_retrieval_legs_probe_instead_of_scan(spark, sf_dir):
-    """The production IVF legs' scale contract: candidate generation is
-    an equi-join on the small int cell id (the broadcast query block
-    explodes to its probed cells), NOT an all-pairs nested loop over
-    the corpus — tp02's ivf form has zero BNLJ nodes (the bf form has
-    one); rk01's ivf form keeps exactly the lexical leg's single BNLJ
-    (the bf form has two). The pair-set anti-join stays the unhinted
-    shuffled equi-anti."""
-    tp = REGISTRY["tp02_hard_negatives"].fn(spark, sf_dir, impl="ivf")
-    plan = tp._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "SortMergeJoin" in plan and "LeftAnti" in plan, plan
-    rk = REGISTRY["rk01_rank_fusion"].fn(spark, sf_dir, impl="ivf")
-    rplan = rk._jdf.queryExecution().executedPlan().toString()
-    assert rplan.count("BroadcastNestedLoopJoin") == 1, rplan
-    assert "CartesianProduct" not in rplan, rplan
+@pytest.mark.parametrize("impl", ["bf", "ivf"])
+def test_ivf_retrieval_legs_probe_instead_of_scan(spark, sf_dir, impl):
+    """Both forms of the tp02/rk01 retrieval legs share one scale
+    contract: candidate generation runs inside the Arrow scaffold (the
+    ivf form only adds the probe gate), so tp02 has no nested loop and
+    rk01 keeps exactly its lexical leg's single BNLJ; the embedding
+    column never shuffles and the pair-set anti-join stays the
+    unhinted shuffled equi-anti."""
+    tp = _assert_embedding_never_moves(
+        spark, sf_dir, "tp02_hard_negatives", impl=impl
+    )
+    assert "BroadcastNestedLoopJoin" not in tp, tp
+    assert "SortMergeJoin" in tp and "LeftAnti" in tp, tp
+    rk = _assert_embedding_never_moves(spark, sf_dir, "rk01_rank_fusion", impl=impl)
+    assert rk.count("BroadcastNestedLoopJoin") == 1, rk
 
 
 def test_cp03_history_feeds_only_the_bloom(spark, sf_dir):
@@ -1060,20 +1078,17 @@ def test_a17_funnel_stage_joins_are_not_hint_forced(spark, sf_dir):
 
 
 def test_rk02_eval_joins_stay_depth_bounded(spark, sf_dir):
-    """The eval harness's scale contract: the truth leg broadcasts the
-    bounded query block over one corpus scan (rk01's own shape — BNLJ
-    count grows by exactly one for the truth leg), the metric join
-    touches only depth-bounded lists, and no CartesianProduct
-    appears. The BNLJ count anchors to rk01's OWN plan (ADVICE r09: a
-    hard-coded literal breaks on any benign rk01 plan change or AQE
-    strategy shift without a real regression) — rk02 adds exactly one
-    nested-loop leg of its own, the exact-truth scan."""
+    """The eval harness's scale contract: the truth leg is rk01's own
+    semantic leg on the Arrow scaffold, so the composed plan has exactly
+    rk01's BNLJ count (the lexical leg's) and no nested loop of its
+    own, the embedding column never shuffles, the metric join touches
+    only depth-bounded lists, and no CartesianProduct appears. The
+    count anchors to rk01's OWN plan, so a benign rk01 plan change or
+    AQE strategy shift cannot break it without a real regression."""
     rk01_plan = _plan(spark, sf_dir, "rk01_rank_fusion")
-    df = REGISTRY["rk02_retrieval_eval"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
     n_base = rk01_plan.count("BroadcastNestedLoopJoin")
-    assert plan.count("BroadcastNestedLoopJoin") == n_base + 1, plan
-    assert "CartesianProduct" not in plan, plan
+    plan = _assert_embedding_never_moves(spark, sf_dir, "rk02_retrieval_eval")
+    assert plan.count("BroadcastNestedLoopJoin") == n_base, plan
 
 
 def test_mm04_payload_never_shuffles_and_shared_set_unhinted(spark, sf_dir):
@@ -1157,18 +1172,15 @@ def test_cp04_pipeline_prunes_tokens_from_every_exchange(spark, sf_dir):
 
 
 def test_rk03_ndcg_joins_stay_depth_bounded(spark, sf_dir):
-    """NDCG's scale contract mirrors rk02's: the graded-truth leg
-    broadcasts the bounded query block over one corpus scan, so the
-    composed plan adds exactly ONE nested-loop leg to rk01's own count
-    (anchored relative, never a literal — the ADVICE r09 rule); the
-    metric join and per-query fold touch only depth-bounded rows, and
-    no CartesianProduct appears."""
+    """NDCG's scale contract mirrors rk02's: the graded-truth leg runs
+    on the Arrow scaffold, so the composed plan has exactly rk01's BNLJ
+    count (anchored relative, never a literal), the embedding column
+    never shuffles, the metric join and per-query fold touch only
+    depth-bounded rows, and no CartesianProduct appears."""
     rk01_plan = _plan(spark, sf_dir, "rk01_rank_fusion")
-    df = REGISTRY["rk03_ndcg"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
     n_base = rk01_plan.count("BroadcastNestedLoopJoin")
-    assert plan.count("BroadcastNestedLoopJoin") == n_base + 1, plan
-    assert "CartesianProduct" not in plan, plan
+    plan = _assert_embedding_never_moves(spark, sf_dir, "rk03_ndcg")
+    assert plan.count("BroadcastNestedLoopJoin") == n_base, plan
 
 
 def test_mm05_payload_never_shuffles_and_adds_no_hints(spark, sf_dir):
@@ -1564,33 +1576,24 @@ def test_zo02_probe_join_is_broadcast(spark, sf_dir):
     )
 
 
-def test_ds13_mmr_shortlist_is_takeordered_pairwise_bounded(spark, sf_dir):
-    """MMR's distributed work is the relevance scan + TakeOrdered
-    shortlist; the greedy rounds live behind per-round localCheckpoint
-    cuts (the FINAL executed plan is the checkpoint-truncated
-    projection — asserted, since that truncation IS the linearity
-    guarantee the oracle gets from MATERIALIZED CTEs), so the scale
-    pins are source-level: the shortlist is an orderBy().limit(C)
-    (TakeOrdered, never a global sort materialization), and the only
-    broadcast hints are the bounded query block and the
-    a-priori-≤K-row selected set."""
-    plan = _plan(spark, sf_dir, "ds13_mmr_diverse_select")
-    assert "CartesianProduct" not in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "Scan ExistingRDD" in plan, plan  # the checkpoint cut
-    import inspect
-
-    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans import (
-        training_queries as tq,
-    )
-
-    src = inspect.getsource(tq.ds13_mmr_diverse_select)
-    assert ".limit(_DS13_C)" in src  # TakeOrdered shortlist
-    # bounded-side hints only: the one-row query block + two
-    # selected-set (<= K rows) join sides
-    assert src.count("F.broadcast(") == 3, src.count("F.broadcast(")
-    # every round cuts lineage like the oracle MATERIALIZEs its CTEs
-    assert src.count("localCheckpoint") >= 3
+def test_ds13_mmr_is_one_arrow_shortlist_and_a_driver_greedy(spark, sf_dir):
+    """MMR's distributed work is the query block, one Arrow shortlist
+    scan and one bounded fetch of the ≤C shortlisted vectors; the
+    K-round greedy runs on the driver. So the call takes a small fixed
+    number of jobs whatever K is, and the returned frame is a ≤K-row
+    local relation: no exchange, no join."""
+    sc = spark.sparkContext
+    sc.setJobGroup("ds13-jobs", "ds13 jobs per call")
+    try:
+        df = REGISTRY["ds13_mmr_diverse_select"].fn(spark, sf_dir)
+        assert len(df.collect()) == 8
+        jobs = len(sc.statusTracker().getJobIdsForGroup("ds13-jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs <= 8, jobs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "Join", "CartesianProduct"):
+        assert node not in plan, plan
 
 
 def test_ix02_serving_reads_postings_not_corpus(spark, sf_dir):

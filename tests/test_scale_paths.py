@@ -462,29 +462,50 @@ def test_star_contraction_converges_in_one_round_on_star_input(spark):
 
 
 @pytest.mark.parametrize(
-    "op_name",
+    "op_name, kw",
     [
-        "nn02_lsh_ann",
-        "nn03_ivf_ann",
-        "nn04_pq_adc",
-        "nn05_ivfpq",
-        "nn06_residual_ivfpq",
-        "nn07_opq_pq",
-        "dd10_semantic_dedup",
-        "dd11_hierarchical_semdedup",
+        pytest.param(n, {}, id=n)
+        for n in (
+            "nn02_lsh_ann",
+            "nn03_ivf_ann",
+            "nn04_pq_adc",
+            "nn05_ivfpq",
+            "nn06_residual_ivfpq",
+            "nn07_opq_pq",
+            "dd10_semantic_dedup",
+            "dd11_hierarchical_semdedup",
+            "rk02_retrieval_eval",
+        )
+    ]
+    + [
+        pytest.param(n, {"impl": i}, id=f"{n}-{i}")
+        for n in ("rk01_rank_fusion", "tp02_hard_negatives")
+        for i in ("bf", "ivf")
     ],
 )
-def test_arrow_paths_drop_malformed_embeddings(spark, sf_dir, tmp_path, op_name):
+def test_arrow_paths_drop_malformed_embeddings(
+    spark, sf_dir, tmp_path, op_name, kw
+):
     """NULL and wrong-dimension embedding rows must be dropped by the
     shared Arrow batch guards (like the oracles' nrm > 0 / fold-over-dim
     behavior), not crash np.stack or skew the codebook fit: no output
-    row of an ANN entry names them, and no SemDeDup verdict covers them."""
+    id of an entry on the scaffold names them, and no SemDeDup verdict
+    covers them. The other tables an entry reads sit next to the
+    patched embeddings."""
+    import os
+
     from pyspark.sql import functions as F
 
     from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans import (
         training_queries as tq,
     )
+    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.sources.readers import (
+        TESTDATA_TABLES,
+    )
 
+    for t in TESTDATA_TABLES:
+        if t != "embeddings":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     extras = emb.limit(1).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
@@ -499,9 +520,56 @@ def test_arrow_paths_drop_malformed_embeddings(spark, sf_dir, tmp_path, op_name)
     )
     emb.unionByName(extras).write.parquet(str(tmp_path / "embeddings.parquet"))
     fn = getattr(tq, op_name)
-    out = fn(spark, str(tmp_path)).collect()
+    out = fn(spark, str(tmp_path), **kw).collect()
     assert len(out) > 0
-    assert all(r.vec_id < 1_000_000 for r in out)
+    ids = [v for r in out for c, v in r.asDict().items() if c.endswith("_id")]
+    assert ids and all(v < 1_000_000 for v in ids)
+
+
+@pytest.mark.parametrize(
+    "corpus, n_rows",
+    [("zero_anchor", 0), ("null_anchor", 0), ("no_anchor", 0), ("five_rows", 4)],
+)
+def test_ds13_degenerate_anchors_match_oracle(spark, sf_dir, tmp_path, corpus, n_rows):
+    """ds13's driver-side greedy on degenerate corpora: a zero, NULL or
+    absent anchor (``vec_id == 0``) selects nothing, and a 5-row corpus
+    selects its 4 non-anchor rows — exactly the DuckDB oracle's rows."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from conftest import assert_frames_match
+    from hunting_scams_on_wallapop_a_data_pipeline_and_fraud_detection_challenge_spark.plans.training_queries import (
+        _ds13_sql,
+        ds13_mmr_diverse_select,
+    )
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet").sort_by("vec_id")
+    is_anchor = pc.equal(t["vec_id"], 0)
+    col = t.schema.get_field_index("embedding")
+    emb_type = t.schema.field("embedding").type
+    if corpus == "zero_anchor":
+        zero = pa.array([[0.0] * 64] * t.num_rows, emb_type)
+        t = t.set_column(col, "embedding", pc.if_else(is_anchor, zero, t["embedding"]))
+    elif corpus == "null_anchor":
+        null = pa.nulls(t.num_rows, emb_type)
+        t = t.set_column(col, "embedding", pc.if_else(is_anchor, null, t["embedding"]))
+    elif corpus == "no_anchor":
+        t = t.filter(pc.invert(is_anchor))
+    else:
+        t = t.slice(0, 5)
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    actual = ds13_mmr_diverse_select(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'embeddings.parquet'}')"
+    )
+    expected = con.execute(_ds13_sql()).fetchdf()
+    con.close()
+    assert len(expected) == n_rows
+    assert_frames_match(actual, expected, f"ds13/{corpus}")
 
 
 def test_labelprop_refuses_to_return_unconverged_clusters(spark):
